@@ -440,16 +440,34 @@ def _wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 UPSERT_MARKER = "ZZUPSERTMARKER"
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
+
+
 def _lifecycle_scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
     """Clone the cached sf index into a fresh scratch root for a
     mutating lifecycle query.  Pid-suffixed so concurrent harness
     processes on one host cannot rmtree each other's tree while a
-    lazily-evaluated result DataFrame is still reading it."""
+    lazily-evaluated result DataFrame is still reading it.  On entry,
+    the trees of processes that have since exited are removed: nothing
+    else would ever reclaim them."""
+    import glob
     import shutil
 
-    root = _engine_index(spark, sf_dir)
     tag = os.path.basename(os.path.normpath(sf_dir))
-    scratch = f"/tmp/sewiki_{kind}_{tag}_{os.getpid()}"
+    prefix = f"/tmp/sewiki_{kind}_{tag}_"
+    for old in glob.glob(glob.escape(prefix) + "*"):
+        pid = old[len(prefix):]
+        if pid.isdigit() and not _pid_alive(int(pid)):
+            shutil.rmtree(old, ignore_errors=True)
+    root = _engine_index(spark, sf_dir)
+    scratch = f"{prefix}{os.getpid()}"
     if os.path.exists(scratch):
         shutil.rmtree(scratch)
     shutil.copytree(root, scratch)

@@ -61,16 +61,10 @@ def main() -> None:
         # the timed number is STEADY-STATE throughput of the hot-set
         # serving path — the fetch is a one-time cost any long-running
         # server amortizes to zero.
-        from search_engine_wikipedia_spark.plans.query import (
-            parse_query, tree_terms,
-        )
-        keys = set()
-        for q in base:
-            tree, _ = parse_query(q, group=group, expand=False,
-                                  analyzers=idx.analyzers)
-            for t in tree_terms(tree) if tree is not None else []:
-                keys.add((t.field, t.text))
-        idx.fetch_postings(sorted(keys))
+        from search_engine_wikipedia_spark.plans.query import _parse_distinct
+
+        _, keys = _parse_distinct(idx, base, group, exp=False)
+        idx.fetch_postings(sorted(set().union(*keys.values())))
         t0 = time.perf_counter()
         res = search_many_broadcast(
             idx, queries, limit=args.limit, group=group

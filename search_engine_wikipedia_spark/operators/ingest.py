@@ -53,7 +53,6 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..sources import catalog
 from .build import (
-    N_TERM_BUCKETS,
     assign_doc_ids,
     build_segments,
     docs_from_pages,
@@ -703,10 +702,7 @@ def remerge(spark: SparkSession, root: str, shard_size: int = 1_000_000,
     seg = catalog.read_table(spark, root, "postings_seg")
     n_total = int(seg.agg(F.max("seg_id")).collect()[0][0]) + 1
     if n_term_buckets is None:
-        n_term_buckets = (
-            catalog.read_schema_meta(root).get("n_term_buckets")
-            or N_TERM_BUCKETS
-        )
+        n_term_buckets = catalog.n_term_buckets(root)
     if delta_seg is None and buckets is None:
         merge_postings_stage(spark, root, n_total, shard_size=shard_size,
                              n_term_buckets=n_term_buckets)
@@ -1086,10 +1082,7 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
             catalog.drop_table(root, "tombstones")
             return 0
         if n_term_buckets is None:
-            n_term_buckets = (
-                catalog.read_schema_meta(root).get("n_term_buckets")
-                or N_TERM_BUCKETS
-            )
+            n_term_buckets = catalog.n_term_buckets(root)
         import numpy as np
         import pyarrow.parquet as pq
 

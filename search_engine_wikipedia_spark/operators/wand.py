@@ -146,17 +146,14 @@ class PostingList:
             )
         return self._cache["all"]
 
-    def prepare(self, strip_blobs: bool = False) -> "PostingList":
+    def prepare(self) -> "PostingList":
         """Eagerly decode + memoize everything the serving kernel needs.
 
         The broadcast-serving plan (``search_many_broadcast``) calls
         this ON THE DRIVER before broadcasting: workers then unpickle
         ready numpy arrays instead of each VB-decoding the hot set —
         the per-worker warmup that capped query-batch scaling
-        efficiency.  ``strip_blobs`` additionally drops the encoded
-        blobs from the pickled payload (the decoded arrays fully serve
-        ``lookup``/``decode_selected_blocks`` via their fast paths),
-        roughly halving broadcast bytes.
+        efficiency.
         """
         self.block_meta()
         self.decode_all()
@@ -165,12 +162,6 @@ class PostingList:
                            dtype=np.int64)
             self._cache["shard_off"] = np.concatenate(
                 [[0], np.cumsum(dfs)])
-        if strip_blobs:
-            self.shards = [
-                {"shard_id": r["shard_id"], "df": r["df"],
-                 "term_df": r["term_df"]}
-                for r in self.shards
-            ]
         return self
 
     def decode_selected_blocks(self, global_block_ids: np.ndarray):

@@ -18,10 +18,26 @@ Re-derivation of the reference query lifecycle
    then a stable re-sort by final desc (``searcher.py:108-118,:123-142``,
    ``graph.py:178-211``).  NOTE the reference multiplies by the
    5-decimal-ROUNDED value from ``getRank(ids, 5)`` — reproduced here.
+
+One core, three transports.  Every serving plan runs the same steps:
+``_parse_distinct`` parses each distinct query text once into a
+picklable tree spec plus its ``(field, term)`` posting keys,
+``SearchIndex.postings_scan`` prunes the postings scan to those keys'
+tbucket partitions and term/field values, ``_topk`` rebuilds the tree,
+binds its postings and runs the block-max kernel, and ``blend_pagerank``
+is the one PageRank blend.  The plans differ only in how postings reach
+the kernel:
+
+* ``WikiSearcher.search`` — driver fetch into the reader's term cache;
+* ``search_many_broadcast`` / ``serving_partition_stats`` — one
+  broadcast posting cache shared by every task (``_broadcast_runner``);
+* ``search_batch`` — a shuffle join of the postings against the query
+  fan-out, for query floods and terms too hot for the driver.
 """
 
 from __future__ import annotations
 
+import os
 import time
 from dataclasses import dataclass
 from typing import Any as _tAny
@@ -268,6 +284,7 @@ class SearchIndex:
             "text": ANALYZERS[meta["text_analyzer"]],
             "title": ANALYZERS[meta["title_analyzer"]],
         }
+        self.n_term_buckets = catalog.n_term_buckets(index_dir)
         self.postings = catalog.read_table(spark, index_dir, "postings")
         fs = catalog.read_table(spark, index_dir, "field_stats").collect()
         n_docs = int(fs[0]["doc_count"])
@@ -283,51 +300,33 @@ class SearchIndex:
         self._pagerank = None
         self._docs = None
         self._tombstones: "np.ndarray | None" = None
-        # the bucket MODULUS comes from the recorded schema metadata;
-        # counting tbucket= dirs (the legacy fallback) under-estimates
-        # it when a sparse vocabulary leaves top buckets empty, which
-        # would prune the wrong partitions
-        self.n_term_buckets = (
-            meta.get("n_term_buckets") or self._detect_buckets()
-        )
-
-    def _detect_buckets(self) -> int:  # legacy indexes without metadata
-        import os
-        root = catalog.table_path(self.index_dir, "postings")
-        return max(
-            (int(d.split("=")[1]) for d in os.listdir(root)
-             if d.startswith("tbucket=")),
-            default=0,
-        ) + 1
 
     # -- postings fetch ------------------------------------------------------
-    def fetch_postings(self, keys: list[tuple[str, str]]) -> dict:
-        """(field, term) → PostingList, one pruned parquet scan.
+    def postings_scan(self, keys) -> DataFrame:
+        """The postings table pruned to ``keys`` ((field, term) pairs):
+        the tbucket partitions of their terms, then their term/field
+        values — all reach the parquet reader as partition / pushed
+        filters.  Buckets are computed driver-side (functions/hashing.py
+        XXH64 parity with F.xxhash64); a throwaway Spark job here would
+        add a scheduling round-trip per search."""
+        terms = sorted({t for _, t in keys})
+        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
+        return self.postings.where(
+            F.col("tbucket").isin(buckets) & F.col("term").isin(terms)
+            & F.col("field").isin(sorted({f for f, _ in keys}))
+        )
 
-        Partition pruning: the scan is filtered to the xxhash-buckets of
-        the requested terms, then to the term/field values (both reach
-        the parquet reader as pushed filters).
-        """
+    def fetch_postings(self, keys: list[tuple[str, str]]) -> dict:
+        """(field, term) → PostingList, one pruned parquet scan."""
         missing = [k for k in keys
                    if self._term_cache is None or k not in self._term_cache]
         out = {}
         if missing:
-            terms = sorted({t for _, t in missing})
-            fields = sorted({f for f, _ in missing})
-            cond = F.col("term").isin(terms) & F.col("field").isin(fields)
-            if self.n_term_buckets:
-                # buckets computed driver-side (functions/hashing.py
-                # XXH64 parity with F.xxhash64) — a throwaway Spark job
-                # here would add a scheduling round-trip per search
-                buckets = sorted(
-                    {term_bucket(t, self.n_term_buckets) for t in terms}
-                )
-                cond = F.col("tbucket").isin(buckets) & cond
+            scan = self.postings_scan(missing)
             if self.max_postings_per_term is not None:
                 # column-pruned pre-check: reads term_df only, no blobs
                 heavy = (
-                    self.postings.where(cond)
-                    .select("field", "term", "term_df").distinct()
+                    scan.select("field", "term", "term_df").distinct()
                     .where(F.col("term_df") > self.max_postings_per_term)
                     .collect()
                 )
@@ -340,7 +339,7 @@ class SearchIndex:
                         "through the distributed search_batch plan instead "
                         "of the driver posting cache"
                     )
-            rows = self.postings.where(cond).select(*POSTING_COLS).collect()
+            rows = scan.select(*POSTING_COLS).collect()
             grouped: dict = {}
             for r in rows:
                 grouped.setdefault((r["field"], r["term"]), []).append(r)
@@ -353,12 +352,6 @@ class SearchIndex:
             for k in keys:
                 out[k] = self._term_cache[k]
         return out
-
-    def bind(self, tree) -> None:
-        terms = [t for t in tree_terms(tree) if t.field in ("text", "title")]
-        plists = self.fetch_postings([(t.field, t.text) for t in terms])
-        for t in terms:
-            t.plist = plists[(t.field, t.text)]
 
     def expand_pattern(self, field: str, pattern: str,
                        cap: int = qsyntax.MAX_PATTERN_TERMS) -> list[str]:
@@ -437,7 +430,6 @@ class SearchIndex:
     def pagerank_for(self, doc_ids: list[int]) -> dict[int, float]:
         if self._pagerank is None:
             path = catalog.table_path(self.index_dir, "pagerank")
-            import os
             if not os.path.exists(path):
                 return {}
             self._pagerank = catalog.read_table(
@@ -522,10 +514,10 @@ class WikiSearcher:
         if tree is None:
             return {"time_second": 0.0, "expanded": exp_tokens if exp else [],
                     "n_res": 0, "docs": []}
-        self.index.bind(tree)
-        scorer = Scorer(self.index.stats, model=weighting,
-                        exclude=self.index.tombstones)
-        doc_ids, scores, n_res = scorer.topk(tree, limit)
+        plists = self.index.fetch_postings(sorted(_posting_keys(tree)))
+        doc_ids, scores, n_res = _topk(
+            _tree_spec(tree), plists.get, self.index.stats, weighting,
+            self.index.tombstones, limit)
         runtime = time.perf_counter() - t0
 
         pr_map = self.index.pagerank_for(doc_ids.tolist()) if page_rank else {}
@@ -741,6 +733,68 @@ def make_highlight(clean_text: str, stemmed_terms: list[str],
 
 
 # ---------------------------------------------------------------------------
+# The query core every serving plan shares
+# ---------------------------------------------------------------------------
+RESULT_SCHEMA = (
+    "query_id int, query string, rank int, doc_id long, score double, "
+    "n_res long"
+)
+
+
+def _posting_keys(tree) -> set:
+    """(field, term) keys of the tree's postings-backed leaves (an
+    ``id_page`` leaf has no postings and binds to nothing)."""
+    return {(t.field, t.text) for t in tree_terms(tree)
+            if t.field in ("text", "title")}
+
+
+def _parse_distinct(index: SearchIndex, queries: list[str], group: str,
+                    exp: bool) -> tuple[dict, dict]:
+    """Parse each DISTINCT query text once, with one Expander for the
+    whole list (serving workloads repeat queries; re-parsing per
+    occurrence is pure driver-side cost) → ({text: picklable tree
+    spec}, {text: set of (field, term) posting keys})."""
+    expander = expansion_mod.Expander()
+    specs, keys = {}, {}
+    for q in dict.fromkeys(queries):
+        tree, _ = parse_query(q, group=group, expand=exp, expander=expander,
+                              analyzers=index.analyzers, index=index)
+        specs[q] = _tree_spec(tree)
+        keys[q] = _posting_keys(tree)
+    return specs, keys
+
+
+def _topk(spec, lookup, stats: GlobalStats, weighting: str,
+          exclude: np.ndarray, limit: int):
+    """The one kernel call: rebuild the tree from its spec, bind each
+    leaf to ``lookup((field, term))`` (a PostingList or None) and run
+    the block-max top-k → (doc_ids, scores, n_res)."""
+    tree = _tree_from_spec(spec)
+    for t in tree_terms(tree):
+        t.plist = lookup((t.field, t.text))
+    return Scorer(stats, model=weighting, exclude=exclude).topk(tree, limit)
+
+
+def _blend_query(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One query's top-k rows plus their nullable ``pr`` → the rows
+    blended by ``blend_pagerank`` in rank order, with ``final_score``,
+    ``mult`` (1.0 for a doc without a rank) and ``final_rank``."""
+    pdf = pdf.sort_values("rank", ignore_index=True)
+    doc_ids = pdf["doc_id"].to_numpy()
+    pr_map = {int(d): float(p) for d, p in zip(doc_ids, pdf["pr"])
+              if pd.notna(p)}
+    order, final, mult_map = blend_pagerank(
+        doc_ids, pdf["score"].to_numpy(), pr_map)
+    final_rank = np.empty(len(pdf), dtype=np.int32)
+    final_rank[order] = np.arange(1, len(pdf) + 1, dtype=np.int32)
+    return pdf.drop(columns="pr").assign(
+        final_score=final,
+        mult=[mult_map.get(int(d), 1.0) for d in doc_ids],
+        final_rank=final_rank,
+    )
+
+
+# ---------------------------------------------------------------------------
 # Batched query evaluation — one distributed job for a query set
 # ---------------------------------------------------------------------------
 def search_batch(
@@ -754,74 +808,44 @@ def search_batch(
 ) -> DataFrame:
     """Evaluate many queries in ONE Spark job (the scalable path).
 
-    Plan: build each query's tree on the driver (tiny), ship the
+    Plan: parse each distinct text on the driver (tiny), ship the
     (query, field, term) fan-out as a DataFrame, join it against the
-    term-partitioned postings (broadcast the fan-out side — it is a few
+    pruned postings scan (broadcast the fan-out side — it is a few
     hundred rows), then ``groupBy(query_id).applyInPandas`` runs the
     same block-max kernel per query with only that query's postings.
-    Returns (query_id, query, rank, doc_id, score, final_score).
+    Returns (query_id, query, rank, doc_id, score, n_res, final_score),
+    plus (mult, final_rank) with ``page_rank``.
     """
     spark = index.spark
-    trees = {}
-    fanout_rows = []
-    for qid, q in enumerate(queries):
-        tree, _ = parse_query(q, group=group, expand=exp,
-                              analyzers=index.analyzers, index=index)
-        trees[qid] = (q, tree)
-        for t in tree_terms(tree) if tree is not None else []:
-            fanout_rows.append((qid, t.field, t.text))
+    specs, keys = _parse_distinct(index, queries, group, exp)
     fan = spark.createDataFrame(
-        fanout_rows, "query_id int, field string, term string"
+        [(qid, f, t) for qid, q in enumerate(queries) for f, t in keys[q]],
+        "query_id int, field string, term string",
     )
     # scan pruning: a broadcast join does NOT push the probe-side term
-    # values into the parquet reader, so without the explicit isin()
-    # filters the join scans the ENTIRE postings table per batch.  The
-    # batch vocabulary is known on the driver — push it as (tbucket
-    # partition pruning + term/field row-group filters), same as the
-    # interactive fetch_postings path; the scan then touches only the
-    # matched terms' buckets.
-    postings = index.postings
-    all_terms = sorted({t for _, _, t in fanout_rows})
-    all_fields = sorted({f for _, f, _ in fanout_rows})
-    if fanout_rows:
-        cond = (F.col("term").isin(all_terms)
-                & F.col("field").isin(all_fields))
-        if index.n_term_buckets:
-            buckets = sorted(
-                {term_bucket(t, index.n_term_buckets) for t in all_terms}
-            )
-            cond = F.col("tbucket").isin(buckets) & cond
-        postings = postings.where(cond)
-    joined = postings.join(
+    # values into the parquet reader, so the join reads the batch
+    # vocabulary's pruned scan, not the ENTIRE postings table
+    joined = index.postings_scan(set().union(*keys.values())).join(
         F.broadcast(fan), ["field", "term"], "inner"
     ).select("query_id", *POSTING_COLS)
 
     stats = index.stats
     trees_b = spark.sparkContext.broadcast(
-        {qid: (q, _tree_spec(tree)) for qid, (q, tree) in trees.items()}
+        {qid: (q, specs[q]) for qid, q in enumerate(queries)}
     )
     # tombstones ride one broadcast to every kernel task (tiny between
     # compactions; compact() empties the table)
     tomb_b = spark.sparkContext.broadcast(index.tombstones)
 
-    out_schema = (
-        "query_id int, query string, rank int, doc_id long, "
-        "score double, n_res long"
-    )
-
     def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iat[0])
         q, spec = trees_b.value[qid]
-        tree = _tree_from_spec(spec)
         rows_by_key: dict = {}
         for r in pdf.to_dict("records"):
             rows_by_key.setdefault((r["field"], r["term"]), []).append(r)
-        for t in tree_terms(tree):
-            t.plist = PostingList.from_rows(
-                t.field, t.text, rows_by_key.get((t.field, t.text), [])
-            )
-        scorer = Scorer(stats, model=weighting, exclude=tomb_b.value)
-        doc_ids, scores, n_res = scorer.topk(tree, limit)
+        doc_ids, scores, n_res = _topk(
+            spec, lambda k: PostingList.from_rows(*k, rows_by_key.get(k, [])),
+            stats, weighting, tomb_b.value, limit)
         return pd.DataFrame({
             "query_id": qid,
             "query": q,
@@ -842,22 +866,12 @@ def search_batch(
                                 spark.sparkContext.defaultParallelism))
     results = (
         joined.repartition(n_kernel_parts, "query_id")
-        .groupBy("query_id").applyInPandas(run_query, schema=out_schema)
+        .groupBy("query_id").applyInPandas(run_query, schema=RESULT_SCHEMA)
     )
 
     if not page_rank:
         return results.withColumn("final_score", F.col("score"))
 
-    # blend: broadcast-join the k·|Q| result rows with pagerank, window
-    # max over each query's candidates, rounded multiplier, re-rank.
-    import os
-    pr_path = catalog.table_path(index.index_dir, "pagerank")
-    if not os.path.exists(pr_path):
-        return results.withColumn("final_score", F.col("score"))
-    pr = catalog.read_table(spark, index.index_dir, "pagerank")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id")
     # Two-step lookup so the corpus-sized pagerank table is never
     # broadcast (one row per document — OOM at 10^12 docs) and never
     # shuffled: (1) inner-join pr against the tiny k·|Q| candidate-id
@@ -881,31 +895,20 @@ def search_batch(
     # the batch instead of recomputing — acceptable for a retryable
     # serving query, where the alternative (persist) leaks storage
     # across a long-lived session.
-    results = results.localCheckpoint()
-    pr_hits = pr.join(
-        F.broadcast(results.select("doc_id").distinct()), "doc_id")
-    blended = (
-        results.join(F.broadcast(pr_hits), "doc_id", "left")
-        .withColumn("max_rel", F.max("pr").over(w))
-        .withColumn(
-            "mult",
-            F.when(
-                F.col("pr").isNotNull(),
-                F.round(
-                    F.lit(1.0) + F.pow(F.col("pr") / F.col("max_rel"),
-                                       F.lit(float(PR_ALPHA))),
-                    PR_ROUND,
-                ),
-            ).otherwise(F.lit(1.0)),
-        )
-        .withColumn("final_score", F.col("score") * F.col("mult"))
-    )
-    w2 = W.partitionBy("query_id").orderBy(
-        F.desc("final_score"), F.asc("rank")
-    )
-    return (
-        blended.withColumn("final_rank", F.row_number().over(w2))
-        .drop("pr", "max_rel")
+    if os.path.exists(catalog.table_path(index.index_dir, "pagerank")):
+        results = results.localCheckpoint()
+        pr = catalog.read_table(spark, index.index_dir, "pagerank")
+        pr_hits = pr.join(
+            F.broadcast(results.select("doc_id").distinct()), "doc_id")
+        results = results.join(F.broadcast(pr_hits), "doc_id", "left")
+    else:
+        # no pagerank table: the same blend over an empty PR map, so
+        # the output schema never depends on the index
+        results = results.withColumn("pr", F.lit(None).cast("double"))
+    return results.groupBy("query_id").applyInPandas(
+        _blend_query,
+        schema=RESULT_SCHEMA + ", final_score double, mult double, "
+        "final_rank int",
     )
 
 
@@ -1098,6 +1101,52 @@ def search_batch_relational(
     )
 
 
+# ---------------------------------------------------------------------------
+# Broadcast posting-cache serving
+# ---------------------------------------------------------------------------
+def _broadcast_runner(index: SearchIndex, queries: list[str], limit: int,
+                      group: str, weighting: str, slices_per_core: int,
+                      exp: bool):
+    """The broadcast serving plan as an RDD with one element per task
+    partition: ``(partition_id, n_queries, kernel_sec, rows)``, each
+    row ``(query_id, query, rank, doc_id, score, n_res)``.
+
+    The whole query set's postings come from ONE pruned scan and are
+    pre-decoded on the driver (``PostingList.prepare``), so every
+    executor worker unpickles ready numpy arrays instead of re-running
+    the VB decode per process, and per-query lookups skip block
+    decoding entirely."""
+    sc = index.spark.sparkContext
+    specs, keys = _parse_distinct(index, queries, group, exp)
+    plists = index.fetch_postings(sorted(set().union(*keys.values())))
+    for pl in plists.values():
+        if pl is not None:
+            pl.prepare()
+    b_plists = sc.broadcast(plists)
+    b_specs = sc.broadcast(specs)
+    b_tomb = sc.broadcast(index.tombstones)
+    stats = index.stats
+
+    def run(pid, items):
+        t0 = time.perf_counter()
+        n, rows = 0, []
+        for qid, q in items:
+            spec = b_specs.value[q]
+            if spec is None:
+                continue
+            doc_ids, scores, n_res = _topk(
+                spec, b_plists.value.get, stats, weighting, b_tomb.value,
+                limit)
+            n += 1
+            rows.extend((qid, q, r, int(d), float(s), int(n_res))
+                        for r, (d, s) in enumerate(zip(doc_ids, scores), 1))
+        yield pid, n, time.perf_counter() - t0, rows
+
+    n_slices = max(1, slices_per_core * sc.defaultParallelism)
+    return (sc.parallelize(list(enumerate(queries)), numSlices=n_slices)
+            .mapPartitionsWithIndex(run))
+
+
 def search_many_broadcast(
     index: SearchIndex,
     queries: list[str],
@@ -1114,67 +1163,11 @@ def search_many_broadcast(
     copy of every matched posting blob PER QUERY through the shuffle,
     while here each executor receives the distinct blobs exactly once
     (torrent broadcast) and queries parallelize as cheap tasks over
-    them.  Falls back to ``search_batch`` semantics — results are
-    rank-identical.
+    them.  Rank-identical to ``search_batch(page_rank=False)``.
     """
-    spark = index.spark
-    # parse each DISTINCT query text once (serving workloads repeat
-    # queries; re-parsing per occurrence is pure driver-side constant
-    # cost inside the timed region)
-    specs: dict[str, tuple] = {}
-    keys = set()
-    for q in queries:
-        if q in specs:
-            continue
-        tree, _ = parse_query(q, group=group, expand=exp,
-                              analyzers=index.analyzers, index=index)
-        specs[q] = _tree_spec(tree)
-        for t in tree_terms(tree) if tree is not None else []:
-            keys.add((t.field, t.text))
-    trees = {qid: (q, specs[q]) for qid, q in enumerate(queries)}
-    plists = index.fetch_postings(sorted(keys))  # ONE pruned scan
-    # Pre-decode ONCE on the driver so every executor worker unpickles
-    # ready numpy arrays instead of re-running the VB decode per
-    # process (and so per-query lookups skip block decoding entirely).
-    # Blobs are kept when the index term cache shares these objects
-    # (strip only private copies).
-    for pl in plists.values():
-        if pl is not None:
-            pl.prepare()
-    b_plists = spark.sparkContext.broadcast(plists)
-    b_trees = spark.sparkContext.broadcast(trees)
-    b_tomb = spark.sparkContext.broadcast(index.tombstones)
-    stats = index.stats
-
-    n_slices = max(
-        1, slices_per_core * spark.sparkContext.defaultParallelism
-    )
-
-    def run(qids):
-        out = []
-        for qid in qids:
-            q, spec = b_trees.value[qid]
-            tree = _tree_from_spec(spec)
-            if tree is None:
-                continue
-            for t in tree_terms(tree):
-                t.plist = b_plists.value[(t.field, t.text)]
-            scorer = Scorer(stats, model=weighting, exclude=b_tomb.value)
-            doc_ids, scores, n_res = scorer.topk(tree, limit)
-            for r, (d, s) in enumerate(zip(doc_ids, scores), 1):
-                out.append((qid, q, r, int(d), float(s), int(n_res)))
-        return out
-
-    rows = (
-        spark.sparkContext
-        .parallelize(list(trees), numSlices=n_slices)
-        .mapPartitions(run)
-    )
-    return spark.createDataFrame(
-        rows,
-        "query_id int, query string, rank int, doc_id long, "
-        "score double, n_res long",
-    )
+    rows = _broadcast_runner(index, queries, limit, group, weighting,
+                             slices_per_core, exp).flatMap(lambda p: p[3])
+    return index.spark.createDataFrame(rows, RESULT_SCHEMA)
 
 
 def serving_partition_stats(
@@ -1187,66 +1180,19 @@ def serving_partition_stats(
     exp: bool = False,
 ) -> list[dict]:
     """Per-PARTITION serving metrics: run the broadcast serving plan
-    (same kernels, same slicing as ``search_many_broadcast``) and
-    return one row per task partition — ``partition_id``, queries
+    and return one row per task partition — ``partition_id``, queries
     evaluated, kernel seconds, queries/sec.  The north rule's
     "queries/sec served emitted per partition": a skewed slice (one
     pathological query dominating a task) shows up here as a
     queries_per_sec outlier, the serving twin of
     ``metrics.skew_report``.  Driver-side list — bounded by task count.
     """
-    import time as _time
-
-    spark = index.spark
-    specs: dict[str, tuple] = {}
-    keys = set()
-    for q in queries:
-        if q in specs:
-            continue
-        tree, _ = parse_query(q, group=group, expand=exp,
-                              analyzers=index.analyzers, index=index)
-        specs[q] = _tree_spec(tree)
-        for t in tree_terms(tree) if tree is not None else []:
-            keys.add((t.field, t.text))
-    trees = {qid: (q, specs[q]) for qid, q in enumerate(queries)}
-    plists = index.fetch_postings(sorted(keys))
-    for pl in plists.values():
-        if pl is not None:
-            pl.prepare()
-    b_plists = spark.sparkContext.broadcast(plists)
-    b_trees = spark.sparkContext.broadcast(trees)
-    b_tomb = spark.sparkContext.broadcast(index.tombstones)
-    stats = index.stats
-    n_slices = max(
-        1, slices_per_core * spark.sparkContext.defaultParallelism
-    )
-
-    def run(pid, qids):
-        t0 = _time.perf_counter()
-        n = 0
-        for qid in qids:
-            q, spec = b_trees.value[qid]
-            tree = _tree_from_spec(spec)
-            if tree is None:
-                continue
-            for t in tree_terms(tree):
-                t.plist = b_plists.value[(t.field, t.text)]
-            scorer = Scorer(stats, model=weighting, exclude=b_tomb.value)
-            scorer.topk(tree, limit)
-            n += 1
-        sec = _time.perf_counter() - t0
-        yield (pid, n, sec)
-
-    rows = (
-        spark.sparkContext
-        .parallelize(list(trees), numSlices=n_slices)
-        .mapPartitionsWithIndex(run)
-        .collect()
-    )
+    parts = _broadcast_runner(index, queries, limit, group, weighting,
+                              slices_per_core, exp).map(lambda p: p[:3])
     return [
         {"partition_id": pid, "n_queries": n, "kernel_sec": round(sec, 4),
          "queries_per_sec": round(n / sec, 1) if sec > 0 else None}
-        for pid, n, sec in rows
+        for pid, n, sec in parts.collect()
     ]
 
 

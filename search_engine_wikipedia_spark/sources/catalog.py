@@ -200,6 +200,20 @@ def read_schema_meta_or_none(root: str) -> dict | None:
     return json.loads(p.read_text())
 
 
+def n_term_buckets(root: str) -> int:
+    """The tbucket modulus ``IndexBuilder.build`` recorded.  Never
+    guessed: counting ``tbucket=`` dirs under-estimates it when a sparse
+    vocabulary leaves the top buckets empty, and a wrong modulus prunes
+    (or rewrites) the wrong partitions."""
+    n = (read_schema_meta_or_none(root) or {}).get("n_term_buckets")
+    if not n:
+        raise ValueError(
+            f"index at {root} records no n_term_buckets in "
+            f"{SCHEMA_META_NAME}; rebuild it with IndexBuilder.build"
+        )
+    return int(n)
+
+
 def record_table_schema(root: str, name: str, schema) -> None:
     """Record a table's committed (column, type) list in the index's
     schema meta — the authoritative reference the append guard checks

@@ -200,6 +200,87 @@ def test_search_many_broadcast_rank_identical(spark, built_index):
     assert ka == kb
 
 
+def test_repeated_queries_rank_identical_per_repeat(spark, built_index):
+    """Both distributed plans parse each distinct text once and share
+    the tree across its repeats: every repeat of a text gets the same
+    (rank, doc_id, score) rows, and the two plans agree."""
+    from search_engine_wikipedia_spark.plans.query import (
+        SearchIndex, search_batch, search_many_broadcast,
+    )
+
+    root, _ = built_index
+    idx = SearchIndex(spark, root)
+    queries = ["Roman Empire", "DNA", "Roman Empire", "Maya", "DNA",
+               "Roman Empire"]
+    plans = {
+        "batch": search_batch(idx, queries, limit=10, exp=True,
+                              page_rank=False).collect(),
+        "bcast": search_many_broadcast(idx, queries, limit=10,
+                                       exp=True).collect(),
+    }
+    per_text = {}
+    for plan, rows in plans.items():
+        by_qid = {}
+        for r in rows:
+            by_qid.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], round(r["score"], 9)))
+        for qid, q in enumerate(queries):
+            got = sorted(by_qid.get(qid, []))
+            assert got, (plan, q)
+            per_text.setdefault(q, got)
+            assert got == per_text[q], (plan, qid, q)
+
+
+def test_search_batch_blend_schema_without_pagerank_table(
+        spark, built_index, tmp_path):
+    """``page_rank=True`` on an index with no pagerank table still
+    returns the blended columns: the blend runs over an empty PR map
+    (mult 1.0, final_score = score, final_rank = rank)."""
+    import shutil
+
+    from search_engine_wikipedia_spark.plans.query import (
+        SearchIndex, search_batch,
+    )
+    from search_engine_wikipedia_spark.sources import catalog
+
+    root, _ = built_index
+    copy = str(tmp_path / "no_pagerank")
+    shutil.copytree(root, copy)
+    shutil.rmtree(catalog.table_path(copy, "pagerank"))
+    idx = SearchIndex(spark, copy)
+    rows = search_batch(idx, ["Roman Empire", "DNA"], limit=10, exp=False,
+                        page_rank=True).collect()
+    assert rows
+    for r in rows:
+        assert r["mult"] == 1.0
+        assert r["final_score"] == r["score"]
+        assert r["final_rank"] == r["rank"]
+
+
+def test_index_without_bucket_count_is_refused(spark, built_index,
+                                               tmp_path):
+    """An index whose _SCHEMA.json records no ``n_term_buckets`` is
+    refused by the reader and by maintenance, not served with a guessed
+    bucket modulus."""
+    import shutil
+
+    from search_engine_wikipedia_spark.operators import ingest
+    from search_engine_wikipedia_spark.plans.query import SearchIndex
+    from search_engine_wikipedia_spark.sources import catalog
+
+    root, _ = built_index
+    copy = str(tmp_path / "no_buckets")
+    shutil.copytree(root, copy)
+    meta = catalog.read_schema_meta(copy)
+    del meta["n_term_buckets"]
+    catalog.write_schema_meta(copy, meta)
+    assert "n_term_buckets" not in catalog.read_schema_meta_or_none(copy)
+    with pytest.raises(ValueError, match="n_term_buckets"):
+        SearchIndex(spark, copy)
+    with pytest.raises(ValueError, match="n_term_buckets"):
+        ingest.remerge(spark, copy, delta_seg=0)
+
+
 def test_fetch_postings_size_guard(spark, built_index):
     """A capped SearchIndex refuses to collect a head term's postings
     into the driver and points at the distributed plan."""
