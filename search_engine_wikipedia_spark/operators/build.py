@@ -670,17 +670,12 @@ class IndexBuilder:
                 # append would then DUPLICATE their postings.  Dynamic
                 # overwrite replaces exactly the seg_id= dirs present in
                 # this batch's output, making segment re-runs idempotent.
-                prev_mode = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode", "static")
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "dynamic")
-                try:
-                    (seg_df.write.mode("overwrite")
-                        .partitionBy("seg_id")
-                        .parquet(catalog.table_path(root, "postings_seg")))
-                finally:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev_mode)
+                # The table commits once, after the LAST batch — a commit
+                # per batch would let is_complete resume a half-built
+                # postings_seg.
+                catalog.overwrite_partitions(
+                    seg_df, catalog.table_path(root, "postings_seg"),
+                    "seg_id")
                 rows = (
                     spark.read.parquet(catalog.table_path(root, "postings_seg"))
                     .where(F.col("seg_id").isin(batch))

@@ -1,48 +1,62 @@
-"""Incremental index ingest: append new pages to a built index.
+"""Index maintenance: append, upsert, delete, compact and optimize.
 
 The reference engine rebuilds its Whoosh index from scratch per dump
 (``indexing/index.py:87-153``); a continuous-crawl deployment instead
-appends. This module adds Lucene-NRT-style segment-level increments on
-top of ``IndexBuilder``'s catalog layout:
+appends, updates and deletes. This module adds Lucene-NRT-style
+segment-level increments on top of ``IndexBuilder``'s catalog layout:
 
 * new pages become NEW doc_ids (continuing after the current max) and
   ONE new segment (seg_id = current max + 1) — docs / term_freqs /
   doc_stats append; field_stats recompute from the (cheap) doc_stats
-  table; the new segment's postings encode exactly like a base
-  segment and land via dynamic partition overwrite + a lineage row,
-* the global ``postings`` table re-merges from all segments.  Because
-  delta segments hold strictly-higher doc ranges, the monotone-salt
-  invariant of ``merge_segments`` (seg_id ↑ ⇒ doc range ↑) holds with
-  ``n_segments = total segment count``, so head-term skew handling is
-  identical to a fresh build.  (A tiered merge that rewrites only
-  shards overlapping the delta is the production refinement; the
-  re-merge here is segment-parallel and touches no upstream stage.)
+  table; the new segment's postings encode exactly like a base segment,
+* the global ``postings`` table re-merges only the tbucket partitions
+  the delta touches.  Because delta segments hold strictly-higher doc
+  ranges, the monotone-salt invariant of ``merge_segments`` (seg_id ↑ ⇒
+  doc range ↑) holds with ``n_segments = total segment count``, so
+  head-term skew handling is identical to a fresh build,
+* deletes tombstone docs (Lucene live-docs semantics — survivor scores
+  unchanged); ``compact`` physically removes them, re-encoding only the
+  touched segments and re-merging only the touched tbuckets, after
+  which the index is statistically identical to a fresh build over the
+  survivors; ``optimize_segments`` coalesces delta segments.
 
-Scoring matches a from-scratch build over the union corpus exactly:
-df/cf/avgfl/N are global after the merge, so BM25 scores are equal —
-only doc_id ASSIGNMENT differs (arrival order vs global url rank),
-which affects nothing but tie-breaks among equal-scored docs
-(`tests/test_ingest.py` asserts score-level equivalence by url).
+Scoring after an append matches a from-scratch build over the union
+corpus exactly: df/cf/avgfl/N are global after the merge, so BM25
+scores are equal — only doc_id ASSIGNMENT differs (arrival order vs
+global url rank), which affects nothing but tie-breaks among
+equal-scored docs (`tests/test_ingest.py` asserts score-level
+equivalence by url).
 
-Deletes complete the lifecycle (``delete_urls`` / ``compact``):
-tombstoned docs stop matching every query path immediately while
-global stats keep counting them (Lucene live-docs semantics — survivor
-scores unchanged); ``compact`` physically removes them, re-encoding
-only the touched segments and re-merging only the touched tbucket
-partitions, after which the index is statistically identical to a
-fresh build over the survivors.
+Every mutation follows ONE write protocol:
+
+* **one entry wrapper** (``_maintenance``) around each public op:
+  refuse under a table catalog, take the exclusive writer lock, and —
+  for the outermost entry only — ``_settle`` the index;
+* **one settle order**: finish interrupted table swaps, roll back a
+  half-applied append/delete batch (``_INGEST.json``), then finish a
+  crashed compact (``_COMPACT.json``) and a crashed optimize
+  (``_OPTIMIZE.json``) from their journals.  Every journal records what
+  its replay needs (the append journal its ``shard_size``), so settling
+  takes no caller setting;
+* **two overwrite modes**, fixed per write: ``catalog.write_table``
+  replaces a whole table, ``catalog.overwrite_partitions`` replaces the
+  partitions present in the new data; neither reads nor sets the
+  session's ``partitionOverwriteMode``;
+* **one table swap** (``_replace_table``): write into a tmp dir,
+  commit, remove the old dir, rename; ``_finish_swaps`` closes the loss
+  window between the last two steps.
 
 ``stream_ingest`` runs the same append per micro-batch via
 ``writeStream.foreachBatch``.  Exactly-once per epoch comes from the
-append JOURNAL (``_INGEST.json``): every table append journals the
-pre-append file snapshot BEFORE its write job launches (write-ahead
-intent), and an orphaned journal — a crash at ANY point of a batch,
-including between a parquet job's commit and the journal bookkeeping —
-is rolled back on the next entry by deleting (current files − snapshot)
-before the batch re-applies, so a replay can neither duplicate postings
-nor (the subtler failure) silently no-op on documents whose postings
-never landed.  Appends are schema-guarded: a batch whose column
-names/types differ from the committed table fails before writing.
+append journal: every table append journals the pre-append file
+snapshot BEFORE its write job launches (write-ahead intent), and an
+orphaned journal — a crash at ANY point of a batch, including between
+a parquet job's commit and the journal bookkeeping — is rolled back on
+the next entry by deleting (current files − snapshot) before the batch
+re-applies, so a replay can neither duplicate postings nor (the subtler
+failure) silently no-op on documents whose postings never landed.
+Appends are schema-guarded: a batch whose column names/types differ
+from the committed table fails before writing.
 """
 
 from __future__ import annotations
@@ -102,8 +116,8 @@ def _refuse_under_catalog(spark: SparkSession, op: str) -> None:
 # process is broken when its pid is dead (same host) or its TTL
 # expired (the cross-host fallback) — crash recovery then proceeds via
 # the journals as usual.  Reentrant per process: maintenance ops call
-# each other (append → resume-pending compact → optimize), so only the
-# outermost entry acquires.
+# each other (upsert → delete + append, a settle → compact/optimize), so
+# only the outermost entry acquires.
 # ---------------------------------------------------------------------------
 _LOCK_NAME = "_MAINTENANCE.lock"
 _LOCK_TTL_SEC = 6 * 3600
@@ -177,17 +191,48 @@ def _maintenance_lock(root: str):
     return _cm()
 
 
-def _locked(fn):
-    """Wrap a maintenance entry point (signature ``(spark, root, ...)``)
-    in the exclusive writer lock."""
+def _maintenance(fn):
+    """Wrap a public maintenance op (signature ``(spark, root, ...)``):
+    refuse under a table catalog, take the writer lock, and — for the
+    outermost entry only — ``_settle`` the index before the body runs.
+    Nested entries (upsert → delete + append, a settle resuming a
+    compact) run their body alone: the outer entry already settled the
+    index and holds the lock."""
     import functools
+    import os
 
     @functools.wraps(fn)
     def wrapper(spark, root, *args, **kwargs):
+        _refuse_under_catalog(spark, fn.__name__)
+        outermost = os.path.realpath(root) not in _HELD_LOCKS
         with _maintenance_lock(root):
+            if outermost:
+                _settle(spark, root, fn.__name__)
             return fn(spark, root, *args, **kwargs)
 
     return wrapper
+
+
+def _settle(spark: SparkSession, root: str, op: str) -> None:
+    """Bring a crashed index back to a committed state, in one fixed
+    order: finish interrupted table swaps, roll back a half-applied
+    append/delete batch, then finish a crashed compact, then a crashed
+    optimize — except the one ``op`` is about to run, whose body
+    resumes its own journal.  The compact and optimize journals are
+    mutually exclusive: each op's entry settles the other before its
+    body writes its own."""
+    import os
+
+    _finish_swaps(root)
+    recover_incomplete(spark, root)
+    if op != "compact" and os.path.exists(
+            os.path.join(root, _COMPACT_JOURNAL)):
+        # filtered stats tables with stale postings: any tiered merge
+        # before the re-run would fold dead docs back in
+        compact(spark, root)
+    if op != "optimize_segments" and os.path.exists(
+            os.path.join(root, _OPTIMIZE_JOURNAL)):
+        optimize_segments(spark, root)
 
 
 # ---------------------------------------------------------------------------
@@ -213,16 +258,6 @@ def _journal_path(root: str) -> str:
     return os.path.join(root, _JOURNAL)
 
 
-def _write_journal(root: str, journal: dict) -> None:
-    import json
-    import os
-
-    tmp = _journal_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(journal, f)
-    os.replace(tmp, _journal_path(root))
-
-
 def _table_files(root: str, name: str) -> set[str]:
     from pathlib import Path
 
@@ -241,22 +276,20 @@ def _assert_append_schema(df: DataFrame, root: str, name: str) -> None:
     crash or not depending on which footer Spark samples for inference.
 
     Checks against the schema RECORDED at write time (``_SCHEMA.json``
-    table registry) when available: re-inferring from the directory can
-    itself be fooled by an already-poisoned mixed-type dir (inference
-    samples one footer, so it reports whichever type that file holds).
-    Inference remains the fallback for indexes from builds older than
-    the registry.
+    table registry), never a re-inference of the directory: inference
+    samples one footer, so an already-poisoned mixed-type dir reports
+    whichever type that file holds.  An existing table with no recorded
+    schema predates the registry and is refused.
     """
-    import os
-
     want = catalog.recorded_table_schema(root, name)
     if want is None:
-        path = catalog.table_path(root, name)
-        if not os.path.exists(path):
-            return
-        existing = df.sparkSession.read.parquet(path).schema
-        want = [(f.name, f.dataType.simpleString())
-                for f in existing.fields]
+        if not catalog.table_exists(root, name):
+            return  # this append creates the table
+        raise ValueError(
+            f"table {name!r} at {root} has no schema recorded in "
+            f"{catalog.SCHEMA_META_NAME}; rebuild the index with "
+            f"IndexBuilder.build"
+        )
     got = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
     if want != got:
         raise ValueError(
@@ -277,7 +310,7 @@ def _journaled_append(df: DataFrame, root: str, name: str,
     that have no postings."""
     _assert_append_schema(df, root, name)
     journal["before"][name] = sorted(_table_files(root, name))
-    _write_journal(root, journal)
+    catalog.write_json(_journal_path(root), journal)
     _append_table(df, root, name)
 
 
@@ -285,8 +318,11 @@ def recover_incomplete(spark: SparkSession, root: str,
                        shard_size: int = 1_000_000) -> bool:
     """Roll back a half-applied append (journal present): delete the
     files it added, drop its segment partition, and rebuild the derived
-    stages (field_stats, postings) from the surviving tables.  Returns
-    True when a rollback happened."""
+    stages (field_stats, postings) from the surviving tables.  The
+    postings re-merge uses the ``shard_size`` the crashed append
+    journaled, so the head-term shard layout is the one the index had;
+    ``shard_size`` only serves journals that record none.  Returns True
+    when a rollback happened."""
     import json
     import os
     import shutil
@@ -296,6 +332,7 @@ def recover_incomplete(spark: SparkSession, root: str,
         return False
     with open(jp) as f:
         journal = json.load(f)
+    shard_size = journal.get("shard_size", shard_size)
     for name, before in journal.get("before", {}).items():
         tbl = catalog.table_path(root, name)
         if not before:
@@ -334,7 +371,7 @@ def recover_incomplete(spark: SparkSession, root: str,
     return True
 
 
-@_locked
+@_maintenance
 def append_pages(
     spark: SparkSession,
     root: str,
@@ -350,15 +387,10 @@ def append_pages(
     would need doc tombstones, out of scope).
 
     Crash-safe: every append is journaled and a half-applied batch from
-    a previous crash is rolled back on entry (``recover_incomplete``),
-    so a foreachBatch epoch replay re-applies the batch in full instead
-    of silently no-opping on the already-appended docs.
+    a previous crash is rolled back on entry (``_settle``), so a
+    foreachBatch epoch replay re-applies the batch in full instead of
+    silently no-opping on the already-appended docs.
     """
-    _refuse_under_catalog(spark, "append_pages")
-    _finish_swaps(root)
-    _resume_pending_compact(spark, root, shard_size)
-    _resume_pending_optimize(spark, root)
-    recover_incomplete(spark, root, shard_size=shard_size)
     docs_tbl = catalog.read_table(spark, root, "docs")
     # footer stats: no Spark job for a driver-held scalar.  mx can
     # be None on a NON-empty table too (a writer with statistics
@@ -404,8 +436,9 @@ def append_pages(
             F.max("seg_id")).collect()[0][0]
     next_seg = int(seg_mx) + 1
 
-    journal: dict = {"seg_id": next_seg, "before": {}, "steps": []}
-    _write_journal(root, journal)
+    journal: dict = {"seg_id": next_seg, "shard_size": shard_size,
+                     "before": {}, "steps": []}
+    catalog.write_json(_journal_path(root), journal)
 
     _journaled_append(new_docs, root, "docs", journal)
     catalog.append_lineage(spark, root, [
@@ -433,30 +466,24 @@ def append_pages(
     ds_new = doc_stats_from_tf(new_docs, tf_delta)
     _journaled_append(ds_new, root, "doc_stats", journal)
     journal["steps"].append("field_stats")
-    _write_journal(root, journal)
+    catalog.write_json(_journal_path(root), journal)
     doc_stats = catalog.read_table(spark, root, "doc_stats")
     catalog.write_table(
         field_stats_from_doc_stats(doc_stats), root, "field_stats"
     )
 
     journal["steps"].append("postings_seg")
-    _write_journal(root, journal)
+    catalog.write_json(_journal_path(root), journal)
     seg_df = build_segments(tf_delta).repartition(1, "seg_id")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (seg_df.write.mode("overwrite").partitionBy("seg_id")
-         .parquet(catalog.table_path(root, "postings_seg")))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    catalog.overwrite_partitions(
+        seg_df, catalog.table_path(root, "postings_seg"), "seg_id")
     catalog.commit(catalog.table_path(root, "postings_seg"))
     catalog.append_lineage(spark, root, [
         {"stage": "postings_seg", "seg_id": next_seg, "n_docs": n_new}
     ])
 
     journal["steps"].append("remerge")
-    _write_journal(root, journal)
+    catalog.write_json(_journal_path(root), journal)
     remerge(spark, root, shard_size=shard_size,
             n_term_buckets=n_term_buckets, delta_seg=next_seg)
     import os
@@ -468,16 +495,7 @@ def append_pages(
 _OPTIMIZE_JOURNAL = "_OPTIMIZE.json"
 
 
-def _resume_pending_optimize(spark: SparkSession, root: str) -> None:
-    """Finish a crashed optimize before any other maintenance op: its
-    journaled mapping drives the remaining phases idempotently."""
-    import os
-
-    if os.path.exists(os.path.join(root, _OPTIMIZE_JOURNAL)):
-        optimize_segments(spark, root)
-
-
-@_locked
+@_maintenance
 def optimize_segments(spark: SparkSession, root: str,
                       max_segments: int = 8) -> int:
     """Coalesce delta segments — Lucene's forceMerge for this LSM.
@@ -506,17 +524,8 @@ def optimize_segments(spark: SparkSession, root: str,
     import json
     import math
     import os
-    import shutil
 
-    _refuse_under_catalog(spark, "optimize_segments")
-    _finish_swaps(root)
     jp = os.path.join(root, _OPTIMIZE_JOURNAL)
-    if not os.path.exists(jp):
-        # fresh run: settle any pending compact first.  Skipped on a
-        # resume — the journals are mutually exclusive by construction,
-        # and resuming must not re-enter the sibling op.
-        _resume_pending_compact(spark, root, 1_000_000)
-    recover_incomplete(spark, root)
     if os.path.exists(jp):
         with open(jp) as f:
             j = json.load(f)
@@ -554,11 +563,8 @@ def optimize_segments(spark: SparkSession, root: str,
         mapping = {s: gi for gi, grp in enumerate(groups) for s in grp}
         pre_max, post_max = segs[-1][0], len(groups) - 1
         post_n = post_max + 1
-        tmp = jp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"mapping": mapping, "pre_max": pre_max,
-                       "post_max": post_max}, f)
-        os.replace(tmp, jp)
+        catalog.write_json(jp, {"mapping": mapping, "pre_max": pre_max,
+                                "post_max": post_max})
 
     _, _, cur_max = catalog.footer_stats(root, "term_freqs", "seg_id")
     if cur_max is None:  # stats-less writer — same fallback as ingest
@@ -572,24 +578,14 @@ def optimize_segments(spark: SparkSession, root: str,
         tf = catalog.read_table(spark, root, "term_freqs")
         new_tf = tf.withColumn(
             "seg_id", m[F.col("seg_id")].cast("int"))
-        final = catalog.table_path(root, "term_freqs")
-        tmp_dir = final + ".__tmp"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        new_tf.write.mode("overwrite").parquet(tmp_dir)
-        catalog.commit(tmp_dir)
-        shutil.rmtree(final, ignore_errors=True)
-        os.rename(tmp_dir, final)
+        _replace_table(root, "term_freqs",
+                       lambda tmp: new_tf.write.parquet(tmp))
 
     # phase 2: re-encode segment postings from the renumbered table
     tf_new = catalog.read_table(spark, root, "term_freqs")
     seg_df = build_segments(tf_new).repartition(post_n, "seg_id")
-    seg_final = catalog.table_path(root, "postings_seg")
-    seg_tmp = seg_final + ".__tmp"
-    shutil.rmtree(seg_tmp, ignore_errors=True)
-    seg_df.write.mode("overwrite").partitionBy("seg_id").parquet(seg_tmp)
-    catalog.commit(seg_tmp)
-    shutil.rmtree(seg_final, ignore_errors=True)
-    os.rename(seg_tmp, seg_final)
+    _replace_table(root, "postings_seg",
+                   lambda tmp: seg_df.write.partitionBy("seg_id").parquet(tmp))
 
     catalog.append_lineage(spark, root, [{
         "stage": "optimize", "seg_id": post_n,
@@ -599,7 +595,7 @@ def optimize_segments(spark: SparkSession, root: str,
     return post_n
 
 
-@_locked
+@_maintenance
 def upsert_pages(spark: SparkSession, root: str, pages: DataFrame,
                  shard_size: int = 1_000_000,
                  n_term_buckets: int | None = None) -> tuple[int, int]:
@@ -631,16 +627,9 @@ def upsert_pages(spark: SparkSession, root: str, pages: DataFrame,
     its own cadence.  Crash-safe end-to-end: both steps journal, and a
     crash between them replays as (delete→0 marked) + append.
     """
-    # settle crashed state BEFORE the content comparison — the changed
-    # set must be computed against the recovered table, not against
-    # files a rollback is about to delete (the nested delete/append
-    # calls re-run these as cheap no-ops)
-    _refuse_under_catalog(spark, "upsert_pages")
-    _finish_swaps(root)
-    _resume_pending_compact(spark, root, shard_size)
-    _resume_pending_optimize(spark, root)
-    recover_incomplete(spark, root, shard_size=shard_size)
-
+    # the entry wrapper settled crashed state BEFORE this content
+    # comparison: the changed set is computed against the recovered
+    # table, not against files a rollback is about to delete
     incoming = docs_from_pages(pages).select(
         "url",
         F.xxhash64("title", "clean_text", F.to_json("links"))
@@ -742,14 +731,7 @@ def remerge(spark: SparkSession, root: str, shard_size: int = 1_000_000,
             shard_size=shard_size)
         merged = with_term_bucket(merged, n_term_buckets)
         merged = merged.repartition(len(live), "tbucket")
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (merged.write.mode("overwrite").partitionBy("tbucket")
-             .parquet(post_root))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        catalog.overwrite_partitions(merged, post_root, "tbucket")
     catalog.commit(post_root)
     catalog.append_lineage(spark, root, [{
         "stage": "postings_tiered",
@@ -764,27 +746,15 @@ def remerge(spark: SparkSession, root: str, shard_size: int = 1_000_000,
 _COMPACT_JOURNAL = "_COMPACT.json"
 
 
-def _resume_pending_compact(spark: SparkSession, root: str,
-                            shard_size: int) -> None:
-    """A crashed compact leaves filtered stats tables but stale
-    postings; any maintenance op entering before the re-run must finish
-    it first or its own tiered merge would fold dead docs back in."""
-    import os
-
-    if os.path.exists(os.path.join(root, _COMPACT_JOURNAL)):
-        compact(spark, root, shard_size=shard_size)
-
-
 def _finish_swaps(root: str) -> None:
     """Complete a table swap interrupted by a crash.
 
-    ``_selective_rewrite`` renames ``<name>.__tmp`` over ``<name>``; the
+    ``_replace_table`` renames ``<name>.__tmp`` over ``<name>``; the
     only loss window is after the old dir is removed and before the
-    rename.  At entry of every maintenance op: a complete ``__tmp``
+    rename.  At entry of every maintenance op: a committed ``__tmp``
     whose target is missing is renamed into place; any other ``__tmp``
     is a pre-swap leftover and is deleted (its target is intact, and
-    the still-present tombstones table makes the whole compact re-run
-    idempotently)."""
+    the op's journal re-runs the swap idempotently)."""
     import shutil
 
     from pathlib import Path
@@ -801,6 +771,25 @@ def _finish_swaps(root: str) -> None:
         shutil.rmtree(scr, ignore_errors=True)
 
 
+def _replace_table(root: str, name: str, fill) -> None:
+    """Replace table ``name`` wholesale — the one table swap.
+    ``fill(tmp)`` writes the new contents into the (cleared)
+    ``<name>.__tmp`` dir, which is committed, then swapped in: remove
+    the old dir, rename.  A crash before the removal leaves the old
+    table intact; one between removal and rename is completed by
+    ``_finish_swaps``."""
+    import os
+    import shutil
+
+    final = catalog.table_path(root, name)
+    tmp = final + ".__tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    fill(tmp)
+    catalog.commit(tmp)
+    shutil.rmtree(final, ignore_errors=True)
+    os.rename(tmp, final)
+
+
 def _affected_files(path: str, dead) -> tuple[list[str], list[str]]:
     """Split a flat table dir's parquet files into (affected,
     unaffected) by whether the file's ``doc_id`` footer min/max range
@@ -808,35 +797,14 @@ def _affected_files(path: str, dead) -> tuple[list[str], list[str]]:
     per file, no data pages.  A file without usable statistics is
     conservatively treated as affected."""
     import numpy as np
-    import pyarrow.parquet as pq
-
-    from pathlib import Path
 
     affected, unaffected = [], []
-    for f in sorted(Path(path).glob("*.parquet")):
-        pf = pq.ParquetFile(str(f))
-        try:
-            ci = pf.schema_arrow.names.index("doc_id")
-        except ValueError:
-            affected.append(str(f))
-            continue
-        mn = mx = None
-        ok = True
-        for g in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(g).column(ci).statistics
-            if st is None or not st.has_min_max:
-                ok = False
-                break
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-        if not ok or mn is None:
-            affected.append(str(f))
-            continue
-        i = int(np.searchsorted(dead, mn, side="left"))
-        if i < dead.size and dead[i] <= mx:
-            affected.append(str(f))
-        else:
-            unaffected.append(str(f))
+    for f, _, mn, mx in catalog.file_stats(path, "doc_id"):
+        hit = mn is None
+        if not hit:
+            i = int(np.searchsorted(dead, mn, side="left"))
+            hit = i < dead.size and dead[i] <= mx
+        (affected if hit else unaffected).append(f)
     return affected, unaffected
 
 
@@ -875,9 +843,9 @@ def _selective_rewrite(spark: SparkSession, root: str, name: str,
     are doc-ordered (build.py term_freqs note), so a contiguous
     recrawl/takedown batch touches a handful of files out of millions.
     Returns the number of files rewritten; zero means the table held no
-    dead rows and NO Spark job ran at all.  Crash-safe under the same
-    ``<name>.__tmp`` + rename protocol recovered by ``_finish_swaps``;
-    the Spark staging dir is ``<name>.__scratch``.
+    dead rows and NO Spark job ran at all.  Crash-safe: the links and
+    the survivors land through ``_replace_table``; the Spark staging dir
+    is ``<name>.__scratch``.
     The driver-held ``dead`` list feeds ONLY the footer min/max pruning
     (a numpy binary search, cheap at any realistic tombstone count);
     the row filter itself is an anti-join against ``dead_df`` so the
@@ -887,10 +855,11 @@ def _selective_rewrite(spark: SparkSession, root: str, name: str,
     """
     import os
     import shutil
+    import uuid
+    from pathlib import Path
 
     import numpy as np
-
-    from pathlib import Path
+    import pyarrow.parquet as pq
 
     final = catalog.table_path(root, name)
     if dead_df is None:
@@ -899,45 +868,35 @@ def _selective_rewrite(spark: SparkSession, root: str, name: str,
     affected, unaffected = _affected_files(final, dead)
     if not affected:
         return 0
-    tmp = final + ".__tmp"
     scratch = final + ".__scratch"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(scratch, ignore_errors=True)
-    os.makedirs(tmp)
-    for f in unaffected:
-        os.link(f, os.path.join(tmp, os.path.basename(f)))
-    (
-        _survivors(spark.read.parquet(*affected), dead_df)
-        .write.mode("overwrite").parquet(scratch)
-    )
-    import uuid
-
     run_id = uuid.uuid4().hex[:12]  # a rerun must not collide with a
     #                                 prior compact's surviving files
-    kept = 0
-    for i, f in enumerate(sorted(Path(scratch).glob("*.parquet"))):
-        import pyarrow.parquet as pq
 
-        if (unaffected
-                and pq.ParquetFile(str(f)).metadata.num_rows == 0):
-            continue  # drop empty parts unless they carry the schema
-        kept += 1
-        os.rename(str(f),
-                  os.path.join(tmp, f"compact-{run_id}-{i:05d}.parquet"))
-    if not unaffected and kept == 0:
-        # every row died: keep one empty part so the dir stays readable
-        for f in sorted(Path(scratch).glob("*.parquet"))[:1]:
+    def fill(tmp: str) -> None:
+        shutil.rmtree(scratch, ignore_errors=True)
+        os.makedirs(tmp)
+        for f in unaffected:
+            os.link(f, os.path.join(tmp, os.path.basename(f)))
+        (
+            _survivors(spark.read.parquet(*affected), dead_df)
+            .write.mode("overwrite").parquet(scratch)
+        )
+        parts = sorted(Path(scratch).glob("*.parquet"))
+        kept = [f for f in parts
+                if pq.ParquetFile(str(f)).metadata.num_rows > 0]
+        if not unaffected and not kept:
+            # every row died: keep one empty part so the dir stays readable
+            kept = parts[:1]
+        for i, f in enumerate(kept):
             os.rename(str(f),
-                      os.path.join(tmp,
-                                   f"compact-{run_id}-00000.parquet"))
-    shutil.rmtree(scratch, ignore_errors=True)
-    catalog.commit(tmp)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(tmp, final)
+                      os.path.join(tmp, f"compact-{run_id}-{i:05d}.parquet"))
+        shutil.rmtree(scratch, ignore_errors=True)
+
+    _replace_table(root, name, fill)
     return len(affected)
 
 
-@_locked
+@_maintenance
 def delete_urls(spark: SparkSession, root: str, urls) -> int:
     """Tombstone documents by url; returns how many were newly marked.
 
@@ -956,11 +915,6 @@ def delete_urls(spark: SparkSession, root: str, urls) -> int:
     """
     import os
 
-    _refuse_under_catalog(spark, "delete_urls")
-    _finish_swaps(root)
-    _resume_pending_compact(spark, root, 1_000_000)
-    _resume_pending_optimize(spark, root)
-    recover_incomplete(spark, root)
     docs_tbl = catalog.read_table(spark, root, "docs")
     if isinstance(urls, DataFrame):
         # A DataFrame victim feed (e.g. a takedown table, a recrawl
@@ -992,7 +946,7 @@ def delete_urls(spark: SparkSession, root: str, urls) -> int:
     return n
 
 
-@_locked
+@_maintenance
 def delete_where(spark: SparkSession, root: str, predicate) -> int:
     """Tombstone every live document whose ``docs`` row matches a
     predicate (a SQL string or a ``Column``) — the takedown shape real
@@ -1004,22 +958,17 @@ def delete_where(spark: SparkSession, root: str, predicate) -> int:
     the victim set stays distributed end-to-end, and all the
     tombstone-lifecycle guarantees (idempotence, journaling, lock,
     instant query-path exclusion, compact convergence) are inherited.
-    The recovery preamble runs BEFORE the docs read (the lock is
-    reentrant, so delete_urls' own preamble is then a no-op): a
-    DataFrame snapshots its file listing at read time, and listing a
-    crashed, not-yet-recovered table would pin files that recovery is
-    about to remove.
+    The entry wrapper settles the index BEFORE the docs read (the
+    nested delete_urls entry does not settle again): a DataFrame
+    snapshots its file listing at read time, and listing a crashed,
+    not-yet-recovered table would pin files that recovery is about to
+    remove.
     """
-    _refuse_under_catalog(spark, "delete_where")
-    _finish_swaps(root)
-    _resume_pending_compact(spark, root, 1_000_000)
-    _resume_pending_optimize(spark, root)
-    recover_incomplete(spark, root)
     docs = catalog.read_table(spark, root, "docs")
     return delete_urls(spark, root, docs.where(predicate).select("url"))
 
 
-@_locked
+@_maintenance
 def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
             n_term_buckets: int | None = None) -> int:
     """Physically remove tombstoned docs; returns the count removed.
@@ -1045,19 +994,13 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
     contains the dead docs) and leave postings stale — and the
     tombstones table is dropped last, so a crash anywhere re-runs the
     remaining steps on the next maintenance call; per-table swaps are
-    crash-safe via ``_finish_swaps``.
+    crash-safe via ``_replace_table``.
     """
     import json
     import os
     import shutil
 
-    _refuse_under_catalog(spark, "compact")
-    _finish_swaps(root)
     jp = os.path.join(root, _COMPACT_JOURNAL)
-    if not os.path.exists(jp):
-        # fresh run only — see the matching note in optimize_segments
-        _resume_pending_optimize(spark, root)
-    recover_incomplete(spark, root, shard_size=shard_size)
     if os.path.exists(jp):
         # resuming a crashed compact: every affected-set below was
         # computed against the PRE-rewrite tables — reuse it verbatim
@@ -1067,8 +1010,8 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
         affected_segs = j["segs"]
         affected_buckets = j["buckets"]
         n_term_buckets = j["n_term_buckets"]
-        # a resume entered from ANOTHER maintenance op (its default
-        # shard_size) must re-merge with the original run's setting
+        # a resume entered from ANOTHER maintenance op's settle must
+        # re-merge with the original run's setting
         shard_size = j.get("shard_size", shard_size)
     else:
         if not catalog.table_exists(root, "tombstones"):
@@ -1084,15 +1027,8 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
         if n_term_buckets is None:
             n_term_buckets = catalog.n_term_buckets(root)
         import numpy as np
-        import pyarrow.parquet as pq
 
-        from pathlib import Path
-
-        n_total = sum(
-            pq.ParquetFile(str(f)).metadata.num_rows
-            for f in Path(catalog.table_path(root, "docs"))
-            .glob("*.parquet")
-        )
+        n_total = catalog.footer_stats(root, "docs")[0]
         if n_total - len(dead) <= 0:
             raise ValueError(
                 "compact would delete the entire corpus; drop the "
@@ -1119,13 +1055,10 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
             affected_buckets = sorted(agg["buckets"])
         else:
             affected_segs, affected_buckets = [], []
-        tmp = jp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"dead": dead, "segs": affected_segs,
-                       "buckets": affected_buckets,
-                       "n_term_buckets": n_term_buckets,
-                       "shard_size": shard_size}, f)
-        os.replace(tmp, jp)
+        catalog.write_json(jp, {"dead": dead, "segs": affected_segs,
+                                "buckets": affected_buckets,
+                                "n_term_buckets": n_term_buckets,
+                                "shard_size": shard_size})
 
     # selective, footer-stats-driven rewrites: only the parquet files
     # whose doc_id range holds a dead doc are rewritten, the rest are
@@ -1160,16 +1093,7 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
         if live_segs:
             seg_df = build_segments(seg_rows).repartition(
                 max(1, len(live_segs)), "seg_id")
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (seg_df.write.mode("overwrite").partitionBy("seg_id")
-                 .parquet(seg_root))
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev)
+            catalog.overwrite_partitions(seg_df, seg_root, "seg_id")
         catalog.commit(seg_root)
         catalog.append_lineage(spark, root, [
             {"stage": "compact_seg", "seg_id": int(s), "n_docs": len(dead)}

@@ -1,4 +1,4 @@
-"""Table layer: atomic-ish parquet tables with manifests and resume.
+"""Table layer: parquet tables with commit manifests and resume.
 
 The reference's index "commit" is Whoosh's segment flush
 (``indexing/index.py:132-136``); open-or-build is
@@ -6,12 +6,20 @@ The reference's index "commit" is Whoosh's segment flush
 
 * every stage writes a parquet directory plus a ``_MANIFEST.json``
   written only AFTER the parquet job succeeds — the manifest is the
-  commit marker (write-then-rename would be the posix-atomic variant;
-  json-after-success is equivalent for our single-writer builds),
+  commit marker, written to a tmp file and renamed into place
+  (``write_json``, the one atomic JSON writer: manifests, the schema
+  meta and the maintenance journals all go through it),
+* two overwrite helpers, each with a FIXED per-write mode that never
+  reads or touches the session's ``partitionOverwriteMode``:
+  ``write_table`` replaces the whole table (static) and commits;
+  ``overwrite_partitions`` replaces only the partitions present in the
+  new data (dynamic) and leaves the commit to the caller,
 * ``is_complete``/``read`` implement open-or-build resume,
 * per-partition lineage rows (seg_id, n_docs, n_terms, bytes, checksum)
   are appended to a ``manifests`` parquet table — the north_rule's
-  per-partition lineage requirement.
+  per-partition lineage requirement,
+* ``file_stats`` is the one parquet footer walk (per-file row count and
+  column min/max) behind ``footer_stats`` and compaction's file pruning.
 
 On a real deployment this module is the seam where Iceberg slots in
 (``writeTo(...).createOrReplace()``, hidden ``bucket(term)``
@@ -88,13 +96,32 @@ def write_table(
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         writer.createOrReplace()
         return path
-    writer = df.write.mode(mode)
+    # static, whatever the session says: a full overwrite must not keep
+    # partitions the new data lacks
+    writer = df.write.mode(mode).option("partitionOverwriteMode", "static")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     commit(path, meta)
     record_table_schema(root, name, df.schema)
     return path
+
+
+def overwrite_partitions(df: DataFrame, path: str, col: str) -> None:
+    """Replace exactly the ``col=`` partitions present in ``df`` (dynamic
+    partition overwrite, set per write); every other partition's files
+    are untouched.  Does NOT commit: callers that write in several
+    batches commit once, after the last one."""
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(col).parquet(path))
+
+
+def write_json(path: str, obj: dict) -> None:
+    """Write ``obj`` as JSON atomically: tmp file, then rename."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)  # atomic on posix
 
 
 def commit(path: str, meta: dict | None = None) -> None:
@@ -111,9 +138,7 @@ def commit(path: str, meta: dict | None = None) -> None:
         ],
         **(meta or {}),
     }
-    tmp = p / (MANIFEST_NAME + ".tmp")
-    tmp.write_text(json.dumps(manifest, indent=1))
-    tmp.rename(p / MANIFEST_NAME)  # atomic on posix
+    write_json(str(p / MANIFEST_NAME), manifest)
 
 
 def manifest(root: str, name: str) -> dict | None:
@@ -178,10 +203,7 @@ SCHEMA_META_NAME = "_SCHEMA.json"
 
 def write_schema_meta(root: str, meta: dict) -> None:
     os.makedirs(root, exist_ok=True)
-    p = Path(root) / SCHEMA_META_NAME
-    tmp = Path(root) / (SCHEMA_META_NAME + ".tmp")
-    tmp.write_text(json.dumps(meta, indent=1))
-    tmp.rename(p)
+    write_json(os.path.join(root, SCHEMA_META_NAME), meta)
 
 
 def read_schema_meta(root: str) -> dict:
@@ -296,35 +318,47 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(table_path(root, "manifests"))
 
 
+def file_stats(path: str, col: str | None = None):
+    """Yield ``(file, n_rows, min, max)`` per parquet file under
+    ``path``, read from the file FOOTERS — no Spark job, no data pages.
+    min/max are None when ``col`` is None, the file lacks ``col``, or
+    any of its row groups lacks statistics."""
+    import pyarrow.parquet as pq
+
+    for f in sorted(Path(path).rglob("*.parquet")):
+        md = pq.ParquetFile(str(f)).metadata
+        mn = mx = None
+        leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+        if col is not None and col in leaves:
+            ci = leaves.index(col)
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(ci).statistics
+                if st is None or not st.has_min_max:
+                    mn = mx = None
+                    break
+                mn = st.min if mn is None else min(mn, st.min)
+                mx = st.max if mx is None else max(mx, st.max)
+        yield str(f), md.num_rows, mn, mx
+
+
 def footer_stats(root: str, name: str,
                  col: str | None = None) -> tuple[int, object, object]:
     """(num_rows, min, max) of a column across a parquet table's file
-    FOOTERS — no Spark job, no data pages.  min/max are None when
-    ``col`` is None or any row group lacks statistics.  Parquet-dir
-    path only: with an Iceberg catalog the caller should keep the
-    DataFrame agg (the manifest-based planner makes it metadata-only
-    there too)."""
-    import pyarrow.parquet as pq
-
+    footers (``file_stats``).  min/max are None when ``col`` is None or
+    any non-empty file lacks statistics.  Parquet-dir path only: with an
+    Iceberg catalog the caller should keep the DataFrame agg (the
+    manifest-based planner makes it metadata-only there too)."""
     n_rows, mn, mx = 0, None, None
     have_stats = col is not None
-    for f in sorted(Path(table_path(root, name)).rglob("*.parquet")):
-        pf = pq.ParquetFile(str(f))
-        n_rows += pf.metadata.num_rows
-        if not have_stats:
+    for _, n, fmn, fmx in file_stats(table_path(root, name), col):
+        n_rows += n
+        if not n:
             continue
-        try:
-            ci = pf.schema_arrow.names.index(col)
-        except ValueError:
+        if fmn is None:
             have_stats = False
-            continue
-        for g in range(pf.metadata.num_row_groups):
-            st = pf.metadata.row_group(g).column(ci).statistics
-            if st is None or not st.has_min_max:
-                have_stats = False
-                break
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
+        elif have_stats:
+            mn = fmn if mn is None else min(mn, fmn)
+            mx = fmx if mx is None else max(mx, fmx)
     if not have_stats:
         mn = mx = None
     return n_rows, mn, mx

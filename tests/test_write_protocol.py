@@ -1,0 +1,162 @@
+"""The maintenance write protocol: every public maintenance op settles a
+crashed append on entry, full overwrites replace every partition
+whatever the session's ``partitionOverwriteMode`` says, crash recovery
+re-merges with the shard size the crashed append used, and a table
+without a recorded schema is refused instead of re-inferred."""
+
+import json
+import os
+import shutil
+
+import pandas as pd
+import pytest
+
+from search_engine_wikipedia_spark import schemas
+from search_engine_wikipedia_spark.operators import ingest
+from search_engine_wikipedia_spark.operators.build import IndexBuilder
+from search_engine_wikipedia_spark.sources import catalog
+
+from tests.test_ingest import _term_stats_fingerprint
+
+SHARD = 200
+
+
+def _pages_df(spark, pages):
+    if not pages:
+        return spark.createDataFrame([], schema=schemas.PAGES)
+    return spark.createDataFrame(pd.DataFrame(pages), schema=schemas.PAGES)
+
+
+def _crash_once(monkeypatch, name):
+    """Make ``ingest.<name>`` raise on its first call only."""
+    orig = getattr(ingest, name)
+    calls = {"n": 0}
+
+    def dying(*a, **kw):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError(f"injected crash at {name}")
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(ingest, name, dying)
+
+
+@pytest.fixture(scope="module")
+def base_index(spark, corpus, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("protocol_base"))
+    IndexBuilder(spark, root, n_segments=4, shard_size=SHARD).build(
+        _pages_df(spark, corpus[:150]), resume=False)
+    return root
+
+
+def _copy(base, tmp_path, name):
+    root = str(tmp_path / name)
+    shutil.copytree(base, root)
+    return root
+
+
+_NOOP_OPS = {
+    "append_pages": lambda spark, root: ingest.append_pages(
+        spark, root, _pages_df(spark, []), shard_size=SHARD),
+    "upsert_pages": lambda spark, root: ingest.upsert_pages(
+        spark, root, _pages_df(spark, []), shard_size=SHARD),
+    "delete_urls": lambda spark, root: ingest.delete_urls(spark, root, []),
+    "delete_where": lambda spark, root: ingest.delete_where(
+        spark, root, "false"),
+    "compact": lambda spark, root: ingest.compact(
+        spark, root, shard_size=SHARD),
+    "optimize_segments": lambda spark, root: ingest.optimize_segments(
+        spark, root, max_segments=1000),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NOOP_OPS))
+def test_every_maintenance_entry_settles_a_crashed_append(
+        spark, corpus, base_index, tmp_path, monkeypatch, op):
+    """Each public maintenance op, called with no-op arguments, rolls
+    back a pending append journal before its body runs."""
+    root = _copy(base_index, tmp_path, op)
+    pre = _term_stats_fingerprint(spark, root)
+    _crash_once(monkeypatch, "build_segments")
+    with pytest.raises(RuntimeError, match="injected"):
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[150:180]),
+                            shard_size=SHARD)
+    journal = os.path.join(root, "_INGEST.json")
+    assert os.path.exists(journal)
+
+    _NOOP_OPS[op](spark, root)
+    assert not os.path.exists(journal)
+    assert _term_stats_fingerprint(spark, root) == pre
+
+
+def test_full_overwrite_ignores_dynamic_session_mode(spark, corpus,
+                                                     tmp_path):
+    """A rebuild over an existing root replaces every tbucket partition
+    even when the session defaults to dynamic partition overwrite — no
+    term of the previous index may survive — and leaves the session
+    conf as it found it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    try:
+        root = str(tmp_path / "rebuilt")
+        IndexBuilder(spark, root, n_segments=2, shard_size=SHARD,
+                     n_term_buckets=4096).build(
+            _pages_df(spark, corpus[:120]), resume=False)
+        IndexBuilder(spark, root, n_segments=2, shard_size=SHARD,
+                     n_term_buckets=4096).build(
+            _pages_df(spark, corpus[200:220]), resume=False)
+        assert spark.conf.get(key) == "dynamic"
+    finally:
+        spark.conf.set(key, prev)
+    b_terms = {r["term"] for r in catalog.read_table(
+        spark, root, "term_freqs").select("term").distinct().collect()}
+    posted = {r["term"] for r in catalog.read_table(
+        spark, root, "postings").select("term").distinct().collect()}
+    assert posted and posted <= b_terms, sorted(posted - b_terms)[:10]
+
+
+def _shard_counts(spark, root):
+    return sorted(
+        (r["term"], r["field"], int(r["n"]))
+        for r in catalog.read_table(spark, root, "postings")
+        .groupBy("term", "field").count().withColumnRenamed("count", "n")
+        .collect()
+    )
+
+
+@pytest.mark.parametrize("crash_at", ["build_segments", "remerge"])
+def test_crash_recovery_keeps_the_appends_shard_size(
+        spark, corpus, tmp_path, monkeypatch, crash_at):
+    """Recovery of a crashed append re-merges postings with the shard
+    size that append journaled, not the recovering caller's default:
+    the head-term shard layout equals the pre-crash index's."""
+    root = str(tmp_path / "sharded")
+    IndexBuilder(spark, root, n_segments=4, shard_size=20).build(
+        _pages_df(spark, corpus[:200]), resume=False)
+    pre = _shard_counts(spark, root)
+    assert any(n > 1 for _, _, n in pre)  # some term has df > 20
+
+    _crash_once(monkeypatch, crash_at)
+    with pytest.raises(RuntimeError, match="injected"):
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[200:240]),
+                            shard_size=20)
+    monkeypatch.undo()
+    assert ingest.delete_urls(spark, root, []) == 0  # recovers, 1M default
+    assert not os.path.exists(os.path.join(root, "_INGEST.json"))
+    assert _shard_counts(spark, root) == pre
+
+
+def test_append_refuses_table_without_recorded_schema(
+        spark, corpus, base_index, tmp_path):
+    """The append guard never re-infers a schema from the directory: an
+    existing table with no entry in the schema registry is refused."""
+    root = _copy(base_index, tmp_path, "no_schema")
+    path = os.path.join(root, catalog.SCHEMA_META_NAME)
+    with open(path) as f:
+        meta = json.load(f)
+    del meta["tables"]["docs"]
+    catalog.write_schema_meta(root, meta)
+    with pytest.raises(ValueError, match="no schema recorded"):
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[150:160]),
+                            shard_size=SHARD)
