@@ -386,11 +386,12 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (once, cached under /tmp) the full inverted index over the
     sf_dir documents table; returns the index root.
 
-    The cached tree records an INPUT fingerprint: if the testdata
-    changed (or a stale tree from different data exists), the index is
-    dropped and rebuilt instead of silently serving results built from
-    other data; the per-stage commit manifests still validate the
-    index's own outputs for resume.
+    The cached tree records the INPUT fingerprint and the builder's
+    settings: if the testdata changed, or the tree was built with other
+    settings (or before they were recorded), the index is dropped and
+    rebuilt instead of silently serving results built from other data
+    or being refused by the build's settings check; the per-stage
+    commit manifests still validate the index's own outputs for resume.
     """
     import json
     import shutil
@@ -399,14 +400,16 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> str:
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     root = f"/tmp/sewiki_index_{tag}"
-    fp = _input_fingerprint(sf_dir)
+    builder = IndexBuilder(spark, root, n_segments=8, shard_size=100_000)
+    want = {"fingerprint": _input_fingerprint(sf_dir),
+            "settings": builder.settings}
     fp_file = os.path.join(root, "_INPUT.json")
     if os.path.exists(root):
-        recorded = None
+        recorded = {}
         if os.path.exists(fp_file):
             with open(fp_file) as f:
-                recorded = json.load(f).get("fingerprint")
-        if recorded != fp:
+                recorded = json.load(f)
+        if {k: recorded.get(k) for k in want} != want:
             shutil.rmtree(root)
     # fingerprint is written BEFORE the build: a crash mid-build then
     # leaves a tree whose recorded fingerprint still matches the input,
@@ -415,8 +418,7 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> str:
     # unaffected — a mismatch is what triggers the rebuild above)
     os.makedirs(root, exist_ok=True)
     with open(fp_file, "w") as f:
-        json.dump({"fingerprint": fp, "sf_dir": sf_dir}, f)
-    builder = IndexBuilder(spark, root, n_segments=8, shard_size=100_000)
+        json.dump({**want, "sf_dir": sf_dir}, f)
     builder.build(_documents_as_pages(spark, sf_dir), resume=True)
     return root
 

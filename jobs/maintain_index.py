@@ -22,7 +22,10 @@ Usage (cluster):
   spark-submit ... jobs/maintain_index.py optimize --index-dir /data/idx \
       --max-segments 8
 
-Every op is crash-safe (journaled) and any op's entry first finishes a
+No op takes an index setting: the shard size, tbucket count and
+analyzers are the ones ``jobs/build_index.py`` recorded in the index's
+``_SCHEMA.json``, so maintenance cannot disagree with the build.  Every
+op is crash-safe (journaled) and any op's entry first finishes a
 crashed predecessor, so rerunning the same command after a failure
 always converges.  Emits one JSON line of what happened.
 """
@@ -51,7 +54,6 @@ def main() -> None:
     p.add_argument("--where",
                    help="SQL predicate over the docs table (delete), "
                         "e.g. \"url LIKE 'https://spam.example/%%'\"")
-    p.add_argument("--shard-size", type=int, default=1_000_000)
     p.add_argument("--max-segments", type=int, default=8)
     p.add_argument("--metrics-out", default="-")
     args = p.parse_args()
@@ -82,10 +84,10 @@ def main() -> None:
                  "index_dir": args.index_dir}
     if args.op == "append":
         out["n_appended"] = ingest.append_pages(
-            spark, args.index_dir, pages(), shard_size=args.shard_size)
+            spark, args.index_dir, pages())
     elif args.op == "upsert":
         n_dead, n_new = ingest.upsert_pages(
-            spark, args.index_dir, pages(), shard_size=args.shard_size)
+            spark, args.index_dir, pages())
         out["n_tombstoned"], out["n_appended"] = n_dead, n_new
     elif args.op == "delete":
         if args.where:
@@ -99,8 +101,7 @@ def main() -> None:
         else:
             p.error("delete requires --urls-file or --where")
     elif args.op == "compact":
-        out["n_removed"] = ingest.compact(
-            spark, args.index_dir, shard_size=args.shard_size)
+        out["n_removed"] = ingest.compact(spark, args.index_dir)
     elif args.op == "optimize":
         out["n_segments"] = ingest.optimize_segments(
             spark, args.index_dir, max_segments=args.max_segments)

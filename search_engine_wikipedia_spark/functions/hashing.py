@@ -1,7 +1,7 @@
 """Driver-side XXH64 — bucket computation without a Spark job.
 
 The postings table is partitioned by ``tbucket = pmod(xxhash64(term),
-n_buckets)`` (operators/build.py ``with_term_bucket``).  The query path
+n_buckets)`` (operators/build.py ``tbucket_col``).  The query path
 needs the bucket of each query term to PRUNE the scan; computing it
 with a throwaway ``createDataFrame([...]).select(F.xxhash64(...))`` job
 costs a full scheduling round-trip (~0.3-0.5 s) PER SEARCH — pure

@@ -353,11 +353,13 @@ def build_segments(tf: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 def merge_segments(
     postings_seg: DataFrame,
+    root: str,
     n_segments: int,
-    shard_size: int = 1_000_000,
     max_shards: int = 64,
 ) -> DataFrame:
-    """postings_seg → globally merged, doc-range-sharded postings.
+    """postings_seg → globally merged, doc-range-sharded postings with
+    their ``tbucket``, under the shard size and tbucket count recorded
+    for the index at ``root``.
 
     Skew handling (north_rule): global df per (term, field) is computed
     first; a head term with df > shard_size gets S = ceil(df/shard_size)
@@ -367,6 +369,8 @@ def merge_segments(
     disjoint doc range — the group output IS the final shard, no second
     shuffle or concat pass needed.
     """
+    meta = catalog.read_schema_meta(root)
+    shard_size = meta["shard_size"]
     totals = postings_seg.groupBy("term", "field").agg(
         F.sum("df").cast("int").alias("term_df"),
         F.sum("cf").cast("long").alias("term_cf"),
@@ -440,31 +444,27 @@ def merge_segments(
         seg.repartition(n_parts, "term", "field", "shard_id")
         .sortWithinPartitions("term", "field", "shard_id", "seg_id")
         .mapInPandas(merge_stream, schema=schemas.POSTINGS)
+        .withColumn("tbucket", tbucket_col(meta["n_term_buckets"]))
     )
 
 
 N_TERM_BUCKETS = 32  # term partition count; 4096 on a 100 TB deployment
 
 
-def with_term_bucket(postings: DataFrame, n_buckets: int = N_TERM_BUCKETS) -> DataFrame:
+def tbucket_col(n_buckets: int):
     """Hidden-partitioning analogue: tbucket = xxhash64(term) mod N.
 
     The postings table is written partitioned by tbucket so a query
     touches only |query terms| partitions (partition pruning on the
-    scan) — the parquet stand-in for Iceberg's bucket(term).
+    scan) — the parquet stand-in for Iceberg's bucket(term).  The one
+    bucket function of every writer; the query path computes the same
+    hash driver-side (``functions.hashing.term_bucket``).
     """
-    return postings.withColumn(
-        "tbucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
 
 
-def merge_postings_stage(
-    spark: SparkSession,
-    root: str,
-    n_segments_total: int,
-    shard_size: int,
-    n_term_buckets: int,
-) -> None:
+def merge_postings_stage(spark: SparkSession, root: str,
+                         n_segments_total: int) -> None:
     """The global-merge stage as a standalone step: read all committed
     segments, merge with salting, bucket by term, write one file per
     bucket, record counted lineage.  Shared by ``IndexBuilder.build``
@@ -473,10 +473,10 @@ def merge_postings_stage(
     from pyspark.sql import Observation
 
     seg = catalog.read_table(spark, root, "postings_seg")
-    merged = merge_segments(seg, n_segments_total, shard_size=shard_size)
-    merged = with_term_bucket(merged, n_term_buckets)
+    n_buckets = catalog.read_schema_meta(root)["n_term_buckets"]
     # one file per term bucket (not tasks × buckets)
-    merged = merged.repartition(n_term_buckets, "tbucket")
+    merged = merge_segments(seg, root, n_segments_total).repartition(
+        n_buckets, "tbucket")
     obs = Observation()
     merged = merged.observe(
         obs, F.count(F.lit(1)).alias("n"), F.sum("df").alias("p")
@@ -521,17 +521,21 @@ class IndexBuilder:
         self.spark = spark
         self.index_dir = index_dir
         self.n_segments = n_segments
-        self.shard_size = shard_size
         self.segment_batches = segment_batches
-        self.n_term_buckets = n_term_buckets
         # schema analyzer selection (reference index.py:38-39 defaults;
-        # A1/A4/A5 from functions.textproc.ANALYZERS also accepted).
-        # Names are persisted in the index (_SCHEMA.json) so the query
-        # path and incremental ingest analyze with the SAME chain.
-        self.text_analyzer_name = text_analyzer
-        self.title_analyzer_name = title_analyzer
+        # A1/A4/A5 from functions.textproc.ANALYZERS also accepted)
         self.text_analyzer = ANALYZERS[text_analyzer]
         self.title_analyzer = ANALYZERS[title_analyzer]
+        # every output-shaping setting, recorded in _SCHEMA.json at build
+        # (catalog.SETTINGS): the query path, maintenance and crash
+        # replays read these back instead of taking them as arguments
+        self.settings = {
+            "text_analyzer": text_analyzer,
+            "title_analyzer": title_analyzer,
+            "n_term_buckets": n_term_buckets,
+            "n_segments": n_segments,
+            "shard_size": shard_size,
+        }
         self.metrics: dict[str, float] = {}
 
     # -- individual stages ---------------------------------------------------
@@ -543,39 +547,49 @@ class IndexBuilder:
         self.metrics[name] = _t.perf_counter() - t0
         return out
 
+    def _prepare_root(self, resume: bool) -> None:
+        """Record the settings of a fresh build, or check a resumed
+        build's settings against the record.  ``resume=False`` empties
+        the index directory first: tombstones, pagerank, lineage and
+        journals of an older index over the same root hold doc_ids of
+        another corpus, and every stage check below trusts what is on
+        disk."""
+        import os
+        import shutil
+
+        root = self.index_dir
+        recorded = catalog.read_schema_meta_or_none(root)
+        if not resume and os.path.isdir(root) and os.listdir(root):
+            if recorded is None:
+                # a mistyped path must not cost unrelated files
+                raise ValueError(
+                    f"{root} is not empty and holds no "
+                    f"{catalog.SCHEMA_META_NAME}; refusing to empty it "
+                    f"for a fresh build"
+                )
+            shutil.rmtree(root)
+            recorded = None
+        if recorded is None:
+            catalog.write_schema_meta(root, self.settings)
+            return
+        prior = {k: recorded.get(k) for k in self.settings}
+        if prior != self.settings:
+            # a resume with DIFFERENT settings would finish the index
+            # with stages that disagree (a segment split, a shard
+            # layout, an analyzer chain the committed stages lack)
+            raise ValueError(
+                f"index at {root} was built with {prior}, but this "
+                f"build requests {self.settings}; pass resume=False to "
+                f"rebuild"
+            )
+
     def build(self, pages: DataFrame, resume: bool = True) -> None:
         root = self.index_dir
         spark = self.spark
-        meta = {
-            "text_analyzer": self.text_analyzer_name,
-            "title_analyzer": self.title_analyzer_name,
-            # recorded, not inferred: a sparse vocabulary may leave the
-            # top tbucket dirs empty, and counting dirs would then
-            # under-estimate the modulus and prune the WRONG partitions
-            "n_term_buckets": self.n_term_buckets,
-        }
-        recorded = catalog.read_schema_meta_or_none(root)
-        if resume and recorded is not None:
-            # compare the SETTINGS keys only — the meta file also
-            # carries the per-table schema registry ("tables", appended
-            # by write_table as stages land), which a settings check
-            # must ignore
-            prior = {k: recorded.get(k) for k in meta}
-            if prior != meta:
-                # a resume with DIFFERENT settings would silently
-                # re-record metadata that no longer matches the
-                # persisted tables, and the query path / incremental
-                # ingest would then analyze with the wrong chain — fail
-                raise ValueError(
-                    f"index at {root} was built with {prior}, but this "
-                    f"build requests {meta}; pass resume=False to rebuild"
-                )
-        if recorded is not None:
-            meta = {**recorded, **meta}  # keep the table registry
-        catalog.write_schema_meta(root, meta)
+        self._prepare_root(resume)
 
         n_docs = None
-        if not (resume and catalog.is_complete(root, "docs")):
+        if not catalog.is_complete(root, "docs"):
             def _docs():
                 from pyspark.sql import Observation
 
@@ -602,7 +616,7 @@ class IndexBuilder:
             n_docs = docs.count()
         self.n_docs = n_docs
 
-        if not (resume and catalog.is_complete(root, "term_freqs")):
+        if not catalog.is_complete(root, "term_freqs"):
             def _tf():
                 tf = term_freqs(docs, self.n_segments, n_docs,
                                 text_analyzer=self.text_analyzer,
@@ -618,37 +632,34 @@ class IndexBuilder:
             self._timed("term_freqs", _tf)
         tf = catalog.read_table(spark, root, "term_freqs")
 
-        if not (resume and catalog.is_complete(root, "doc_stats")):
+        if not catalog.is_complete(root, "doc_stats"):
             def _ds():
                 ds = doc_stats_from_tf(docs, tf)
                 catalog.write_table(ds, root, "doc_stats")
             self._timed("doc_stats", _ds)
         doc_stats = catalog.read_table(spark, root, "doc_stats")
 
-        if not (resume and catalog.is_complete(root, "field_stats")):
+        if not catalog.is_complete(root, "field_stats"):
             def _fs():
                 fs = field_stats_from_doc_stats(doc_stats)
                 catalog.write_table(fs, root, "field_stats")
             self._timed("field_stats", _fs)
 
-        self._build_segments_resumable(tf, resume)
+        self._build_segments_resumable(tf)
 
-        if not (resume and catalog.is_complete(root, "postings")):
+        if not catalog.is_complete(root, "postings"):
             self._timed("postings", lambda: merge_postings_stage(
-                spark, root, self.n_segments,
-                shard_size=self.shard_size,
-                n_term_buckets=self.n_term_buckets,
-            ))
+                spark, root, self.n_segments))
 
-    def _build_segments_resumable(self, tf: DataFrame, resume: bool) -> None:
+    def _build_segments_resumable(self, tf: DataFrame) -> None:
         """Segment phase in ``segment_batches`` committed batches: lineage
         rows land after each batch, so a killed build re-runs only the
         segments with no lineage row (checkpointed segment builds)."""
         root, spark = self.index_dir, self.spark
-        if resume and catalog.is_complete(root, "postings_seg"):
+        if catalog.is_complete(root, "postings_seg"):
             return
 
-        done = catalog.completed_segments(spark, root, "postings_seg") if resume else set()
+        done = catalog.completed_segments(spark, root, "postings_seg")
         all_segs = list(range(self.n_segments))
         missing = [s for s in all_segs if s not in done]
         if len(missing) == len(all_segs):

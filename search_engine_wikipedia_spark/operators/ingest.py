@@ -35,9 +35,11 @@ Every mutation follows ONE write protocol:
 * **one settle order**: finish interrupted table swaps, roll back a
   half-applied append/delete batch (``_INGEST.json``), then finish a
   crashed compact (``_COMPACT.json``) and a crashed optimize
-  (``_OPTIMIZE.json``) from their journals.  Every journal records what
-  its replay needs (the append journal its ``shard_size``), so settling
-  takes no caller setting;
+  (``_OPTIMIZE.json``) from their journals.  No op, journal or replay
+  carries a setting: shard size, tbucket count and analyzers come from
+  the index's settings record (``_SCHEMA.json``, read through
+  ``catalog.read_schema_meta``), so a replay reads the same record the
+  crashed op read;
 * **two overwrite modes**, fixed per write: ``catalog.write_table``
   replaces a whole table, ``catalog.overwrite_partitions`` replaces the
   partitions present in the new data; neither reads nor sets the
@@ -72,6 +74,8 @@ from .build import (
     docs_from_pages,
     field_stats_from_doc_stats,
     merge_postings_stage,
+    merge_segments,
+    tbucket_col,
     term_freqs,
 )
 
@@ -314,15 +318,11 @@ def _journaled_append(df: DataFrame, root: str, name: str,
     _append_table(df, root, name)
 
 
-def recover_incomplete(spark: SparkSession, root: str,
-                       shard_size: int = 1_000_000) -> bool:
+def recover_incomplete(spark: SparkSession, root: str) -> bool:
     """Roll back a half-applied append (journal present): delete the
     files it added, drop its segment partition, and rebuild the derived
-    stages (field_stats, postings) from the surviving tables.  The
-    postings re-merge uses the ``shard_size`` the crashed append
-    journaled, so the head-term shard layout is the one the index had;
-    ``shard_size`` only serves journals that record none.  Returns True
-    when a rollback happened."""
+    stages (field_stats, postings) from the surviving tables.  Returns
+    True when a rollback happened."""
     import json
     import os
     import shutil
@@ -332,7 +332,6 @@ def recover_incomplete(spark: SparkSession, root: str,
         return False
     with open(jp) as f:
         journal = json.load(f)
-    shard_size = journal.get("shard_size", shard_size)
     for name, before in journal.get("before", {}).items():
         tbl = catalog.table_path(root, name)
         if not before:
@@ -366,7 +365,7 @@ def recover_incomplete(spark: SparkSession, root: str,
             field_stats_from_doc_stats(doc_stats), root, "field_stats"
         )
     if "remerge" in steps:
-        remerge(spark, root, shard_size=shard_size)
+        remerge(spark, root)
     os.remove(jp)
     return True
 
@@ -376,8 +375,6 @@ def append_pages(
     spark: SparkSession,
     root: str,
     pages: DataFrame,
-    shard_size: int = 1_000_000,
-    n_term_buckets: int | None = None,
 ) -> int:
     """Append a page batch to the index at ``root``; returns the number
     of new documents indexed (0 for an empty/all-duplicate batch).
@@ -436,8 +433,7 @@ def append_pages(
             F.max("seg_id")).collect()[0][0]
     next_seg = int(seg_mx) + 1
 
-    journal: dict = {"seg_id": next_seg, "shard_size": shard_size,
-                     "before": {}, "steps": []}
+    journal: dict = {"seg_id": next_seg, "before": {}, "steps": []}
     catalog.write_json(_journal_path(root), journal)
 
     _journaled_append(new_docs, root, "docs", journal)
@@ -484,8 +480,7 @@ def append_pages(
 
     journal["steps"].append("remerge")
     catalog.write_json(_journal_path(root), journal)
-    remerge(spark, root, shard_size=shard_size,
-            n_term_buckets=n_term_buckets, delta_seg=next_seg)
+    remerge(spark, root, delta_seg=next_seg)
     import os
 
     os.remove(_journal_path(root))  # batch fully applied
@@ -596,9 +591,8 @@ def optimize_segments(spark: SparkSession, root: str,
 
 
 @_maintenance
-def upsert_pages(spark: SparkSession, root: str, pages: DataFrame,
-                 shard_size: int = 1_000_000,
-                 n_term_buckets: int | None = None) -> tuple[int, int]:
+def upsert_pages(spark: SparkSession, root: str,
+                 pages: DataFrame) -> tuple[int, int]:
     """Recrawl/update flow: re-ingest pages whose urls may already be
     indexed — Lucene's updateDocument (delete-then-add) re-expressed
     over the tombstone lifecycle.  Returns ``(n_tombstoned,
@@ -651,13 +645,11 @@ def upsert_pages(spark: SparkSession, root: str, pages: DataFrame,
         .select("url")
     )
     n_dead = delete_urls(spark, root, changed)
-    n_new = append_pages(spark, root, pages, shard_size=shard_size,
-                         n_term_buckets=n_term_buckets)
+    n_new = append_pages(spark, root, pages)
     return n_dead, n_new
 
 
-def remerge(spark: SparkSession, root: str, shard_size: int = 1_000_000,
-            n_term_buckets: int | None = None,
+def remerge(spark: SparkSession, root: str,
             delta_seg: int | None = None,
             buckets: list[int] | None = None) -> None:
     """Re-merge segments into the global postings table.
@@ -688,18 +680,13 @@ def remerge(spark: SparkSession, root: str, shard_size: int = 1_000_000,
     import os
     import shutil
 
+    bucket_col = tbucket_col(catalog.read_schema_meta(root)["n_term_buckets"])
     seg = catalog.read_table(spark, root, "postings_seg")
     n_total = int(seg.agg(F.max("seg_id")).collect()[0][0]) + 1
-    if n_term_buckets is None:
-        n_term_buckets = catalog.n_term_buckets(root)
     if delta_seg is None and buckets is None:
-        merge_postings_stage(spark, root, n_total, shard_size=shard_size,
-                             n_term_buckets=n_term_buckets)
+        merge_postings_stage(spark, root, n_total)
         return
 
-    from .build import merge_segments, with_term_bucket
-
-    bucket_col = F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int")
     if buckets is None:
         # ≤ n_term_buckets ints — bounded driver traffic at any scale
         buckets = sorted(
@@ -727,10 +714,8 @@ def remerge(spark: SparkSession, root: str, shard_size: int = 1_000_000,
                           ignore_errors=True)
     if live:
         merged = merge_segments(
-            seg.where(bucket_col.isin(sorted(live))), n_total,
-            shard_size=shard_size)
-        merged = with_term_bucket(merged, n_term_buckets)
-        merged = merged.repartition(len(live), "tbucket")
+            seg.where(bucket_col.isin(sorted(live))), root, n_total
+        ).repartition(len(live), "tbucket")
         catalog.overwrite_partitions(merged, post_root, "tbucket")
     catalog.commit(post_root)
     catalog.append_lineage(spark, root, [{
@@ -969,8 +954,7 @@ def delete_where(spark: SparkSession, root: str, predicate) -> int:
 
 
 @_maintenance
-def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
-            n_term_buckets: int | None = None) -> int:
+def compact(spark: SparkSession, root: str) -> int:
     """Physically remove tombstoned docs; returns the count removed.
 
     After compaction the index is STATISTICALLY identical to a fresh
@@ -1009,10 +993,6 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
         dead = j["dead"]
         affected_segs = j["segs"]
         affected_buckets = j["buckets"]
-        n_term_buckets = j["n_term_buckets"]
-        # a resume entered from ANOTHER maintenance op's settle must
-        # re-merge with the original run's setting
-        shard_size = j.get("shard_size", shard_size)
     else:
         if not catalog.table_exists(root, "tombstones"):
             return 0
@@ -1024,8 +1004,7 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
         if not dead:
             catalog.drop_table(root, "tombstones")
             return 0
-        if n_term_buckets is None:
-            n_term_buckets = catalog.n_term_buckets(root)
+        n_term_buckets = catalog.read_schema_meta(root)["n_term_buckets"]
         import numpy as np
 
         n_total = catalog.footer_stats(root, "docs")[0]
@@ -1045,20 +1024,16 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
             # expression tree (see _dead_df)
             hit = spark.read.parquet(*tf_files).join(
                 _dead_df(spark, root, dead), "doc_id", "left_semi")
-            bucket_col = F.pmod(
-                F.xxhash64("term"), F.lit(n_term_buckets)).cast("int")
             agg = hit.agg(
                 F.collect_set("seg_id").alias("segs"),
-                F.collect_set(bucket_col).alias("buckets"),
+                F.collect_set(tbucket_col(n_term_buckets)).alias("buckets"),
             ).collect()[0]
             affected_segs = sorted(agg["segs"])
             affected_buckets = sorted(agg["buckets"])
         else:
             affected_segs, affected_buckets = [], []
         catalog.write_json(jp, {"dead": dead, "segs": affected_segs,
-                                "buckets": affected_buckets,
-                                "n_term_buckets": n_term_buckets,
-                                "shard_size": shard_size})
+                                "buckets": affected_buckets})
 
     # selective, footer-stats-driven rewrites: only the parquet files
     # whose doc_id range holds a dead doc are rewritten, the rest are
@@ -1100,8 +1075,7 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
             for s in affected_segs
         ])
 
-    remerge(spark, root, shard_size=shard_size,
-            n_term_buckets=n_term_buckets, buckets=affected_buckets)
+    remerge(spark, root, buckets=affected_buckets)
 
     pr_path = catalog.table_path(root, "pagerank")
     if os.path.exists(pr_path):
@@ -1127,8 +1101,7 @@ def compact(spark: SparkSession, root: str, shard_size: int = 1_000_000,
 
 
 def stream_ingest(spark: SparkSession, root: str, stream_pages: DataFrame,
-                  checkpoint_dir: str, shard_size: int = 1_000_000,
-                  upsert: bool = False):
+                  checkpoint_dir: str, upsert: bool = False):
     """Continuous ingest: one ``append_pages`` per micro-batch.
 
     ``stream_pages`` is a streaming DataFrame with the pages schema;
@@ -1147,9 +1120,9 @@ def stream_ingest(spark: SparkSession, root: str, stream_pages: DataFrame,
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if upsert:
-            upsert_pages(spark, root, batch_df, shard_size=shard_size)
+            upsert_pages(spark, root, batch_df)
         else:
-            append_pages(spark, root, batch_df, shard_size=shard_size)
+            append_pages(spark, root, batch_df)
 
     return (
         stream_pages.writeStream

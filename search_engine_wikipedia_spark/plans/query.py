@@ -259,7 +259,6 @@ class SearchIndex:
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 cache_terms: bool = True,
                  max_postings_per_term: int | None = _CAP_DEFAULT,
                  max_tombstone_frac: float | None = _CAP_DEFAULT):
         from ..functions.textproc import ANALYZERS
@@ -276,15 +275,15 @@ class SearchIndex:
             if max_tombstone_frac is _CAP_DEFAULT
             else max_tombstone_frac
         )
-        # analyze queries with the chains the index was BUILT with
-        # (recorded at build time; defaults = reference schema A3/A2)
+        # analyze queries with the chains the index was BUILT with, and
+        # prune with the tbucket count it was written with
         meta = catalog.read_schema_meta(index_dir)
         self.analyzer_names = meta
         self.analyzers = {
             "text": ANALYZERS[meta["text_analyzer"]],
             "title": ANALYZERS[meta["title_analyzer"]],
         }
-        self.n_term_buckets = catalog.n_term_buckets(index_dir)
+        self.n_term_buckets = meta["n_term_buckets"]
         self.postings = catalog.read_table(spark, index_dir, "postings")
         fs = catalog.read_table(spark, index_dir, "field_stats").collect()
         n_docs = int(fs[0]["doc_count"])
@@ -296,7 +295,7 @@ class SearchIndex:
         for k, v in self.stats.avg_len.items():
             if v == 0:
                 self.stats.avg_len[k] = 1.0
-        self._term_cache: dict = {} if cache_terms else None
+        self._term_cache: dict = {}
         self._pagerank = None
         self._docs = None
         self._tombstones: "np.ndarray | None" = None
@@ -318,9 +317,7 @@ class SearchIndex:
 
     def fetch_postings(self, keys: list[tuple[str, str]]) -> dict:
         """(field, term) → PostingList, one pruned parquet scan."""
-        missing = [k for k in keys
-                   if self._term_cache is None or k not in self._term_cache]
-        out = {}
+        missing = [k for k in keys if k not in self._term_cache]
         if missing:
             scan = self.postings_scan(missing)
             if self.max_postings_per_term is not None:
@@ -344,14 +341,9 @@ class SearchIndex:
             for r in rows:
                 grouped.setdefault((r["field"], r["term"]), []).append(r)
             for k in missing:
-                pl = PostingList.from_rows(k[0], k[1], grouped.get(k, []))
-                if self._term_cache is not None:
-                    self._term_cache[k] = pl
-                out[k] = pl
-        if self._term_cache is not None:
-            for k in keys:
-                out[k] = self._term_cache[k]
-        return out
+                self._term_cache[k] = PostingList.from_rows(
+                    k[0], k[1], grouped.get(k, []))
+        return {k: self._term_cache[k] for k in keys}
 
     def expand_pattern(self, field: str, pattern: str,
                        cap: int = qsyntax.MAX_PATTERN_TERMS) -> list[str]:

@@ -15,6 +15,11 @@ The reference's index "commit" is Whoosh's segment flush
   ``overwrite_partitions`` replaces only the partitions present in the
   new data (dynamic) and leaves the commit to the caller,
 * ``is_complete``/``read`` implement open-or-build resume,
+* ``_SCHEMA.json`` is the index's one settings record
+  (``read_schema_meta``), as Whoosh stores its schema in the index:
+  ``IndexBuilder.build`` records the analyzers, tbucket count, segment
+  count and shard size there, and every reader, maintenance op and
+  crash replay reads them back instead of taking them as arguments,
 * per-partition lineage rows (seg_id, n_docs, n_terms, bytes, checksum)
   are appended to a ``manifests`` parquet table — the north_rule's
   per-partition lineage requirement,
@@ -196,9 +201,13 @@ def drop_table(root: str, name: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Index schema metadata (analyzer selection — reference WikiSchema)
+# Index settings record (reference WikiSchema, stored in the index)
 # ---------------------------------------------------------------------------
 SCHEMA_META_NAME = "_SCHEMA.json"
+# every output-shaping build setting; segment_batches only splits the
+# segment phase into commits and is not recorded
+SETTINGS = ("text_analyzer", "title_analyzer", "n_term_buckets",
+            "n_segments", "shard_size")
 
 
 def write_schema_meta(root: str, meta: dict) -> None:
@@ -207,11 +216,20 @@ def write_schema_meta(root: str, meta: dict) -> None:
 
 
 def read_schema_meta(root: str) -> dict:
-    """Analyzer selection recorded at build time; defaults = the
-    reference schema (index.py:38-39) for indexes from older builds."""
-    meta = read_schema_meta_or_none(root)
-    if meta is None:
-        return {"text_analyzer": "text", "title_analyzer": "title"}
+    """The index's settings record: the ``SETTINGS`` that
+    ``IndexBuilder.build`` recorded, plus the per-table schema registry.
+    Every reader and maintenance op takes its settings from here, so a
+    writer cannot disagree with the index it writes to.  Raises
+    ``ValueError`` naming each missing setting: a guessed tbucket
+    modulus prunes (or rewrites) the wrong partitions, a guessed shard
+    size re-merges head terms into a layout no build produced."""
+    meta = read_schema_meta_or_none(root) or {}
+    missing = [k for k in SETTINGS if k not in meta]
+    if missing:
+        raise ValueError(
+            f"index at {root} records no {', '.join(missing)} in "
+            f"{SCHEMA_META_NAME}; rebuild it with IndexBuilder.build"
+        )
     return meta
 
 
@@ -220,20 +238,6 @@ def read_schema_meta_or_none(root: str) -> dict | None:
     if not p.exists():
         return None
     return json.loads(p.read_text())
-
-
-def n_term_buckets(root: str) -> int:
-    """The tbucket modulus ``IndexBuilder.build`` recorded.  Never
-    guessed: counting ``tbucket=`` dirs under-estimates it when a sparse
-    vocabulary leaves the top buckets empty, and a wrong modulus prunes
-    (or rewrites) the wrong partitions."""
-    n = (read_schema_meta_or_none(root) or {}).get("n_term_buckets")
-    if not n:
-        raise ValueError(
-            f"index at {root} records no n_term_buckets in "
-            f"{SCHEMA_META_NAME}; rebuild it with IndexBuilder.build"
-        )
-    return int(n)
 
 
 def record_table_schema(root: str, name: str, schema) -> None:
@@ -379,9 +383,12 @@ def read_table_arrow(root: str, name: str, columns: list[str] | None = None):
 
 
 def completed_segments(spark: SparkSession, root: str, stage: str) -> set[int]:
-    """Seg ids recorded as complete for a stage (segment-level resume)."""
-    path = Path(table_path(root, "manifests"))
-    if not path.exists():
+    """Seg ids recorded as complete for a stage (segment-level resume).
+    A segment's lineage row lands after its files, so before the
+    stage's table exists there is nothing to read (a fresh build runs
+    no lineage scan)."""
+    if not all(Path(table_path(root, t)).exists()
+               for t in (stage, "manifests")):
         return set()
     df = read_lineage(spark, root).where(f"stage = '{stage}'")
     return {int(r.seg_id) for r in df.select("seg_id").distinct().collect()}

@@ -124,7 +124,7 @@ def test_compact_equals_fresh_build_over_survivors(spark, corpus,
     _build(spark, root, _pages_df(spark, corpus[:250]))
     victims = _victim_urls(spark, root, QUERIES[1], k=3)
     assert ingest.delete_urls(spark, root, victims) == 3
-    assert ingest.compact(spark, root, shard_size=200) == 3
+    assert ingest.compact(spark, root) == 3
 
     survivors = [p for p in corpus[:250] if p["url"] not in set(victims)]
     fresh = str(tmp_path_factory.mktemp("cmp_fresh"))
@@ -142,7 +142,7 @@ def test_compact_equals_fresh_build_over_survivors(spark, corpus,
                  .select("url").collect()}
     assert not docs_urls & set(victims)
     # compact with nothing tombstoned is a no-op
-    assert ingest.compact(spark, root, shard_size=200) == 0
+    assert ingest.compact(spark, root) == 0
 
 
 def test_compact_rewrites_only_touched_buckets(spark, corpus,
@@ -174,8 +174,7 @@ def test_compact_rewrites_only_touched_buckets(spark, corpus,
 
     before = snapshot()
     assert ingest.delete_urls(spark, root, [extra[0]["url"]]) == 1
-    assert ingest.compact(spark, root, shard_size=200,
-                          n_term_buckets=256) == 1
+    assert ingest.compact(spark, root) == 1
     after = snapshot()
 
     def bucket_of(rel):
@@ -228,8 +227,7 @@ def test_compact_drops_bucket_whose_terms_all_died(spark, corpus,
     assert exclusive, "fixture needs an exclusively-owned bucket"
 
     assert ingest.delete_urls(spark, root, [solo["url"]]) == 1
-    assert ingest.compact(spark, root, shard_size=200,
-                          n_term_buckets=4096) == 1
+    assert ingest.compact(spark, root) == 1
     for b in exclusive:
         assert not Path(root, "postings", f"tbucket={b}").exists()
     # queries still work and never return the dead doc
@@ -260,10 +258,10 @@ def test_compact_crash_is_recovered_by_next_op(spark, corpus,
 
     monkeypatch.setattr(ingest, "build_segments", dying)
     with pytest.raises(RuntimeError, match="injected"):
-        ingest.compact(spark, root, shard_size=200)
+        ingest.compact(spark, root)
     # tombstones survive the crash → compact re-runs idempotently
     assert os.path.exists(os.path.join(root, "tombstones"))
-    assert ingest.compact(spark, root, shard_size=200) == 2
+    assert ingest.compact(spark, root) == 2
 
     survivors = [p for p in corpus[:250] if p["url"] not in set(victims)]
     fresh = str(tmp_path_factory.mktemp("crash_fresh"))
@@ -375,7 +373,7 @@ def test_crash_mid_first_delete_does_not_brick_index(
     post = _search_by_url(spark, root, QUERIES[:4])
     assert not {u for _, u in post[QUERIES[1]]} & set(victims)
     # and the rest of the lifecycle still works end-to-end
-    assert ingest.compact(spark, root, shard_size=200) == len(victims)
+    assert ingest.compact(spark, root) == len(victims)
     assert not os.path.exists(os.path.join(root, "tombstones"))
 
 
@@ -447,7 +445,7 @@ def test_full_compact_plans_have_no_inlist(spark, corpus,
         return out
 
     monkeypatch.setattr(ingest, "_survivors", spy)
-    assert ingest.compact(spark, root, shard_size=200) == len(victims)
+    assert ingest.compact(spark, root) == len(victims)
     assert len(plans) >= 3  # docs, doc_stats, term_freqs at minimum
     for p in plans:
         assert " IN (" not in p and "isin" not in p

@@ -34,3 +34,46 @@ def test_lifecycle_scratch_reaps_dead_pid_trees(tmp_path, monkeypatch):
     finally:
         for d in (dead, alive, f"{prefix}{os.getpid()}"):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_engine_index_rebuilds_a_tree_without_recorded_settings(
+        spark, tmp_path):
+    """A cached index tree whose input fingerprint matches but which
+    records no builder settings (built before they were recorded) is
+    rebuilt, not refused by the build's settings check."""
+    import json
+
+    import pandas as pd
+
+    from search_engine_wikipedia_spark.sources import catalog
+
+    sf_dir = tmp_path / f"sfplant{os.getpid()}"
+    sf_dir.mkdir()
+    pd.DataFrame({
+        "doc_id": list(range(12)),
+        "text": [f"planted document {i} about topic{i % 3}"
+                 for i in range(12)],
+        "lang": ["en"] * 12,
+    }).to_parquet(sf_dir / "documents.parquet")
+    root = f"/tmp/sewiki_index_{sf_dir.name}"
+    shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(root)
+    try:
+        with open(os.path.join(root, "_INPUT.json"), "w") as f:
+            json.dump({"fingerprint": entry_mod._input_fingerprint(
+                str(sf_dir)), "sf_dir": str(sf_dir)}, f)
+        catalog.write_schema_meta(root, {
+            "text_analyzer": "text", "title_analyzer": "title",
+            "n_term_buckets": 32})
+        with open(os.path.join(root, "stale.marker"), "w") as f:
+            f.write("from the old tree")
+
+        assert entry_mod._engine_index(spark, str(sf_dir)) == root
+        assert not os.path.exists(os.path.join(root, "stale.marker"))
+        meta = catalog.read_schema_meta(root)
+        assert (meta["n_segments"], meta["shard_size"]) == (8, 100_000)
+        with open(os.path.join(root, "_INPUT.json")) as f:
+            assert json.load(f)["settings"]["shard_size"] == 100_000
+        assert catalog.read_table(spark, root, "docs").count() == 12
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -27,8 +27,7 @@ def incremental_root(spark, corpus, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("inc_idx"))
     IndexBuilder(spark, root, n_segments=4, shard_size=200).build(
         _pages_df(spark, corpus[:200]), resume=False)
-    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[200:]),
-                            shard_size=200)
+    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[200:]))
     assert n > 0  # some synth pages are redirects → filtered, like S3
     return root
 
@@ -77,8 +76,7 @@ def test_append_is_idempotent_on_replay(spark, corpus, incremental_root):
     replay scenario)."""
     before = _term_stats_fingerprint(spark, incremental_root)
     n = ingest.append_pages(
-        spark, incremental_root, _pages_df(spark, corpus[200:]),
-        shard_size=200)
+        spark, incremental_root, _pages_df(spark, corpus[200:]))
     assert n == 0
     assert _term_stats_fingerprint(spark, incremental_root) == before
 
@@ -118,7 +116,6 @@ def test_stream_ingest_foreachbatch(spark, corpus, built_index,
     q = ingest.stream_ingest(
         spark, root, stream,
         checkpoint_dir=str(tmp_path_factory.mktemp("ckpt")),
-        shard_size=200,
     )
     q.awaitTermination(300)
     assert not q.isActive
@@ -153,15 +150,13 @@ def test_crash_mid_append_rolls_back_and_reapplies(spark, corpus,
 
     monkeypatch.setattr(ingest, crash_at, dying)
     with pytest.raises(RuntimeError, match="injected"):
-        ingest.append_pages(spark, root, _pages_df(spark, corpus[200:250]),
-                            shard_size=200)
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[200:250]))
     import os
 
     assert os.path.exists(os.path.join(root, "_INGEST.json"))
 
     # replay (as foreachBatch would): rollback + full re-apply
-    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[200:250]),
-                            shard_size=200)
+    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[200:250]))
     assert n > 0
     assert not os.path.exists(os.path.join(root, "_INGEST.json"))
     assert _term_stats_fingerprint(spark, root) == full
@@ -226,8 +221,7 @@ def test_tiered_merge_rewrites_only_delta_buckets(spark, corpus,
         "warc_ts": dt.datetime(2024, 6, 1), "html": b"",
         "text": text, "lang": "en",
     } for k in range(2)]
-    n = ingest.append_pages(spark, root, _pages_df(spark, delta),
-                            shard_size=200)
+    n = ingest.append_pages(spark, root, _pages_df(spark, delta))
     assert n == 2
     after = snapshot()
 
@@ -265,7 +259,7 @@ def test_upsert_recrawl_replaces_content(spark, corpus, tmp_path_factory):
     new_urls = {p["url"] for p in updated}
 
     n_dead, n_new = ingest.upsert_pages(
-        spark, root, _pages_df(spark, updated), shard_size=200)
+        spark, root, _pages_df(spark, updated))
     assert (n_dead, n_new) == (3, 3)
 
     # the new revision ranks for its new vocabulary, on the SAME urls
@@ -277,7 +271,7 @@ def test_upsert_recrawl_replaces_content(spark, corpus, tmp_path_factory):
 
     # physical removal, then parity with a fresh build over the
     # updated corpus
-    assert ingest.compact(spark, root, shard_size=200) == 3
+    assert ingest.compact(spark, root) == 3
     fresh = str(tmp_path_factory.mktemp("ups_fresh"))
     updated_corpus = [p for p in corpus[:200]
                       if p["url"] not in new_urls] + updated
@@ -314,7 +308,7 @@ def test_stream_upsert_recrawls_changed_pages(spark, corpus,
     q = ingest.stream_ingest(
         spark, root, stream,
         checkpoint_dir=str(tmp_path_factory.mktemp("ups_ckpt")),
-        shard_size=200, upsert=True,
+        upsert=True,
     )
     q.awaitTermination(300)
     assert not q.isActive
@@ -323,7 +317,7 @@ def test_stream_upsert_recrawls_changed_pages(spark, corpus,
     res = _search_by_url(spark, root, ["qqstreamed"])
     assert {u for _, u in res["qqstreamed"]} == {p["url"] for p in changed}
 
-    ingest.compact(spark, root, shard_size=200)
+    ingest.compact(spark, root)
     final_corpus = [p for p in corpus[:200]
                     if p["url"] not in {c["url"] for c in changed}]
     final_corpus += feed_pages
@@ -349,8 +343,7 @@ def test_optimize_segments_coalesces_and_preserves_results(
     IndexBuilder(spark, root, n_segments=6, shard_size=200).build(
         _pages_df(spark, corpus[:150]), resume=False)
     for lo, hi in ((150, 180), (180, 210), (210, 240)):
-        ingest.append_pages(spark, root, _pages_df(spark, corpus[lo:hi]),
-                            shard_size=200)
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[lo:hi]))
     assert len(_seg_ids(root)) == 9
     pre_fp = _term_stats_fingerprint(spark, root)
     pre_res = _search_by_url(spark, root, QUERIES[:8])
@@ -365,14 +358,13 @@ def test_optimize_segments_coalesces_and_preserves_results(
     assert ingest.optimize_segments(spark, root, max_segments=8) == 3
 
     # lifecycle interplay: append lands as seg 3; delete+compact green
-    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[240:260]),
-                            shard_size=200)
+    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[240:260]))
     assert n > 0
     assert max(_seg_ids(root)) == 3
     victims = [r["url"] for r in catalog.read_table(spark, root, "docs")
                .orderBy("doc_id").limit(2).select("url").collect()]
     assert ingest.delete_urls(spark, root, victims) == 2
-    assert ingest.compact(spark, root, shard_size=200) == 2
+    assert ingest.compact(spark, root) == 2
     res = _search_by_url(spark, root, QUERIES[:4])
     assert all(u not in set(victims) for hits in res.values()
                for _, u in hits)
@@ -387,8 +379,7 @@ def test_optimize_crash_resumes_from_next_maintenance_op(
     root = str(tmp_path_factory.mktemp("optc_idx"))
     IndexBuilder(spark, root, n_segments=5, shard_size=200).build(
         _pages_df(spark, corpus[:150]), resume=False)
-    ingest.append_pages(spark, root, _pages_df(spark, corpus[150:190]),
-                        shard_size=200)
+    ingest.append_pages(spark, root, _pages_df(spark, corpus[150:190]))
     pre_fp = _term_stats_fingerprint(spark, root)
 
     orig = ingest.build_segments
@@ -406,8 +397,7 @@ def test_optimize_crash_resumes_from_next_maintenance_op(
     assert os.path.exists(os.path.join(root, "_OPTIMIZE.json"))
 
     # any maintenance entry finishes it (here: an append)
-    ingest.append_pages(spark, root, _pages_df(spark, corpus[190:210]),
-                        shard_size=200)
+    ingest.append_pages(spark, root, _pages_df(spark, corpus[190:210]))
     assert not os.path.exists(os.path.join(root, "_OPTIMIZE.json"))
     assert max(_seg_ids(root)) == 2  # 2 coalesced + 1 new delta
     # stats = pre-optimize stats plus exactly the appended delta — spot
@@ -447,8 +437,7 @@ def test_append_falls_back_when_footer_stats_missing(
     pre_max = catalog.read_table(spark, root, "docs").agg(
         F.max("doc_id")).collect()[0][0]
 
-    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[120:160]),
-                            shard_size=200)
+    n = ingest.append_pages(spark, root, _pages_df(spark, corpus[120:160]))
     assert n > 0
     docs = catalog.read_table(spark, root, "docs")
     lo = docs.where(F.col("doc_id") > pre_max).agg(
@@ -529,7 +518,7 @@ def test_concurrent_maintenance_writer_refuses_cleanly(
     before = sorted(os.listdir(root))
     for op in (
         lambda: ingest.append_pages(
-            spark, root, _pages_df(spark, corpus[60:80]), shard_size=200),
+            spark, root, _pages_df(spark, corpus[60:80])),
         lambda: ingest.delete_urls(spark, root, ["http://x/none"]),
         lambda: ingest.compact(spark, root),
         lambda: ingest.optimize_segments(spark, root),
@@ -562,8 +551,7 @@ def test_stale_maintenance_lock_is_broken(spark, corpus,
         _json.dump({"pid": proc.pid, "host": socket.gethostname(),
                     "ts": time.time()}, f)
     n = ingest.append_pages(spark, root,
-                            _pages_df(spark, corpus[60:100]),
-                            shard_size=200)
+                            _pages_df(spark, corpus[60:100]))
     assert n > 0
     assert not os.path.exists(lock)  # released after the op
 
@@ -592,7 +580,7 @@ def test_upsert_replay_is_exactly_once(spark, corpus, tmp_path_factory):
     batch += list(corpus[200:220])  # plus some brand-new pages
 
     n_dead, n_new = ingest.upsert_pages(
-        spark, root, _pages_df(spark, batch), shard_size=200)
+        spark, root, _pages_df(spark, batch))
     assert n_dead == 3 and n_new > 0
     fp = _term_stats_fingerprint(spark, root)
     res = _search_by_url(spark, root, QUERIES[:6] + ["qqreplay"])
@@ -600,7 +588,7 @@ def test_upsert_replay_is_exactly_once(spark, corpus, tmp_path_factory):
 
     # the epoch replay: identical batch, applied again
     assert ingest.upsert_pages(
-        spark, root, _pages_df(spark, batch), shard_size=200) == (0, 0)
+        spark, root, _pages_df(spark, batch)) == (0, 0)
     assert _term_stats_fingerprint(spark, root) == fp
     assert _search_by_url(spark, root, QUERIES[:6] + ["qqreplay"]) == res
     assert len(SearchIndex(spark, root).tombstones) == n_tomb
@@ -616,4 +604,4 @@ def test_upsert_replay_is_exactly_once(spark, corpus, tmp_path_factory):
     batch3 = [dict(p, text="qqreplay third revision " * 4)
               for p in batch[:3]]
     assert ingest.upsert_pages(
-        spark, root, _pages_df(spark, batch3), shard_size=200) == (3, 3)
+        spark, root, _pages_df(spark, batch3)) == (3, 3)

@@ -79,8 +79,7 @@ class _Sequence:
             def commit():
                 for p in chunk:
                     self.live.setdefault(p["url"], p)
-            return (lambda: ingest.append_pages(spark, root, df,
-                                                shard_size=SHARD), commit)
+            return (lambda: ingest.append_pages(spark, root, df), commit)
         if op == "upsert":
             urls = self.indexed_urls()
             victims = rng.sample(urls, min(5, len(urls)))
@@ -96,8 +95,7 @@ class _Sequence:
             def commit():
                 for p in batch:
                     self.live[p["url"]] = p
-            return (lambda: ingest.upsert_pages(spark, root, df,
-                                                shard_size=SHARD), commit)
+            return (lambda: ingest.upsert_pages(spark, root, df), commit)
         if op == "delete_urls":
             urls = self.indexed_urls()
             victims = rng.sample(urls, min(4, len(urls)))
@@ -118,8 +116,7 @@ class _Sequence:
             return (lambda: ingest.delete_where(
                 spark, root, f"url LIKE '%{suffix}'"), commit)
         if op == "compact":
-            return (lambda: ingest.compact(spark, root,
-                                           shard_size=SHARD),
+            return (lambda: ingest.compact(spark, root),
                     lambda: None)
         if op == "optimize":
             return (lambda: ingest.optimize_segments(spark, root),
@@ -129,7 +126,7 @@ class _Sequence:
     def assert_equals_fresh_build(self, tmp_path_factory, tag, trace):
         # converge: tombstoned stats differ from fresh by design
         # (Lucene live-docs semantics) — the claim is post-compact
-        ingest.compact(self.spark, self.root, shard_size=SHARD)
+        ingest.compact(self.spark, self.root)
         fresh = str(tmp_path_factory.mktemp(tag))
         _build(self.spark, fresh,
                sorted(self.live.values(), key=lambda p: p["url"]))

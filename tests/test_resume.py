@@ -266,3 +266,99 @@ def test_iceberg_seam_routes_reads_through_table(spark, monkeypatch,
     got = catalog.read_table(spark, str(tmp_path / "noexist"), "docs")
     assert seen["name"] == "idx.docs"
     assert got is real  # no parquet path touched (dir doesn't exist)
+
+
+def _crash_segment_batch(monkeypatch, n):
+    """Make ``build_segments`` raise on its ``n``-th call."""
+    orig = build_mod.build_segments
+    calls = {"n": 0}
+
+    def flaky(tf):
+        calls["n"] += 1
+        if calls["n"] == n:
+            raise RuntimeError("injected executor loss")
+        return orig(tf)
+
+    monkeypatch.setattr(build_mod, "build_segments", flaky)
+
+
+def test_resume_refuses_changed_settings(spark, pages_df, tmp_path,
+                                         monkeypatch):
+    """A build that crashed in its segment phase resumes only with the
+    settings it recorded: a different segment count or shard size
+    would finish the index with stages that disagree."""
+    root = str(tmp_path / "idx")
+    _crash_segment_batch(monkeypatch, 3)
+    with pytest.raises(RuntimeError, match="injected"):
+        build_mod.IndexBuilder(
+            spark, root, n_segments=4, shard_size=200, segment_batches=4
+        ).build(pages_df, resume=True)
+    monkeypatch.undo()
+    for changed in ({"n_segments": 2, "shard_size": 200},
+                    {"n_segments": 4, "shard_size": 50}):
+        with pytest.raises(ValueError, match="pass resume=False"):
+            build_mod.IndexBuilder(
+                spark, root, segment_batches=4, **changed
+            ).build(pages_df, resume=True)
+
+
+def test_fresh_build_drops_the_old_index_state(spark, corpus, tmp_path):
+    """``resume=False`` over an existing index starts from an empty
+    directory: the old index's tombstones, pagerank and lineage hold
+    doc_ids of another corpus and must not survive."""
+    from search_engine_wikipedia_spark.operators import ingest
+    from search_engine_wikipedia_spark.operators.pagerank import (
+        build_pagerank_stage,
+    )
+    from search_engine_wikipedia_spark.plans.query import SearchIndex
+
+    root = str(tmp_path / "idx")
+    old = spark.createDataFrame(pd.DataFrame(corpus[:150]),
+                                schema=schemas.PAGES)
+    build_mod.IndexBuilder(spark, root, n_segments=2).build(
+        old, resume=False)
+    build_pagerank_stage(spark, root)
+    urls = [r["url"] for r in catalog.read_table(spark, root, "docs")
+            .orderBy("doc_id").limit(37).collect()]
+    assert ingest.delete_urls(spark, root, urls) == 37
+
+    new = spark.createDataFrame(pd.DataFrame(corpus[150:]),
+                                schema=schemas.PAGES)
+    build_mod.IndexBuilder(spark, root, n_segments=2).build(
+        new, resume=False)
+    for name in ("tombstones", "pagerank"):
+        assert not catalog.table_exists(root, name), name
+    assert SearchIndex(spark, root).tombstones.size == 0
+    n_docs = catalog.read_table(spark, root, "docs").count()
+    lineage = [(r["stage"], r["n_docs"]) for r in
+               catalog.read_lineage(spark, root)
+               .where("stage = 'docs'").collect()]
+    assert lineage == [("docs", n_docs)]
+
+
+def test_resumed_rebuild_ignores_the_old_index(spark, corpus, tmp_path,
+                                               monkeypatch):
+    """A ``resume=False`` rebuild that crashes in its segment phase and
+    is then resumed serves the new corpus only: the old build's segment
+    lineage and committed postings are gone, not trusted."""
+    old = spark.createDataFrame(pd.DataFrame(corpus[:150]),
+                                schema=schemas.PAGES)
+    new = spark.createDataFrame(pd.DataFrame(corpus[150:]),
+                                schema=schemas.PAGES)
+    clean_root = str(tmp_path / "clean")
+    build_mod.IndexBuilder(
+        spark, clean_root, n_segments=4, shard_size=200
+    ).build(new, resume=False)
+
+    root = str(tmp_path / "rebuilt")
+    settings = {"n_segments": 4, "shard_size": 200, "segment_batches": 4}
+    build_mod.IndexBuilder(spark, root, **settings).build(
+        old, resume=False)
+    _crash_segment_batch(monkeypatch, 2)
+    with pytest.raises(RuntimeError, match="injected"):
+        build_mod.IndexBuilder(spark, root, **settings).build(
+            new, resume=False)
+    monkeypatch.undo()
+    build_mod.IndexBuilder(spark, root, **settings).build(new, resume=True)
+    assert _postings_fingerprint(spark, root) == _postings_fingerprint(
+        spark, clean_root)

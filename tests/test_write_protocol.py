@@ -57,14 +57,14 @@ def _copy(base, tmp_path, name):
 
 _NOOP_OPS = {
     "append_pages": lambda spark, root: ingest.append_pages(
-        spark, root, _pages_df(spark, []), shard_size=SHARD),
+        spark, root, _pages_df(spark, [])),
     "upsert_pages": lambda spark, root: ingest.upsert_pages(
-        spark, root, _pages_df(spark, []), shard_size=SHARD),
+        spark, root, _pages_df(spark, [])),
     "delete_urls": lambda spark, root: ingest.delete_urls(spark, root, []),
     "delete_where": lambda spark, root: ingest.delete_where(
         spark, root, "false"),
     "compact": lambda spark, root: ingest.compact(
-        spark, root, shard_size=SHARD),
+        spark, root),
     "optimize_segments": lambda spark, root: ingest.optimize_segments(
         spark, root, max_segments=1000),
 }
@@ -79,8 +79,7 @@ def test_every_maintenance_entry_settles_a_crashed_append(
     pre = _term_stats_fingerprint(spark, root)
     _crash_once(monkeypatch, "build_segments")
     with pytest.raises(RuntimeError, match="injected"):
-        ingest.append_pages(spark, root, _pages_df(spark, corpus[150:180]),
-                            shard_size=SHARD)
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[150:180]))
     journal = os.path.join(root, "_INGEST.json")
     assert os.path.exists(journal)
 
@@ -139,8 +138,7 @@ def test_crash_recovery_keeps_the_appends_shard_size(
 
     _crash_once(monkeypatch, crash_at)
     with pytest.raises(RuntimeError, match="injected"):
-        ingest.append_pages(spark, root, _pages_df(spark, corpus[200:240]),
-                            shard_size=20)
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[200:240]))
     monkeypatch.undo()
     assert ingest.delete_urls(spark, root, []) == 0  # recovers, 1M default
     assert not os.path.exists(os.path.join(root, "_INGEST.json"))
@@ -158,5 +156,46 @@ def test_append_refuses_table_without_recorded_schema(
     del meta["tables"]["docs"]
     catalog.write_schema_meta(root, meta)
     with pytest.raises(ValueError, match="no schema recorded"):
-        ingest.append_pages(spark, root, _pages_df(spark, corpus[150:160]),
-                            shard_size=SHARD)
+        ingest.append_pages(spark, root, _pages_df(spark, corpus[150:160]))
+
+
+def _layout(spark, root):
+    """Per (term, field): its shard count and the tbucket of every row."""
+    return sorted(
+        (r["term"], r["field"], int(r["n_shards"]), int(r["tbucket"]))
+        for r in catalog.read_table(spark, root, "postings")
+        .select("term", "field", "n_shards", "tbucket").distinct()
+        .collect()
+    )
+
+
+def test_maintenance_follows_the_recorded_settings(spark, corpus,
+                                                    tmp_path):
+    """Append, upsert and compact take no settings: they re-merge with
+    the shard size and tbucket count the build recorded, so the result
+    equals a fresh build over the survivors with those settings.  16
+    segments keep the segment count from capping any shard count at
+    this corpus size, so the shard layout depends on df alone."""
+    settings = {"n_segments": 16, "shard_size": 20, "n_term_buckets": 64}
+    root = str(tmp_path / "maintained")
+    IndexBuilder(spark, root, **settings).build(
+        _pages_df(spark, corpus[:150]), resume=False)
+    assert ingest.append_pages(
+        spark, root, _pages_df(spark, corpus[150:200])) > 0
+    indexed = {r["url"] for r in catalog.read_table(spark, root, "docs")
+               .select("url").collect()}
+    updated = [dict(p, text=(p["text"] or "") + " qqrevised")
+               for p in corpus[:150] if p["url"] in indexed][:3]
+    assert ingest.upsert_pages(spark, root, _pages_df(spark, updated)) == (
+        3, 3)
+    assert ingest.compact(spark, root) == 3
+
+    fresh = str(tmp_path / "fresh")
+    revised = {p["url"]: p for p in updated}
+    IndexBuilder(spark, fresh, **settings).build(
+        _pages_df(spark, [revised.get(p["url"], p) for p in corpus[:200]]),
+        resume=False)
+    assert any(n > 1 for _, _, n, _ in _layout(spark, fresh))
+    assert _layout(spark, root) == _layout(spark, fresh)
+    assert (_term_stats_fingerprint(spark, root)
+            == _term_stats_fingerprint(spark, fresh))

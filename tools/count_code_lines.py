@@ -8,6 +8,7 @@ module, class or function when it is a bare string literal).
 Usage::
 
     python tools/count_code_lines.py FILE [FILE ...]
+    python tools/count_code_lines.py -h | --help
 
 Prints one ``<count>  <file>`` row per file and a ``total`` row when
 more than one file is given.  Standard library only.
@@ -54,6 +55,9 @@ def main(argv: list[str]) -> int:
     if not argv:
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    if argv[0] in ("-h", "--help"):
+        print(__doc__.strip())
+        return 0
     total = 0
     for path in argv:
         with open(path, encoding="utf-8") as f:
