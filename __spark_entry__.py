@@ -390,13 +390,15 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> str:
     settings: if the testdata changed, or the tree was built with other
     settings (or before they were recorded), the index is dropped and
     rebuilt instead of silently serving results built from other data
-    or being refused by the build's settings check; the per-stage
-    commit manifests still validate the index's own outputs for resume.
+    or being refused by the build's settings check.  So is a tree with
+    no committed snapshot (``_SNAPSHOT.json``), which lists no table to
+    resume from; otherwise the build resumes from the snapshot.
     """
     import json
     import shutil
 
     from search_engine_wikipedia_spark.operators.build import IndexBuilder
+    from search_engine_wikipedia_spark.sources import catalog
 
     tag = os.path.basename(os.path.normpath(sf_dir))
     root = f"/tmp/sewiki_index_{tag}"
@@ -409,11 +411,12 @@ def _engine_index(spark: SparkSession, sf_dir: str) -> str:
         if os.path.exists(fp_file):
             with open(fp_file) as f:
                 recorded = json.load(f)
-        if {k: recorded.get(k) for k in want} != want:
+        if ({k: recorded.get(k) for k in want} != want
+                or catalog.read_snapshot(root) is None):
             shutil.rmtree(root)
     # fingerprint is written BEFORE the build: a crash mid-build then
     # leaves a tree whose recorded fingerprint still matches the input,
-    # so the next invocation RESUMES from the per-stage manifests
+    # so the next invocation RESUMES from the committed snapshot
     # instead of rmtree-ing the partial build (stale-input detection is
     # unaffected — a mismatch is what triggers the rebuild above)
     os.makedirs(root, exist_ok=True)

@@ -25,9 +25,10 @@ Usage (cluster):
 No op takes an index setting: the shard size, tbucket count and
 analyzers are the ones ``jobs/build_index.py`` recorded in the index's
 ``_SCHEMA.json``, so maintenance cannot disagree with the build.  Every
-op is crash-safe (journaled) and any op's entry first finishes a
-crashed predecessor, so rerunning the same command after a failure
-always converges.  Emits one JSON line of what happened.
+op publishes its whole effect in one snapshot commit (``_SNAPSHOT.json``),
+so a failed op published nothing, and any op's entry first deletes
+the files a crashed predecessor left: rerunning the same command after
+a failure always converges.  Emits one JSON line of what happened.
 """
 
 from __future__ import annotations

@@ -527,8 +527,8 @@ class IndexBuilder:
         self.text_analyzer = ANALYZERS[text_analyzer]
         self.title_analyzer = ANALYZERS[title_analyzer]
         # every output-shaping setting, recorded in _SCHEMA.json at build
-        # (catalog.SETTINGS): the query path, maintenance and crash
-        # replays read these back instead of taking them as arguments
+        # (catalog.SETTINGS): the query path and maintenance read these
+        # back instead of taking them as arguments
         self.settings = {
             "text_analyzer": text_analyzer,
             "title_analyzer": title_analyzer,
@@ -549,11 +549,12 @@ class IndexBuilder:
 
     def _prepare_root(self, resume: bool) -> None:
         """Record the settings of a fresh build, or check a resumed
-        build's settings against the record.  ``resume=False`` empties
-        the index directory first: tombstones, pagerank, lineage and
-        journals of an older index over the same root hold doc_ids of
-        another corpus, and every stage check below trusts what is on
-        disk."""
+        build's settings against the record and sweep the files no
+        snapshot lists (a crashed stage's output).  ``resume=False``
+        empties the index directory first: tombstones, pagerank and
+        lineage of an older index over the same root hold doc_ids of
+        another corpus, and every stage check below trusts the
+        snapshot."""
         import os
         import shutil
 
@@ -582,6 +583,7 @@ class IndexBuilder:
                 f"build requests {self.settings}; pass resume=False to "
                 f"rebuild"
             )
+        catalog.sweep(root)
 
     def build(self, pages: DataFrame, resume: bool = True) -> None:
         root = self.index_dir
@@ -589,7 +591,7 @@ class IndexBuilder:
         self._prepare_root(resume)
 
         n_docs = None
-        if not catalog.is_complete(root, "docs"):
+        if not catalog.table_exists(root, "docs"):
             def _docs():
                 from pyspark.sql import Observation
 
@@ -616,7 +618,7 @@ class IndexBuilder:
             n_docs = docs.count()
         self.n_docs = n_docs
 
-        if not catalog.is_complete(root, "term_freqs"):
+        if not catalog.table_exists(root, "term_freqs"):
             def _tf():
                 tf = term_freqs(docs, self.n_segments, n_docs,
                                 text_analyzer=self.text_analyzer,
@@ -632,40 +634,35 @@ class IndexBuilder:
             self._timed("term_freqs", _tf)
         tf = catalog.read_table(spark, root, "term_freqs")
 
-        if not catalog.is_complete(root, "doc_stats"):
+        if not catalog.table_exists(root, "doc_stats"):
             def _ds():
                 ds = doc_stats_from_tf(docs, tf)
                 catalog.write_table(ds, root, "doc_stats")
             self._timed("doc_stats", _ds)
         doc_stats = catalog.read_table(spark, root, "doc_stats")
 
-        if not catalog.is_complete(root, "field_stats"):
+        if not catalog.table_exists(root, "field_stats"):
             def _fs():
                 fs = field_stats_from_doc_stats(doc_stats)
                 catalog.write_table(fs, root, "field_stats")
             self._timed("field_stats", _fs)
 
-        self._build_segments_resumable(tf)
-
-        if not catalog.is_complete(root, "postings"):
+        if not catalog.table_exists(root, "postings"):
+            self._build_segments_resumable(tf)
             self._timed("postings", lambda: merge_postings_stage(
                 spark, root, self.n_segments))
 
     def _build_segments_resumable(self, tf: DataFrame) -> None:
-        """Segment phase in ``segment_batches`` committed batches: lineage
-        rows land after each batch, so a killed build re-runs only the
-        segments with no lineage row (checkpointed segment builds)."""
+        """Segment phase in ``segment_batches`` batches, one commit
+        each, after the batch's lineage rows: a killed build re-runs
+        only the segments the snapshot does not list (checkpointed
+        segment builds); a batch that died before its commit left only
+        files the resume's sweep deletes."""
         root, spark = self.index_dir, self.spark
-        if catalog.is_complete(root, "postings_seg"):
-            return
-
         done = catalog.completed_segments(spark, root, "postings_seg")
-        all_segs = list(range(self.n_segments))
-        missing = [s for s in all_segs if s not in done]
-        if len(missing) == len(all_segs):
-            # fresh build (or resume with zero completed segments):
-            # clear any partial, uncommitted output
-            catalog.drop_table(root, "postings_seg")
+        missing = [s for s in range(self.n_segments) if s not in done]
+        if not missing:
+            return
 
         def _segs():
             per_batch = max(1, math.ceil(len(missing) / self.segment_batches))
@@ -674,34 +671,21 @@ class IndexBuilder:
                 seg_df = build_segments(tf.where(F.col("seg_id").isin(batch)))
                 # ~one file per segment instead of tasks × segments
                 seg_df = seg_df.repartition(len(batch), "seg_id")
-                # Dynamic partition OVERWRITE, not append: a crash in the
-                # window between the parquet job commit and the lineage
-                # append below leaves committed seg_id= dirs with no
-                # lineage row; resume re-runs those segments, and an
-                # append would then DUPLICATE their postings.  Dynamic
-                # overwrite replaces exactly the seg_id= dirs present in
-                # this batch's output, making segment re-runs idempotent.
-                # The table commits once, after the LAST batch — a commit
-                # per batch would let is_complete resume a half-built
-                # postings_seg.
-                catalog.overwrite_partitions(
-                    seg_df, catalog.table_path(root, "postings_seg"),
-                    "seg_id")
-                rows = (
-                    spark.read.parquet(catalog.table_path(root, "postings_seg"))
-                    .where(F.col("seg_id").isin(batch))
-                    .groupBy("seg_id")
-                    .agg(F.count("*").alias("n_terms"), F.sum("df").alias("n"))
-                    .collect()
-                )
-                catalog.append_lineage(spark, root, [
-                    {"stage": "postings_seg", "seg_id": int(r["seg_id"]),
-                     "n_terms": int(r["n_terms"]), "n_docs": int(r["n"])}
-                    for r in rows
-                ])
-            catalog.commit(catalog.table_path(root, "postings_seg"))
+                with catalog.transaction(root):
+                    catalog.write_table(seg_df, root, "postings_seg",
+                                        partition_by=["seg_id"], drop=[])
+                    rows = (
+                        catalog.read_table(spark, root, "postings_seg")
+                        .where(F.col("seg_id").isin(batch))
+                        .groupBy("seg_id")
+                        .agg(F.count("*").alias("n_terms"),
+                             F.sum("df").alias("n"))
+                        .collect()
+                    )
+                    catalog.append_lineage(spark, root, [
+                        {"stage": "postings_seg", "seg_id": int(r["seg_id"]),
+                         "n_terms": int(r["n_terms"]), "n_docs": int(r["n"])}
+                        for r in rows
+                    ])
 
-        if missing:
-            self._timed("postings_seg", _segs)
-        else:
-            catalog.commit(catalog.table_path(root, "postings_seg"))
+        self._timed("postings_seg", _segs)

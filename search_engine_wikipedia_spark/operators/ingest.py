@@ -27,38 +27,31 @@ global url rank), which affects nothing but tie-breaks among
 equal-scored docs (`tests/test_ingest.py` asserts score-level
 equivalence by url).
 
-Every mutation follows ONE write protocol:
+Every mutation follows ONE write protocol, the snapshot commit of
+``sources/catalog.py``:
 
 * **one entry wrapper** (``_maintenance``) around each public op:
-  refuse under a table catalog, take the exclusive writer lock, and —
-  for the outermost entry only — ``_settle`` the index;
-* **one settle order**: finish interrupted table swaps, roll back a
-  half-applied append/delete batch (``_INGEST.json``), then finish a
-  crashed compact (``_COMPACT.json``) and a crashed optimize
-  (``_OPTIMIZE.json``) from their journals.  No op, journal or replay
-  carries a setting: shard size, tbucket count and analyzers come from
-  the index's settings record (``_SCHEMA.json``, read through
-  ``catalog.read_schema_meta``), so a replay reads the same record the
-  crashed op read;
-* **two overwrite modes**, fixed per write: ``catalog.write_table``
-  replaces a whole table, ``catalog.overwrite_partitions`` replaces the
-  partitions present in the new data; neither reads nor sets the
-  session's ``partitionOverwriteMode``;
-* **one table swap** (``_replace_table``): write into a tmp dir,
-  commit, remove the old dir, rename; ``_finish_swaps`` closes the loss
-  window between the last two steps.
+  refuse under a table catalog, take the exclusive writer lock,
+  ``catalog.sweep`` the files no snapshot references, run the op in a
+  ``catalog.transaction`` and sweep again after its commit;
+* **writes add files**: an op's table writes list new files in its
+  working snapshot and unlist the ones they replace; its reads see its
+  own writes, and nothing is visible to readers before the one commit
+  at the end of the outermost op.  A nested op (upsert → delete +
+  append) joins that commit, so an upsert is atomic;
+* **one recovery rule**: a crash publishes nothing, and the next
+  entry's sweep deletes the crashed op's files.  A replay then runs
+  the op afresh against the last committed snapshot.  No op carries a
+  setting: shard size, tbucket count and analyzers come from the
+  index's settings record (``_SCHEMA.json``, read through
+  ``catalog.read_schema_meta``).
 
 ``stream_ingest`` runs the same append per micro-batch via
-``writeStream.foreachBatch``.  Exactly-once per epoch comes from the
-append journal: every table append journals the pre-append file
-snapshot BEFORE its write job launches (write-ahead intent), and an
-orphaned journal — a crash at ANY point of a batch, including between
-a parquet job's commit and the journal bookkeeping — is rolled back on
-the next entry by deleting (current files − snapshot) before the batch
-re-applies, so a replay can neither duplicate postings nor (the subtler
-failure) silently no-op on documents whose postings never landed.
-Appends are schema-guarded: a batch whose column names/types differ
-from the committed table fails before writing.
+``writeStream.foreachBatch``; a crashed epoch published nothing, so its
+replay re-applies the batch in full — it can neither duplicate postings
+nor silently no-op on documents whose postings never landed.  Appends
+are schema-guarded: a batch whose column names/types differ from the
+committed table fails before writing.
 """
 
 from __future__ import annotations
@@ -66,14 +59,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import schemas
 from ..sources import catalog
 from .build import (
     assign_doc_ids,
     build_segments,
     docs_from_pages,
     field_stats_from_doc_stats,
-    merge_postings_stage,
     merge_segments,
     tbucket_col,
     term_freqs,
@@ -81,25 +72,21 @@ from .build import (
 
 
 def _append_table(df: DataFrame, root: str, name: str) -> None:
-    df.write.mode("append").parquet(catalog.table_path(root, name))
-    catalog.commit(catalog.table_path(root, name))
-    if catalog.recorded_table_schema(root, name) is None:
-        # first append CREATED the table (e.g. tombstones) — register
-        # its schema so later appends are guarded against the record,
-        # not against a re-inference that mixed-type drift can fool
-        catalog.record_table_schema(root, name, df.schema)
+    """Append ``df`` to table ``name`` (creating it on the first
+    append), after the schema guard."""
+    _assert_append_schema(df, root, name)
+    catalog.write_table(df, root, name, drop=[])
 
 
 def _refuse_under_catalog(spark: SparkSession, op: str) -> None:
-    """Maintenance ops drive the parquet-DIR protocol: journaled file
-    snapshots, hard-link swaps, tmp-dir renames.  None of those file
-    writes register with a table catalog — running them with one
-    configured would leave every reader serving the catalog's stale
-    snapshot while the directory silently diverges.  Refuse loudly:
-    under Iceberg the equivalents are the format's NATIVE transactional
-    ops (``DELETE FROM`` row-deltas, ``rewrite_data_files`` for
-    compact/optimize, ``MERGE INTO`` for upsert), which make the whole
-    journal/rollback machinery unnecessary."""
+    """Maintenance ops drive the parquet-DIR protocol: file writes
+    published through ``_SNAPSHOT.json``.  None of those writes register
+    with a table catalog — running them with one configured would leave
+    every reader serving the catalog's stale snapshot while the
+    directory silently diverges.  Refuse loudly: under Iceberg the
+    equivalents are the format's NATIVE transactional ops (``DELETE
+    FROM`` row-deltas, ``rewrite_data_files`` for compact/optimize,
+    ``MERGE INTO`` for upsert)."""
     if catalog.iceberg_enabled(spark):
         raise NotImplementedError(
             f"{op} implements the parquet-dir maintenance protocol; "
@@ -112,20 +99,17 @@ def _refuse_under_catalog(spark: SparkSession, op: str) -> None:
 # ---------------------------------------------------------------------------
 # Single-writer enforcement: an exclusive advisory lock file.
 #
-# The maintenance journals (_INGEST/_COMPACT/_OPTIMIZE) assume ONE
-# writer — two concurrent maintenance CLIs would interleave journal
-# writes and could corrupt a table swap.  Every maintenance entry takes
+# The snapshot commit and the sweep assume ONE writer — a second one
+# would sweep the first one's uncommitted files, and the later commit
+# would drop the earlier one's.  Every outermost maintenance entry takes
 # an O_EXCL lock file carrying pid/host/timestamp; a second writer
 # refuses cleanly instead of corrupting.  A lock left by a crashed
 # process is broken when its pid is dead (same host) or its TTL
-# expired (the cross-host fallback) — crash recovery then proceeds via
-# the journals as usual.  Reentrant per process: maintenance ops call
-# each other (upsert → delete + append, a settle → compact/optimize), so
-# only the outermost entry acquires.
+# expired (the cross-host fallback) — the entry's sweep then clears
+# the crashed op's files as usual.
 # ---------------------------------------------------------------------------
 _LOCK_NAME = "_MAINTENANCE.lock"
 _LOCK_TTL_SEC = 6 * 3600
-_HELD_LOCKS: set[str] = set()
 
 
 class MaintenanceLockError(RuntimeError):
@@ -141,15 +125,6 @@ def _maintenance_lock(root: str):
 
     @contextlib.contextmanager
     def _cm():
-        key = os.path.realpath(root)
-        if key in _HELD_LOCKS:
-            yield  # reentrant: an outer maintenance op holds it
-            return
-        if not os.path.isdir(root):
-            # nothing to lock — let the op raise its own (clearer)
-            # missing-index error downstream
-            yield
-            return
         path = os.path.join(root, _LOCK_NAME)
         me = {"pid": os.getpid(), "host": socket.gethostname(),
               "ts": time.time()}
@@ -178,17 +153,15 @@ def _maintenance_lock(root: str):
                         f"writer {holder.get('pid')}@"
                         f"{holder.get('host')} since {holder.get('ts')}"
                         f" ({path}); concurrent maintenance would "
-                        f"corrupt the journals — retry after it "
+                        f"corrupt the snapshot — retry after it "
                         f"finishes, or remove the lock if that "
                         f"process is known dead"
                     )
                 with contextlib.suppress(OSError):
                     os.remove(path)  # break the stale lock, retry once
-        _HELD_LOCKS.add(key)
         try:
             yield
         finally:
-            _HELD_LOCKS.discard(key)
             with contextlib.suppress(OSError):
                 os.remove(path)
 
@@ -197,79 +170,33 @@ def _maintenance_lock(root: str):
 
 def _maintenance(fn):
     """Wrap a public maintenance op (signature ``(spark, root, ...)``):
-    refuse under a table catalog, take the writer lock, and — for the
-    outermost entry only — ``_settle`` the index before the body runs.
-    Nested entries (upsert → delete + append, a settle resuming a
-    compact) run their body alone: the outer entry already settled the
-    index and holds the lock."""
+    refuse under a table catalog, take the writer lock, sweep, run the
+    body in one ``catalog.transaction`` and sweep after its commit.  A
+    nested entry (upsert → delete + append) runs its body alone, inside
+    the outer op's transaction."""
     import functools
-    import os
 
     @functools.wraps(fn)
     def wrapper(spark, root, *args, **kwargs):
         _refuse_under_catalog(spark, fn.__name__)
-        outermost = os.path.realpath(root) not in _HELD_LOCKS
-        with _maintenance_lock(root):
-            if outermost:
-                _settle(spark, root, fn.__name__)
+        if catalog.in_transaction(root):
             return fn(spark, root, *args, **kwargs)
+        if catalog.read_snapshot(root) is None:
+            # the sweep would delete every table file of such a tree
+            raise ValueError(
+                f"{root} holds no committed index "
+                f"({catalog.SNAPSHOT_NAME}); build it with "
+                f"IndexBuilder.build"
+            )
+        with _maintenance_lock(root):
+            catalog.sweep(root)
+            with catalog.transaction(root):
+                out = fn(spark, root, *args, **kwargs)
+            # the files the previous commit retired are now unreferenced
+            catalog.sweep(root)
+        return out
 
     return wrapper
-
-
-def _settle(spark: SparkSession, root: str, op: str) -> None:
-    """Bring a crashed index back to a committed state, in one fixed
-    order: finish interrupted table swaps, roll back a half-applied
-    append/delete batch, then finish a crashed compact, then a crashed
-    optimize — except the one ``op`` is about to run, whose body
-    resumes its own journal.  The compact and optimize journals are
-    mutually exclusive: each op's entry settles the other before its
-    body writes its own."""
-    import os
-
-    _finish_swaps(root)
-    recover_incomplete(spark, root)
-    if op != "compact" and os.path.exists(
-            os.path.join(root, _COMPACT_JOURNAL)):
-        # filtered stats tables with stale postings: any tiered merge
-        # before the re-run would fold dead docs back in
-        compact(spark, root)
-    if op != "optimize_segments" and os.path.exists(
-            os.path.join(root, _OPTIMIZE_JOURNAL)):
-        optimize_segments(spark, root)
-
-
-# ---------------------------------------------------------------------------
-# Crash-atomicity: an append journal + rollback.
-#
-# append_pages touches several tables; a crash between the docs append
-# and the segment/postings writes would otherwise leave documents that
-# the url-dedup treats as "already ingested" but that have NO postings
-# — and a foreachBatch epoch REPLAY would then silently no-op.  Every
-# table append is therefore journaled (the exact files it added); on
-# the next append (or replay) an orphaned journal first rolls those
-# files back and rebuilds the derived stages, restoring the pre-batch
-# state, before the batch is applied afresh.  Single-writer assumed
-# (Structured Streaming serializes epochs; lineage rows of a
-# rolled-back attempt are informational only).
-# ---------------------------------------------------------------------------
-_JOURNAL = "_INGEST.json"
-
-
-def _journal_path(root: str) -> str:
-    import os
-
-    return os.path.join(root, _JOURNAL)
-
-
-def _table_files(root: str, name: str) -> set[str]:
-    from pathlib import Path
-
-    p = Path(catalog.table_path(root, name))
-    if not p.exists():
-        return set()
-    return {str(f.relative_to(p)) for f in p.rglob("*") if f.is_file()
-            and not f.name.startswith("_")}
 
 
 def _assert_append_schema(df: DataFrame, root: str, name: str) -> None:
@@ -280,10 +207,10 @@ def _assert_append_schema(df: DataFrame, root: str, name: str) -> None:
     crash or not depending on which footer Spark samples for inference.
 
     Checks against the schema RECORDED at write time (``_SCHEMA.json``
-    table registry), never a re-inference of the directory: inference
-    samples one footer, so an already-poisoned mixed-type dir reports
+    table registry), never a re-inference of the files: inference
+    samples one footer, so an already-poisoned mixed-type table reports
     whichever type that file holds.  An existing table with no recorded
-    schema predates the registry and is refused.
+    schema is refused.
     """
     want = catalog.recorded_table_schema(root, name)
     if want is None:
@@ -302,74 +229,6 @@ def _assert_append_schema(df: DataFrame, root: str, name: str) -> None:
         )
 
 
-def _journaled_append(df: DataFrame, root: str, name: str,
-                      journal: dict) -> None:
-    """Append with WRITE-AHEAD intent: the pre-append file snapshot is
-    journaled BEFORE the parquet job launches, so a crash anywhere —
-    including the window between the parquet commit and any post-write
-    bookkeeping — leaves a journal from which ``recover_incomplete``
-    can delete exactly (current files − snapshot).  Journaling after
-    the write would leak committed-but-unjournaled files in that
-    window, and the url-dedup replay would then silently skip docs
-    that have no postings."""
-    _assert_append_schema(df, root, name)
-    journal["before"][name] = sorted(_table_files(root, name))
-    catalog.write_json(_journal_path(root), journal)
-    _append_table(df, root, name)
-
-
-def recover_incomplete(spark: SparkSession, root: str) -> bool:
-    """Roll back a half-applied append (journal present): delete the
-    files it added, drop its segment partition, and rebuild the derived
-    stages (field_stats, postings) from the surviving tables.  Returns
-    True when a rollback happened."""
-    import json
-    import os
-    import shutil
-
-    jp = _journal_path(root)
-    if not os.path.exists(jp):
-        return False
-    with open(jp) as f:
-        journal = json.load(f)
-    for name, before in journal.get("before", {}).items():
-        tbl = catalog.table_path(root, name)
-        if not before:
-            # empty snapshot ⇒ the crashed batch CREATED this table
-            # (committed tables always hold ≥1 parquet file, even when
-            # empty) — remove the whole dir, markers included.  Leaving
-            # a parquet-less dir behind bricks every later reader:
-            # os.path.exists is true but spark.read.parquet cannot
-            # infer a schema (the delete_urls crash case).
-            shutil.rmtree(tbl, ignore_errors=True)
-            continue
-        # delete (current − snapshot): everything the half-applied batch
-        # added, whether or not its append job got as far as committing
-        for rel in sorted(_table_files(root, name) - set(before)):
-            try:
-                os.remove(os.path.join(tbl, rel))
-            except FileNotFoundError:
-                pass
-        catalog.commit(tbl)
-    steps = set(journal.get("steps", []))
-    if "postings_seg" in steps:
-        seg_dir = os.path.join(
-            catalog.table_path(root, "postings_seg"),
-            f"seg_id={journal['seg_id']}",
-        )
-        shutil.rmtree(seg_dir, ignore_errors=True)
-        catalog.commit(catalog.table_path(root, "postings_seg"))
-    if "field_stats" in steps:
-        doc_stats = catalog.read_table(spark, root, "doc_stats")
-        catalog.write_table(
-            field_stats_from_doc_stats(doc_stats), root, "field_stats"
-        )
-    if "remerge" in steps:
-        remerge(spark, root)
-    os.remove(jp)
-    return True
-
-
 @_maintenance
 def append_pages(
     spark: SparkSession,
@@ -383,10 +242,9 @@ def append_pages(
     (the reference's corpus is deduplicated upstream; updating in place
     would need doc tombstones, out of scope).
 
-    Crash-safe: every append is journaled and a half-applied batch from
-    a previous crash is rolled back on entry (``_settle``), so a
-    foreachBatch epoch replay re-applies the batch in full instead of
-    silently no-opping on the already-appended docs.
+    Crash-safe: the batch becomes visible in one commit, so a crash
+    publishes none of it and a foreachBatch epoch replay re-applies the
+    batch in full instead of silently no-opping on appended docs.
     """
     docs_tbl = catalog.read_table(spark, root, "docs")
     # footer stats: no Spark job for a driver-held scalar.  mx can
@@ -433,10 +291,7 @@ def append_pages(
             F.max("seg_id")).collect()[0][0]
     next_seg = int(seg_mx) + 1
 
-    journal: dict = {"seg_id": next_seg, "before": {}, "steps": []}
-    catalog.write_json(_journal_path(root), journal)
-
-    _journaled_append(new_docs, root, "docs", journal)
+    _append_table(new_docs, root, "docs")
     catalog.append_lineage(spark, root, [
         {"stage": "docs", "seg_id": next_seg, "n_docs": n_new}
     ])
@@ -452,7 +307,7 @@ def append_pages(
         text_analyzer=ANALYZERS[schema_meta["text_analyzer"]],
         title_analyzer=ANALYZERS[schema_meta["title_analyzer"]],
     ).withColumn("seg_id", F.lit(next_seg))
-    _journaled_append(tf_new, root, "term_freqs", journal)
+    _append_table(tf_new, root, "term_freqs")
 
     tf_delta = catalog.read_table(spark, root, "term_freqs").where(
         F.col("seg_id") == next_seg
@@ -460,34 +315,21 @@ def append_pages(
     from .build import doc_stats_from_tf
 
     ds_new = doc_stats_from_tf(new_docs, tf_delta)
-    _journaled_append(ds_new, root, "doc_stats", journal)
-    journal["steps"].append("field_stats")
-    catalog.write_json(_journal_path(root), journal)
+    _append_table(ds_new, root, "doc_stats")
     doc_stats = catalog.read_table(spark, root, "doc_stats")
     catalog.write_table(
         field_stats_from_doc_stats(doc_stats), root, "field_stats"
     )
 
-    journal["steps"].append("postings_seg")
-    catalog.write_json(_journal_path(root), journal)
     seg_df = build_segments(tf_delta).repartition(1, "seg_id")
-    catalog.overwrite_partitions(
-        seg_df, catalog.table_path(root, "postings_seg"), "seg_id")
-    catalog.commit(catalog.table_path(root, "postings_seg"))
+    catalog.write_table(seg_df, root, "postings_seg",
+                        partition_by=["seg_id"], drop=[])
     catalog.append_lineage(spark, root, [
         {"stage": "postings_seg", "seg_id": next_seg, "n_docs": n_new}
     ])
 
-    journal["steps"].append("remerge")
-    catalog.write_json(_journal_path(root), journal)
     remerge(spark, root, delta_seg=next_seg)
-    import os
-
-    os.remove(_journal_path(root))  # batch fully applied
     return n_new
-
-
-_OPTIMIZE_JOURNAL = "_OPTIMIZE.json"
 
 
 @_maintenance
@@ -505,88 +347,59 @@ def optimize_segments(spark: SparkSession, root: str,
     segments hold disjoint doc ranges, ascending in seg_id — so the
     monotone-salt merge and the tiered ingest path work unchanged; the
     global ``postings`` table is untouched (its blobs don't depend on
-    segment structure).
-
-    Crash-safe two-phase journal (``_OPTIMIZE.json``, written before
-    any rewrite): phase is detected from the term_freqs footer
-    max(seg_id) — still the journaled ``pre_max`` means the renumber
-    has not landed (the table swap is atomic), ``post_max`` means it
-    has; the two can never be equal because coalescing strictly lowers
-    the max.  Either way the segment re-encode is re-derivable from
-    term_freqs, so a resume just replays the remaining phases.
-    Returns the segment count after the call.
+    segment structure).  The renumbered term_freqs and the re-encoded
+    segments land in one commit.  Returns the segment count after the
+    call.
     """
-    import json
     import math
-    import os
 
-    jp = os.path.join(root, _OPTIMIZE_JOURNAL)
-    if os.path.exists(jp):
-        with open(jp) as f:
-            j = json.load(f)
-        mapping = {int(k): int(v) for k, v in j["mapping"].items()}
-        pre_max, post_max = int(j["pre_max"]), int(j["post_max"])
-        post_n = post_max + 1
-    else:
-        tf = catalog.read_table(spark, root, "term_freqs")
-        rows = (
-            tf.groupBy("seg_id").agg(
-                F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()
-        )
-        segs = sorted((int(r["seg_id"]), int(r["mn"]), int(r["mx"]),
-                       int(r["n"])) for r in rows)
-        if len(segs) <= max_segments:
-            return len(segs)
-        for a, b in zip(segs, segs[1:]):
-            if a[2] >= b[1]:
-                raise AssertionError(
-                    f"segment doc ranges overlap ({a} vs {b}); the "
-                    "monotone invariant is broken — rebuild the index"
-                )
-        total = sum(s[3] for s in segs)
-        target = math.ceil(total / max_segments)
-        groups: list[list[int]] = [[]]
-        acc = 0
-        for seg_id, _, _, n in segs:
-            if acc >= target and len(groups) < max_segments:
-                groups.append([])
-                acc = 0
-            groups[-1].append(seg_id)
-            acc += n
-        mapping = {s: gi for gi, grp in enumerate(groups) for s in grp}
-        pre_max, post_max = segs[-1][0], len(groups) - 1
-        post_n = post_max + 1
-        catalog.write_json(jp, {"mapping": mapping, "pre_max": pre_max,
-                                "post_max": post_max})
+    tf = catalog.read_table(spark, root, "term_freqs")
+    rows = (
+        tf.groupBy("seg_id").agg(
+            F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+        ).collect()
+    )
+    segs = sorted((int(r["seg_id"]), int(r["mn"]), int(r["mx"]),
+                   int(r["n"])) for r in rows)
+    if len(segs) <= max_segments:
+        return len(segs)
+    for a, b in zip(segs, segs[1:]):
+        if a[2] >= b[1]:
+            raise AssertionError(
+                f"segment doc ranges overlap ({a} vs {b}); the "
+                "monotone invariant is broken — rebuild the index"
+            )
+    total = sum(s[3] for s in segs)
+    target = math.ceil(total / max_segments)
+    groups: list[list[int]] = [[]]
+    acc = 0
+    for seg_id, _, _, n in segs:
+        if acc >= target and len(groups) < max_segments:
+            groups.append([])
+            acc = 0
+        groups[-1].append(seg_id)
+        acc += n
+    mapping = {s: gi for gi, grp in enumerate(groups) for s in grp}
+    post_n = len(groups)
 
-    _, _, cur_max = catalog.footer_stats(root, "term_freqs", "seg_id")
-    if cur_max is None:  # stats-less writer — same fallback as ingest
-        cur_max = catalog.read_table(spark, root, "term_freqs").agg(
-            F.max("seg_id")).collect()[0][0]
-    if int(cur_max) == pre_max:
-        # phase 1: renumber term_freqs (atomic swap)
-        m = F.create_map(
-            *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]
-        )
-        tf = catalog.read_table(spark, root, "term_freqs")
-        new_tf = tf.withColumn(
-            "seg_id", m[F.col("seg_id")].cast("int"))
-        _replace_table(root, "term_freqs",
-                       lambda tmp: new_tf.write.parquet(tmp))
+    m = F.create_map(
+        *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]
+    )
+    catalog.write_table(
+        tf.withColumn("seg_id", m[F.col("seg_id")].cast("int")),
+        root, "term_freqs")
 
-    # phase 2: re-encode segment postings from the renumbered table
+    # re-encode segment postings from the renumbered table
     tf_new = catalog.read_table(spark, root, "term_freqs")
     seg_df = build_segments(tf_new).repartition(post_n, "seg_id")
-    _replace_table(root, "postings_seg",
-                   lambda tmp: seg_df.write.partitionBy("seg_id").parquet(tmp))
+    catalog.write_table(seg_df, root, "postings_seg",
+                        partition_by=["seg_id"])
 
     catalog.append_lineage(spark, root, [{
         "stage": "optimize", "seg_id": post_n,
-        "checksum": f"pre_max={pre_max}",
+        "checksum": f"pre_max={segs[-1][0]}",
     }])
-    os.remove(jp)
     return post_n
 
 
@@ -616,14 +429,10 @@ def upsert_pages(spark: SparkSession, root: str,
     makes unchanged recrawls free, which at crawl scale is most of
     every batch.
 
-    The old copy stops ranking the moment step 1 lands; the new copy
-    ranks after step 2; ``compact`` physically removes the old rows on
-    its own cadence.  Crash-safe end-to-end: both steps journal, and a
-    crash between them replays as (delete→0 marked) + append.
+    Both steps join this op's one commit: readers see the old copy
+    until the new one ranks, and a crash anywhere publishes neither;
+    ``compact`` physically removes the old rows on its own cadence.
     """
-    # the entry wrapper settled crashed state BEFORE this content
-    # comparison: the changed set is computed against the recovered
-    # table, not against files a rollback is about to delete
     incoming = docs_from_pages(pages).select(
         "url",
         F.xxhash64("title", "clean_text", F.to_json("links"))
@@ -652,72 +461,37 @@ def upsert_pages(spark: SparkSession, root: str,
 def remerge(spark: SparkSession, root: str,
             delta_seg: int | None = None,
             buckets: list[int] | None = None) -> None:
-    """Re-merge segments into the global postings table.
-
-    ``delta_seg=None`` → FULL merge over all segments: the build's own
-    merge stage (`build.merge_postings_stage`) with n_segments = total
-    count, so the two paths cannot drift.  Crash recovery uses this
-    path — it restores a consistent postings table from whatever
-    segments survive, regardless of how much of a tiered write landed.
-
-    ``delta_seg`` set → TIERED merge: only the tbucket partitions that
-    contain the delta segment's terms are rewritten (dynamic partition
-    overwrite); every other bucket's files are untouched.  Sound
-    because the merge is independent per (term, field) — a term absent
-    from the delta has identical postings/df/cf before and after — and
-    each rewritten bucket re-merges ALL segments' rows for ALL terms
-    hashing into it, not just the delta's.  Cost is O(|delta vocab| /
-    n_term_buckets × index) instead of O(index): with buckets sized to
-    the vocabulary (4096+ at 100 TB), a 1% crawl delta rewrites a few
-    % of postings files instead of all of them.
-
-    ``buckets`` set (compaction path) → tiered merge of exactly those
-    tbucket partitions, regardless of segment; a listed bucket whose
-    terms ALL vanished (no surviving segment rows hash into it) has its
-    partition directory dropped explicitly, since dynamic overwrite
-    only replaces partitions present in the new data.
+    """Tiered re-merge of the segments into the global postings table:
+    only the tbucket partitions that hold the delta segment's terms
+    (``delta_seg``, the append path) or the given ``buckets`` (the
+    compaction path) are rewritten; every other bucket's files stay
+    listed.  Sound because the merge is independent per (term, field)
+    — a term absent from the delta has identical postings/df/cf before
+    and after — and each rewritten bucket re-merges ALL segments' rows
+    for ALL terms hashing into it, not just the delta's.  A bucket
+    whose terms all vanished gets no new files, so it leaves the
+    snapshot.  Cost is O(|delta vocab| / n_term_buckets × index)
+    instead of O(index): with buckets sized to the vocabulary (4096+ at
+    100 TB), a 1% crawl delta rewrites a few % of postings files
+    instead of all of them.
     """
-    import os
-    import shutil
-
     bucket_col = tbucket_col(catalog.read_schema_meta(root)["n_term_buckets"])
     seg = catalog.read_table(spark, root, "postings_seg")
-    n_total = int(seg.agg(F.max("seg_id")).collect()[0][0]) + 1
-    if delta_seg is None and buckets is None:
-        merge_postings_stage(spark, root, n_total)
-        return
-
     if buckets is None:
         # ≤ n_term_buckets ints — bounded driver traffic at any scale
         buckets = sorted(
             r["b"] for r in seg.where(F.col("seg_id") == delta_seg)
             .select(bucket_col.alias("b")).distinct().collect()
         )
-        if not buckets:  # delta had docs but no indexable terms
-            return
-        # an append's buckets contain the delta's own rows by
-        # construction — every one is live, no probe scan needed
-        live = set(buckets)
-    else:
-        if not buckets:
-            return
-        # compaction: a bucket whose terms all died has no surviving
-        # rows — probe which listed buckets still hold anything
-        live = {
-            r["b"] for r in seg.where(bucket_col.isin(buckets))
-            .select(bucket_col.alias("b")).distinct().collect()
-        }
-    post_root = catalog.table_path(root, "postings")
-    for b in buckets:
-        if b not in live:
-            shutil.rmtree(os.path.join(post_root, f"tbucket={b}"),
-                          ignore_errors=True)
-    if live:
-        merged = merge_segments(
-            seg.where(bucket_col.isin(sorted(live))), root, n_total
-        ).repartition(len(live), "tbucket")
-        catalog.overwrite_partitions(merged, post_root, "tbucket")
-    catalog.commit(post_root)
+    if not buckets:  # delta had docs but no indexable terms
+        return
+    n_total = max(catalog.completed_segments(spark, root, "postings_seg")) + 1
+    merged = merge_segments(
+        seg.where(bucket_col.isin(buckets)), root, n_total
+    ).repartition(len(buckets), "tbucket")
+    catalog.write_table(
+        merged, root, "postings", partition_by=["tbucket"],
+        drop=catalog.partition_files(root, "postings", "tbucket", buckets))
     catalog.append_lineage(spark, root, [{
         "stage": "postings_tiered",
         "seg_id": delta_seg,
@@ -728,156 +502,59 @@ def remerge(spark: SparkSession, root: str,
 # ---------------------------------------------------------------------------
 # Deletes: tombstones + compaction (Lucene live-docs semantics)
 # ---------------------------------------------------------------------------
-_COMPACT_JOURNAL = "_COMPACT.json"
-
-
-def _finish_swaps(root: str) -> None:
-    """Complete a table swap interrupted by a crash.
-
-    ``_replace_table`` renames ``<name>.__tmp`` over ``<name>``; the
-    only loss window is after the old dir is removed and before the
-    rename.  At entry of every maintenance op: a committed ``__tmp``
-    whose target is missing is renamed into place; any other ``__tmp``
-    is a pre-swap leftover and is deleted (its target is intact, and
-    the op's journal re-runs the swap idempotently)."""
-    import shutil
-
-    from pathlib import Path
-
-    for tmp in Path(root).glob("*.__tmp"):
-        target = Path(str(tmp)[: -len(".__tmp")])
-        if not target.exists() and (tmp / catalog.MANIFEST_NAME).exists():
-            tmp.rename(target)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-    for scr in Path(root).glob("*.__scratch"):
-        # Spark staging dir of a selective rewrite that never reached
-        # its commit — always disposable
-        shutil.rmtree(scr, ignore_errors=True)
-
-
-def _replace_table(root: str, name: str, fill) -> None:
-    """Replace table ``name`` wholesale — the one table swap.
-    ``fill(tmp)`` writes the new contents into the (cleared)
-    ``<name>.__tmp`` dir, which is committed, then swapped in: remove
-    the old dir, rename.  A crash before the removal leaves the old
-    table intact; one between removal and rename is completed by
-    ``_finish_swaps``."""
-    import os
-    import shutil
-
-    final = catalog.table_path(root, name)
-    tmp = final + ".__tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    fill(tmp)
-    catalog.commit(tmp)
-    shutil.rmtree(final, ignore_errors=True)
-    os.rename(tmp, final)
-
-
-def _affected_files(path: str, dead) -> tuple[list[str], list[str]]:
-    """Split a flat table dir's parquet files into (affected,
-    unaffected) by whether the file's ``doc_id`` footer min/max range
-    intersects the sorted dead-id array.  Footer reads only — a few KB
-    per file, no data pages.  A file without usable statistics is
-    conservatively treated as affected."""
+def _affected_files(root: str, name: str, dead) -> list[str]:
+    """The files of flat table ``name`` whose ``doc_id`` footer min/max
+    range intersects the sorted dead-id array.  Footer reads only — a
+    few KB per file, no data pages.  A non-empty file without usable
+    statistics is conservatively treated as affected."""
     import numpy as np
 
-    affected, unaffected = [], []
-    for f, _, mn, mx in catalog.file_stats(path, "doc_id"):
-        hit = mn is None
-        if not hit:
+    affected = []
+    for f, n, mn, mx in catalog.file_stats(root, name, "doc_id"):
+        hit = n > 0 and mn is None
+        if n and not hit:
             i = int(np.searchsorted(dead, mn, side="left"))
             hit = i < dead.size and dead[i] <= mx
-        (affected if hit else unaffected).append(f)
-    return affected, unaffected
-
-
-def _dead_df(spark: SparkSession, root: str, dead) -> DataFrame:
-    """The dead-id set as a one-column DataFrame for join-based plans.
-
-    Source of truth is the ``tombstones`` TABLE when it still exists
-    (zero driver→executor data movement — executors read parquet), with
-    a ``createDataFrame`` fallback for the one resume window where a
-    crashed compact already dropped it (journal survives, rewrites are
-    no-op re-checks).  Never materialized into the plan as an IN-list:
-    a mass-delete's million-literal ``isin`` blows up Catalyst and
-    codegen, while an anti-join degrades gracefully (AQE broadcasts a
-    small dead set and shuffles a large one)."""
-    if catalog.table_exists(root, "tombstones"):
-        return catalog.read_table(spark, root, "tombstones").select("doc_id")
-    return spark.createDataFrame(
-        [(int(d),) for d in dead], schema="doc_id long")
+        if hit:
+            affected.append(f)
+    return affected
 
 
 def _survivors(df: DataFrame, dead_df: DataFrame) -> DataFrame:
     """Rows of ``df`` whose doc_id is not in the dead set — a left-anti
-    join, the scale-safe replacement for a driver-held ``isin`` filter
-    (see ``_dead_df``).  Column order of ``df`` is preserved, so the
-    rewritten files stay schema-identical to the hard-linked ones."""
-    return df.join(dead_df, "doc_id", "left_anti")
+    join, never a driver-held ``isin`` filter: a mass-delete's
+    million-literal ``isin`` blows up Catalyst and codegen, while an
+    anti-join degrades gracefully (AQE broadcasts a small dead set and
+    shuffles a large one).  Column order of ``df`` is kept (the join
+    would lead with ``doc_id``), so the rewritten files and the schema
+    the write records stay identical to the table's."""
+    return df.join(dead_df, "doc_id", "left_anti").select(*df.columns)
 
 
-def _selective_rewrite(spark: SparkSession, root: str, name: str,
-                       dead, dead_df: DataFrame | None = None) -> int:
-    """Remove rows with ``doc_id`` in ``dead`` from flat table
-    ``name``, rewriting ONLY the parquet files whose doc_id footer
-    range intersects the dead set; every untouched file is HARD-LINKED
-    into the swap dir (a metadata op, no data copied).  The pass is
-    O(touched files + total file count), not O(table) — build writes
-    are doc-ordered (build.py term_freqs note), so a contiguous
-    recrawl/takedown batch touches a handful of files out of millions.
-    Returns the number of files rewritten; zero means the table held no
-    dead rows and NO Spark job ran at all.  Crash-safe: the links and
-    the survivors land through ``_replace_table``; the Spark staging dir
-    is ``<name>.__scratch``.
-    The driver-held ``dead`` list feeds ONLY the footer min/max pruning
-    (a numpy binary search, cheap at any realistic tombstone count);
-    the row filter itself is an anti-join against ``dead_df`` so the
-    executed plan carries no literal id list.
+def _selective_rewrite(root: str, name: str, dead,
+                       dead_df: DataFrame) -> int:
+    """Remove the rows whose ``doc_id`` is in the dead set from flat
+    table ``name``, rewriting ONLY the parquet files whose doc_id
+    footer range intersects the sorted array ``dead``: their survivors
+    become new files and the rewritten ones leave the snapshot, while
+    every other file simply stays listed.  The pass is O(touched files
+    + total file count), not O(table) — build writes are doc-ordered
+    (build.py term_freqs note), so a contiguous recrawl/takedown batch
+    touches a handful of files out of millions.  Returns the number of
+    files rewritten; zero means the table held no dead rows and NO
+    Spark job ran at all.
+    The driver-held ``dead`` array feeds ONLY the footer min/max
+    pruning (a numpy binary search, cheap at any realistic tombstone
+    count); the row filter itself is an anti-join against ``dead_df``
+    so the executed plan carries no literal id list.
     With Iceberg enabled this function is the rewrite-data-files action
     of a positional DELETE, driven by the same file-level stats.
     """
-    import os
-    import shutil
-    import uuid
-    from pathlib import Path
-
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    final = catalog.table_path(root, name)
-    if dead_df is None:
-        dead_df = _dead_df(spark, root, dead)
-    dead = np.asarray(sorted(int(d) for d in dead), dtype=np.int64)
-    affected, unaffected = _affected_files(final, dead)
-    if not affected:
-        return 0
-    scratch = final + ".__scratch"
-    run_id = uuid.uuid4().hex[:12]  # a rerun must not collide with a
-    #                                 prior compact's surviving files
-
-    def fill(tmp: str) -> None:
-        shutil.rmtree(scratch, ignore_errors=True)
-        os.makedirs(tmp)
-        for f in unaffected:
-            os.link(f, os.path.join(tmp, os.path.basename(f)))
-        (
-            _survivors(spark.read.parquet(*affected), dead_df)
-            .write.mode("overwrite").parquet(scratch)
-        )
-        parts = sorted(Path(scratch).glob("*.parquet"))
-        kept = [f for f in parts
-                if pq.ParquetFile(str(f)).metadata.num_rows > 0]
-        if not unaffected and not kept:
-            # every row died: keep one empty part so the dir stays readable
-            kept = parts[:1]
-        for i, f in enumerate(kept):
-            os.rename(str(f),
-                      os.path.join(tmp, f"compact-{run_id}-{i:05d}.parquet"))
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    _replace_table(root, name, fill)
+    affected = _affected_files(root, name, dead)
+    if affected:
+        survivors = _survivors(
+            dead_df.sparkSession.read.parquet(*affected), dead_df)
+        catalog.write_table(survivors, root, name, drop=affected)
     return len(affected)
 
 
@@ -898,8 +575,6 @@ def delete_urls(spark: SparkSession, root: str, urls) -> int:
     Unknown urls are ignored; re-deleting is a no-op (idempotent, so a
     replayed batch cannot double-tombstone).
     """
-    import os
-
     docs_tbl = catalog.read_table(spark, root, "docs")
     if isinstance(urls, DataFrame):
         # A DataFrame victim feed (e.g. a takedown table, a recrawl
@@ -925,9 +600,7 @@ def delete_urls(spark: SparkSession, root: str, urls) -> int:
     n = victims.count()
     if n == 0:
         return 0
-    journal: dict = {"before": {}, "steps": []}
-    _journaled_append(victims, root, "tombstones", journal)
-    os.remove(_journal_path(root))
+    _append_table(victims, root, "tombstones")
     return n
 
 
@@ -941,13 +614,8 @@ def delete_where(spark: SparkSession, root: str, predicate) -> int:
     Thin wrapper over :func:`delete_urls`'s DataFrame path: the
     predicate is pushed into the docs scan (column-pruned to ``url``),
     the victim set stays distributed end-to-end, and all the
-    tombstone-lifecycle guarantees (idempotence, journaling, lock,
+    tombstone-lifecycle guarantees (idempotence, one commit, lock,
     instant query-path exclusion, compact convergence) are inherited.
-    The entry wrapper settles the index BEFORE the docs read (the
-    nested delete_urls entry does not settle again): a DataFrame
-    snapshots its file listing at read time, and listing a crashed,
-    not-yet-recovered table would pin files that recovery is about to
-    remove.
     """
     docs = catalog.read_table(spark, root, "docs")
     return delete_urls(spark, root, docs.where(predicate).select("url"))
@@ -972,78 +640,48 @@ def compact(spark: SparkSession, root: str) -> int:
     the deleted docs' terms — O(touched partitions), not O(index),
     except when a mass delete genuinely touches everything.
 
-    Idempotent end-to-end: the affected segment/bucket sets are
-    journaled (``_COMPACT.json``) BEFORE any rewrite — recomputing them
-    afterwards would find nothing (the filtered term_freqs no longer
-    contains the dead docs) and leave postings stale — and the
-    tombstones table is dropped last, so a crash anywhere re-runs the
-    remaining steps on the next maintenance call; per-table swaps are
-    crash-safe via ``_replace_table``.
+    Every rewrite and the tombstones drop land in one commit; a crash
+    publishes none of them, and the next call re-runs compact from the
+    still-listed tombstones.
     """
-    import json
-    import os
-    import shutil
+    import numpy as np
 
-    jp = os.path.join(root, _COMPACT_JOURNAL)
-    if os.path.exists(jp):
-        # resuming a crashed compact: every affected-set below was
-        # computed against the PRE-rewrite tables — reuse it verbatim
-        with open(jp) as f:
-            j = json.load(f)
-        dead = j["dead"]
-        affected_segs = j["segs"]
-        affected_buckets = j["buckets"]
-    else:
-        if not catalog.table_exists(root, "tombstones"):
-            return 0
-        # driver copy feeds ONLY footer min/max pruning + the resume
-        # journal; every Spark plan joins the tombstones TABLE instead
-        # (bounded by compaction cadence — pyarrow, no Spark job)
-        dead = [int(v) for v in catalog.read_table_arrow(
-            root, "tombstones", ["doc_id"])["doc_id"].to_pylist()]
-        if not dead:
-            catalog.drop_table(root, "tombstones")
-            return 0
+    if not catalog.table_exists(root, "tombstones"):
+        return 0
+    # driver copy feeds ONLY footer min/max pruning; every Spark plan
+    # joins the tombstones TABLE instead (bounded by compaction
+    # cadence — pyarrow, no Spark job)
+    dead = np.sort(catalog.read_table_arrow(
+        root, "tombstones", ["doc_id"])["doc_id"].to_numpy(
+        zero_copy_only=False).astype(np.int64))
+    n_total = catalog.footer_stats(root, "docs")[0]
+    if n_total - dead.size <= 0:
+        raise ValueError(
+            "compact would delete the entire corpus; drop the "
+            "index and rebuild instead"
+        )
+    dead_df = catalog.read_table(spark, root, "tombstones").select("doc_id")
+    # the affected sets are computed before any rewrite: afterwards the
+    # filtered term_freqs no longer holds the dead docs.  The scan reads
+    # only the term_freqs files whose doc_id footer range holds a dead
+    # doc, and semi-joins, not isin (see _survivors)
+    tf_files = _affected_files(root, "term_freqs", dead)
+    affected_segs, affected_buckets = [], []
+    if tf_files:
         n_term_buckets = catalog.read_schema_meta(root)["n_term_buckets"]
-        import numpy as np
-
-        n_total = catalog.footer_stats(root, "docs")[0]
-        if n_total - len(dead) <= 0:
-            raise ValueError(
-                "compact would delete the entire corpus; drop the "
-                "index and rebuild instead"
-            )
-        # affected-set scan reads only the term_freqs files whose
-        # doc_id footer range holds a dead doc, not the whole table
-        dead_arr = np.asarray(sorted(dead), dtype=np.int64)
-        tf_files, _ = _affected_files(
-            catalog.table_path(root, "term_freqs"), dead_arr)
-        if tf_files:
-            # semi-join, not isin: the affected-set scan must survive a
-            # mass delete whose id list would not fit in a Catalyst
-            # expression tree (see _dead_df)
-            hit = spark.read.parquet(*tf_files).join(
-                _dead_df(spark, root, dead), "doc_id", "left_semi")
-            agg = hit.agg(
-                F.collect_set("seg_id").alias("segs"),
-                F.collect_set(tbucket_col(n_term_buckets)).alias("buckets"),
-            ).collect()[0]
-            affected_segs = sorted(agg["segs"])
-            affected_buckets = sorted(agg["buckets"])
-        else:
-            affected_segs, affected_buckets = [], []
-        catalog.write_json(jp, {"dead": dead, "segs": affected_segs,
-                                "buckets": affected_buckets})
+        agg = spark.read.parquet(*tf_files).join(
+            dead_df, "doc_id", "left_semi").agg(
+            F.collect_set("seg_id").alias("segs"),
+            F.collect_set(tbucket_col(n_term_buckets)).alias("buckets"),
+        ).collect()[0]
+        affected_segs = sorted(agg["segs"])
+        affected_buckets = sorted(agg["buckets"])
 
     # selective, footer-stats-driven rewrites: only the parquet files
-    # whose doc_id range holds a dead doc are rewritten, the rest are
-    # hard-linked — O(touched files), and a resume where a table was
-    # already swapped finds zero affected files and runs no job at all
-    dead_df = _dead_df(spark, root, dead)
-    rewritten: dict[str, int] = {}
-    for tbl in ("docs", "doc_stats", "term_freqs"):
-        rewritten[tbl] = _selective_rewrite(spark, root, tbl, dead,
-                                            dead_df)
+    # whose doc_id range holds a dead doc are rewritten — O(touched
+    # files)
+    rewritten = {tbl: _selective_rewrite(root, tbl, dead, dead_df)
+                 for tbl in ("docs", "doc_stats", "term_freqs")}
     catalog.write_table(
         field_stats_from_doc_stats(
             catalog.read_table(spark, root, "doc_stats")),
@@ -1051,53 +689,42 @@ def compact(spark: SparkSession, root: str) -> int:
     )
 
     # re-encode only the segments that lost docs; a segment whose docs
-    # all died gets its partition dir dropped explicitly (dynamic
-    # overwrite only replaces partitions PRESENT in the new data)
+    # all died gets no new files and leaves the snapshot
     if affected_segs:
-        tf_new = catalog.read_table(spark, root, "term_freqs")
-        seg_rows = tf_new.where(F.col("seg_id").isin(affected_segs))
-        live_segs = {
-            r["seg_id"] for r in
-            seg_rows.select("seg_id").distinct().collect()
-        }
-        seg_root = catalog.table_path(root, "postings_seg")
-        for s in affected_segs:
-            if s not in live_segs:
-                shutil.rmtree(os.path.join(seg_root, f"seg_id={s}"),
-                              ignore_errors=True)
-        if live_segs:
-            seg_df = build_segments(seg_rows).repartition(
-                max(1, len(live_segs)), "seg_id")
-            catalog.overwrite_partitions(seg_df, seg_root, "seg_id")
-        catalog.commit(seg_root)
+        seg_rows = catalog.read_table(spark, root, "term_freqs").where(
+            F.col("seg_id").isin(affected_segs))
+        seg_df = build_segments(seg_rows).repartition(
+            len(affected_segs), "seg_id")
+        catalog.write_table(
+            seg_df, root, "postings_seg", partition_by=["seg_id"],
+            drop=catalog.partition_files(root, "postings_seg", "seg_id",
+                                         affected_segs))
         catalog.append_lineage(spark, root, [
-            {"stage": "compact_seg", "seg_id": int(s), "n_docs": len(dead)}
+            {"stage": "compact_seg", "seg_id": int(s), "n_docs": dead.size}
             for s in affected_segs
         ])
 
     remerge(spark, root, buckets=affected_buckets)
 
-    pr_path = catalog.table_path(root, "pagerank")
-    if os.path.exists(pr_path):
+    if catalog.table_exists(root, "pagerank"):
         # drop deleted rows; survivor priors stay as built (the link
         # graph prior is a build-time artifact, refreshed by the next
         # pagerank job, not by compaction)
         rewritten["pagerank"] = _selective_rewrite(
-            spark, root, "pagerank", dead, dead_df)
+            root, "pagerank", dead, dead_df)
 
     # O(touched) evidence in lineage: per table, how many files this
-    # compact actually REWROTE (n_terms) vs hard-linked, for the dead
-    # count it processed (n_docs) — the quantity the selective-rewrite
-    # claim is graded on at mass-delete cadences
+    # compact actually REWROTE (n_terms) for the dead count it
+    # processed (n_docs) — the quantity the selective-rewrite claim is
+    # graded on at mass-delete cadences
     catalog.append_lineage(spark, root, [
-        {"stage": f"compact_rewrite:{tbl}", "n_docs": len(dead),
+        {"stage": f"compact_rewrite:{tbl}", "n_docs": dead.size,
          "n_terms": n_files}
         for tbl, n_files in rewritten.items()
     ])
 
     catalog.drop_table(root, "tombstones")
-    os.remove(jp)
-    return len(dead)
+    return int(dead.size)
 
 
 def stream_ingest(spark: SparkSession, root: str, stream_pages: DataFrame,
@@ -1106,8 +733,8 @@ def stream_ingest(spark: SparkSession, root: str, stream_pages: DataFrame,
 
     ``stream_pages`` is a streaming DataFrame with the pages schema;
     returns the started StreamingQuery.  The foreachBatch body is the
-    idempotent batch append (segment overwrite + url dedup), so an
-    epoch replay after failure cannot duplicate postings.  With
+    one-commit batch append with url dedup, so an epoch replay after
+    failure cannot duplicate postings.  With
     ``upsert=True`` each micro-batch runs the recrawl flow
     (``upsert_pages``): already-indexed urls whose content changed are
     tombstoned and re-ingested with the batch's content — a

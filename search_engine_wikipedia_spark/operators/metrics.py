@@ -17,7 +17,6 @@ outliers here LONG before they show up as a slow query.
 from __future__ import annotations
 
 import os
-from pathlib import Path
 
 from ..sources import catalog
 
@@ -39,20 +38,21 @@ def _partition_values(rel: str) -> dict:
 
 
 def table_partition_metrics(root: str, name: str) -> list[dict]:
-    """One row per parquet file: relative path, parsed partition
-    values, row count and byte size — footer reads only."""
+    """One row per parquet file the snapshot lists: path relative to
+    the table dir, parsed partition values, row count and byte size —
+    footer reads only."""
     import pyarrow.parquet as pq
 
-    base = Path(catalog.table_path(root, name))
+    base = catalog.table_path(root, name)
     out = []
-    for f in sorted(base.rglob("*.parquet")):
-        rel = str(f.relative_to(base))
-        md = pq.ParquetFile(str(f)).metadata
+    for f in sorted(catalog.table_files(root, name) or []):
+        rel = os.path.relpath(f, base)
+        md = pq.ParquetFile(f).metadata
         out.append({
             "file": rel,
             "partition": _partition_values(rel),
             "rows": md.num_rows,
-            "bytes": f.stat().st_size,
+            "bytes": os.path.getsize(f),
             "row_groups": md.num_row_groups,
         })
     return out

@@ -37,7 +37,6 @@ the kernel:
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 from typing import Any as _tAny
@@ -284,8 +283,12 @@ class SearchIndex:
             "title": ANALYZERS[meta["title_analyzer"]],
         }
         self.n_term_buckets = meta["n_term_buckets"]
-        self.postings = catalog.read_table(spark, index_dir, "postings")
-        fs = catalog.read_table(spark, index_dir, "field_stats").collect()
+        # every table is served from the snapshot published at open: a
+        # commit after it retires files this reader still reads, and
+        # they stay on disk through the next commit
+        self.snapshot = catalog.read_snapshot(index_dir)
+        self.postings = self.table("postings")
+        fs = self.table("field_stats").collect()
         n_docs = int(fs[0]["doc_count"])
         self.stats = GlobalStats(
             n_docs=n_docs,
@@ -299,6 +302,13 @@ class SearchIndex:
         self._pagerank = None
         self._docs = None
         self._tombstones: "np.ndarray | None" = None
+
+    def table(self, name: str) -> DataFrame:
+        return catalog.read_table(self.spark, self.index_dir, name,
+                                  self.snapshot)
+
+    def has_table(self, name: str) -> bool:
+        return catalog.table_exists(self.index_dir, name, self.snapshot)
 
     # -- postings fetch ------------------------------------------------------
     def postings_scan(self, keys) -> DataFrame:
@@ -374,22 +384,16 @@ class SearchIndex:
         """Sorted doc_ids deleted but not yet compacted away.
 
         Cached after the first read (serving-path searches must not pay
-        a Spark job each); a writer that deletes calls
-        ``refresh_tombstones()`` on its readers — or just reopens the
-        index.  Driver-held by design: the set is bounded by compaction
+        a Spark job each); the set is the pinned snapshot's, so a
+        reader sees later deletes by reopening the index.  Driver-held
+        by design: the set is bounded by compaction
         cadence (``ingest.compact`` empties it), the same reasoning
         Lucene uses for its live-docs bitset."""
         if self._tombstones is None:
-            if not catalog.table_exists(self.index_dir, "tombstones"):
-                # covers both "never deleted" and a parquet-less dir
-                # left by a crash (ingest.recover_incomplete cleans
-                # those, but serving must not depend on a writer having
-                # run since the crash)
+            if not self.has_table("tombstones"):
                 self._tombstones = np.empty(0, dtype=np.int64)
             elif catalog.iceberg_enabled(self.spark):
-                rows = catalog.read_table(
-                    self.spark, self.index_dir, "tombstones"
-                ).select("doc_id").collect()
+                rows = self.table("tombstones").select("doc_id").collect()
                 self._tombstones = np.sort(
                     np.array([r["doc_id"] for r in rows], dtype=np.int64)
                 )
@@ -397,7 +401,7 @@ class SearchIndex:
                 # serving path: pyarrow footer-to-driver read, no Spark
                 # job on index open
                 arr = catalog.read_table_arrow(
-                    self.index_dir, "tombstones", ["doc_id"]
+                    self.index_dir, "tombstones", ["doc_id"], self.snapshot
                 )["doc_id"].to_numpy(zero_copy_only=False)
                 self._tombstones = np.sort(arr.astype(np.int64))
             if self.max_tombstone_frac is not None:
@@ -415,17 +419,12 @@ class SearchIndex:
                     )
         return self._tombstones
 
-    def refresh_tombstones(self) -> None:
-        self._tombstones = None
-
     # -- auxiliary tables ------------------------------------------------
     def pagerank_for(self, doc_ids: list[int]) -> dict[int, float]:
         if self._pagerank is None:
-            path = catalog.table_path(self.index_dir, "pagerank")
-            if not os.path.exists(path):
+            if not self.has_table("pagerank"):
                 return {}
-            self._pagerank = catalog.read_table(
-                self.spark, self.index_dir, "pagerank")
+            self._pagerank = self.table("pagerank")
         rows = self._pagerank.where(
             F.col("doc_id").isin([int(d) for d in doc_ids])
         ).collect()
@@ -433,7 +432,7 @@ class SearchIndex:
 
     def doc_meta(self, doc_ids: list[int]) -> dict[int, dict]:
         if self._docs is None:
-            self._docs = catalog.read_table(self.spark, self.index_dir, "docs")
+            self._docs = self.table("docs")
         rows = (
             self._docs.where(F.col("doc_id").isin([int(d) for d in doc_ids]))
             .select("doc_id", "url", "title", "clean_text").collect()
@@ -887,9 +886,9 @@ def search_batch(
     # the batch instead of recomputing — acceptable for a retryable
     # serving query, where the alternative (persist) leaks storage
     # across a long-lived session.
-    if os.path.exists(catalog.table_path(index.index_dir, "pagerank")):
+    if index.has_table("pagerank"):
         results = results.localCheckpoint()
-        pr = catalog.read_table(spark, index.index_dir, "pagerank")
+        pr = index.table("pagerank")
         pr_hits = pr.join(
             F.broadcast(results.select("doc_id").distinct()), "doc_id")
         results = results.join(F.broadcast(pr_hits), "doc_id", "left")
@@ -1006,7 +1005,7 @@ def search_batch_relational(
          if n > 0 or qid in syn_qids],
         "query_id int, n_groups int",
     )
-    tf = catalog.read_table(spark, index.index_dir, "term_freqs")
+    tf = index.table("term_freqs")
     df_t = (
         tf.join(F.broadcast(fan.select("field", "term").distinct()),
                 ["field", "term"])

@@ -1,28 +1,41 @@
-"""Table layer: parquet tables with commit manifests and resume.
+"""Table layer: parquet tables behind one snapshot commit, and resume.
 
 The reference's index "commit" is Whoosh's segment flush
-(``indexing/index.py:132-136``); open-or-build is
-``index.exists_in``/``open_dir`` (``index.py:65-84``).  Our equivalents:
+(``indexing/index.py:132-136``): a writer adds segment files and one
+commit makes them visible; open-or-build is ``index.exists_in``/
+``open_dir`` (``index.py:65-84``).  Our equivalents:
 
-* every stage writes a parquet directory plus a ``_MANIFEST.json``
-  written only AFTER the parquet job succeeds — the manifest is the
-  commit marker, written to a tmp file and renamed into place
-  (``write_json``, the one atomic JSON writer: manifests, the schema
-  meta and the maintenance journals all go through it),
-* two overwrite helpers, each with a FIXED per-write mode that never
-  reads or touches the session's ``partitionOverwriteMode``:
-  ``write_table`` replaces the whole table (static) and commits;
-  ``overwrite_partitions`` replaces only the partitions present in the
-  new data (dynamic) and leaves the commit to the caller,
-* ``is_complete``/``read`` implement open-or-build resume,
+* ``<root>/_SNAPSHOT.json`` is the index's one commit point.  It holds
+  an ``id``, the live parquet files of every table (``tables``, paths
+  relative to the root, so a copied tree stays valid) and ``retired``,
+  the files the latest commit dropped.  Only ``commit`` writes it,
+  through ``write_json`` (tmp file, then rename),
+* every write adds new, uniquely named files to its table dir, in the
+  usual ``tbucket=``/``seg_id=`` layout, and never replaces one:
+  ``write_table`` lists the new files in the snapshot and drops the
+  files it replaces (all of them, some partitions', or none — an
+  append).  An empty table is a table with no files,
+* ``transaction`` opens a working snapshot: writes inside it land
+  there, reads see them, and one commit publishes them on exit — an
+  exception publishes nothing.  Outside one, each write commits its
+  own table,
+* readers pin a snapshot: ``read_table`` reads the files it lists,
+  with ``basePath`` at the table dir (tbucket partition pruning holds)
+  and the schema from the registry (no schema-inference job),
+* ``sweep`` is the one recovery rule: the writer deletes every table
+  file the snapshot neither lists nor retires — a crashed op's orphans,
+  and the files retired one commit earlier, so a pinned reader stays
+  valid through the next commit,
 * ``_SCHEMA.json`` is the index's one settings record
   (``read_schema_meta``), as Whoosh stores its schema in the index:
   ``IndexBuilder.build`` records the analyzers, tbucket count, segment
-  count and shard size there, and every reader, maintenance op and
-  crash replay reads them back instead of taking them as arguments,
+  count and shard size there, and every reader and maintenance op
+  reads them back instead of taking them as arguments; it also holds
+  every table's schema,
 * per-partition lineage rows (seg_id, n_docs, n_terms, bytes, checksum)
   are appended to a ``manifests`` parquet table — the north_rule's
-  per-partition lineage requirement,
+  per-partition lineage requirement, an append-only log outside the
+  snapshot,
 * ``file_stats`` is the one parquet footer walk (per-file row count and
   column min/max) behind ``footer_stats`` and compaction's file pruning.
 
@@ -30,19 +43,27 @@ On a real deployment this module is the seam where Iceberg slots in
 (``writeTo(...).createOrReplace()``, hidden ``bucket(term)``
 partitioning, snapshot-based resume): the sandbox has no Iceberg
 runtime jar, so the parquet fallback is the tested path and the Iceberg
-path is gated behind a config check.
+path is gated behind a config check.  Under a catalog no snapshot is
+written: the catalog is the commit point.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
-import time
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-MANIFEST_NAME = "_MANIFEST.json"
+SNAPSHOT_NAME = "_SNAPSHOT.json"
+# tables a pinned reader serves from (SearchIndex, the relational
+# referee): a commit retires the files it drops from them.  Files
+# dropped from the writer-only tables go at the sweep after the commit.
+PINNED = ("docs", "term_freqs", "field_stats", "postings", "tombstones",
+          "pagerank")
+# root realpath → working snapshot of the transaction open on it
+_WORKING: dict[str, dict] = {}
 
 
 def table_path(root: str, name: str) -> str:
@@ -81,15 +102,125 @@ def iceberg_enabled(spark: SparkSession) -> bool:
     return catalog_name(spark) is not None
 
 
+# ---------------------------------------------------------------------------
+# The snapshot: the one commit point
+# ---------------------------------------------------------------------------
+def _key(root: str) -> str:
+    return os.path.realpath(root)
+
+
+def read_snapshot(root: str) -> dict | None:
+    """The published snapshot, or None when nothing was committed."""
+    p = os.path.join(root, SNAPSHOT_NAME)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
+def snapshot(root: str) -> dict:
+    """The snapshot this process reads and writes: the open
+    transaction's working snapshot, else the published one."""
+    return (_WORKING.get(_key(root)) or read_snapshot(root)
+            or {"id": 0, "tables": {}, "retired": []})
+
+
+def commit(root: str, snap: dict | None = None) -> None:
+    """Publish ``snap`` — by default the open transaction's working
+    snapshot — as the index's snapshot, atomically."""
+    if snap is None:
+        snap = _WORKING[_key(root)]
+    prev = read_snapshot(root)
+    snap["id"] = (prev["id"] if prev else 0) + 1
+    write_json(os.path.join(root, SNAPSHOT_NAME), snap)
+
+
+def in_transaction(root: str) -> bool:
+    return _key(root) in _WORKING
+
+
+@contextlib.contextmanager
+def transaction(root: str):
+    """Run the body against a working snapshot of ``root`` and publish
+    it with one commit when the body returns; an exception publishes
+    nothing (its files are orphans for the next ``sweep``)."""
+    key = _key(root)
+    pub = snapshot(root)
+    _WORKING[key] = {"id": pub["id"], "tables": dict(pub["tables"]),
+                     "retired": []}
+    try:
+        yield
+        commit(root)
+    finally:
+        del _WORKING[key]
+
+
+def _stage(root: str, name: str, add=(), drop=None,
+           keep: bool = True) -> None:
+    """List ``add`` and unlist ``drop`` (relative paths; None: every
+    listed file) in table ``name`` of the working snapshot — outside a
+    transaction, of a copy of the published one, committed at once.
+    ``keep=False`` removes the table from the snapshot."""
+    snap = _WORKING.get(_key(root))
+    own = snap is None
+    if own:
+        snap = snapshot(root)
+        snap["retired"] = []
+    old = snap["tables"].pop(name, [])
+    gone = set(old if drop is None else drop)
+    if keep:
+        snap["tables"][name] = [f for f in old if f not in gone] + sorted(add)
+    if name in PINNED:
+        snap["retired"] += [f for f in old if f in gone]
+    if own:
+        commit(root, snap)
+
+
+def _disk_files(root: str, name: str) -> set[str]:
+    """Every file under table ``name``'s dir, relative to the root —
+    the one listing of a table dir: the sweep, and ``write_table``
+    naming the files its Spark job added."""
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(table_path(root, name)) for f in files
+    }
+
+
+def sweep(root: str) -> None:
+    """Delete every table file that the snapshot neither lists nor
+    retires, and the dirs left empty.  Writer-only: the caller holds
+    the writer lock (or is the one builder of the index)."""
+    if not os.path.isdir(root):
+        return
+    snap = snapshot(root)
+    keep = {f for files in snap["tables"].values() for f in files}
+    keep |= set(snap["retired"])
+    keep |= {os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+             for f in keep}  # Hadoop's checksum sidecars
+    names = [d.name for d in os.scandir(root)
+             if d.is_dir() and d.name != "manifests"]
+    for name in names:
+        for rel in _disk_files(root, name) - keep:
+            os.remove(os.path.join(root, rel))
+        for d, _, _ in os.walk(table_path(root, name), topdown=False):
+            with contextlib.suppress(OSError):
+                os.rmdir(d)  # only an empty dir goes
+
+
+# ---------------------------------------------------------------------------
+# Tables
+# ---------------------------------------------------------------------------
 def write_table(
     df: DataFrame,
     root: str,
     name: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-    meta: dict | None = None,
+    drop: list[str] | None = None,
 ) -> str:
-    """Write a stage table + commit manifest.  Returns the path."""
+    """Write ``df`` as new files of table ``name`` and list them in the
+    snapshot, unlisting ``drop`` — files of the table as
+    ``table_files`` names them; None: all of them (a full overwrite),
+    []: none (an append).  Returns the table path."""
     path = table_path(root, name)
     spark = df.sparkSession
     cat = catalog_name(spark)
@@ -101,24 +232,18 @@ def write_table(
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         writer.createOrReplace()
         return path
-    # static, whatever the session says: a full overwrite must not keep
-    # partitions the new data lacks
-    writer = df.write.mode(mode).option("partitionOverwriteMode", "static")
+    before = _disk_files(root, name)
+    writer = df.write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    commit(path, meta)
     record_table_schema(root, name, df.schema)
+    added = [f for f in _disk_files(root, name) - before
+             if f.endswith(".parquet")
+             and not os.path.basename(f).startswith((".", "_"))]
+    _stage(root, name, added,
+           None if drop is None else [os.path.relpath(f, root) for f in drop])
     return path
-
-
-def overwrite_partitions(df: DataFrame, path: str, col: str) -> None:
-    """Replace exactly the ``col=`` partitions present in ``df`` (dynamic
-    partition overwrite, set per write); every other partition's files
-    are untouched.  Does NOT commit: callers that write in several
-    batches commit once, after the last one."""
-    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-     .partitionBy(col).parquet(path))
 
 
 def write_json(path: str, obj: dict) -> None:
@@ -129,75 +254,68 @@ def write_json(path: str, obj: dict) -> None:
     os.replace(tmp, path)  # atomic on posix
 
 
-def commit(path: str, meta: dict | None = None) -> None:
-    """Write the manifest commit marker after a successful job."""
-    p = Path(path)
-    files = sorted(f for f in p.rglob("*.parquet"))
-    manifest = {
-        "committed_at": time.time(),
-        "n_files": len(files),
-        "bytes": sum(f.stat().st_size for f in files),
-        "files": [
-            {"path": str(f.relative_to(p)), "bytes": f.stat().st_size}
-            for f in files
-        ],
-        **(meta or {}),
-    }
-    write_json(str(p / MANIFEST_NAME), manifest)
+def table_files(root: str, name: str,
+                snap: dict | None = None) -> list[str] | None:
+    """Paths of the files ``snap`` (default: ``snapshot(root)``) lists
+    for table ``name``, or None when it lists no such table."""
+    files = (snap or snapshot(root))["tables"].get(name)
+    return None if files is None else [os.path.join(root, f) for f in files]
 
 
-def manifest(root: str, name: str) -> dict | None:
-    f = Path(table_path(root, name)) / MANIFEST_NAME
-    if not f.exists():
-        return None
-    return json.loads(f.read_text())
+def _partition(rel: str, col: str) -> int | None:
+    for part in rel.split(os.sep):
+        if part.startswith(f"{col}="):
+            return int(part[len(col) + 1:])
+    return None
 
 
-def is_complete(root: str, name: str) -> bool:
-    """A stage is complete iff its commit manifest exists AND every file
-    it recorded still exists with the recorded size (cheap checksum)."""
-    m = manifest(root, name)
-    if m is None:
-        return False
-    p = Path(table_path(root, name))
-    for entry in m.get("files", []):
-        f = p / entry["path"]
-        if not f.exists() or f.stat().st_size != entry["bytes"]:
-            return False
-    return True
+def partition_files(root: str, name: str, col: str, values) -> list[str]:
+    """The listed files of table ``name`` in its ``col=`` partitions
+    whose value is in ``values``."""
+    values = set(values)
+    return [f for f in table_files(root, name) or []
+            if _partition(os.path.relpath(f, root), col) in values]
 
 
-def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
+def table_exists(root: str, name: str, snap: dict | None = None) -> bool:
+    """True iff the snapshot lists table ``name`` (empty or not)."""
+    return table_files(root, name, snap) is not None
+
+
+def read_table(spark: SparkSession, root: str, name: str,
+               snap: dict | None = None) -> DataFrame:
     """Read a stage table — the read half of the Iceberg seam: with a
     catalog configured the table is resolved by name (snapshot reads,
-    hidden-partition pruning come free); otherwise the parquet dir."""
+    hidden-partition pruning come free); otherwise the files ``snap``
+    (default: ``snapshot(root)``) lists."""
     cat = catalog_name(spark)
     if cat is not None:
         return spark.table(f"{cat}.{name}")
-    return spark.read.parquet(table_path(root, name))
-
-
-def table_exists(root: str, name: str) -> bool:
-    """True iff the table dir holds at least one parquet file.
-
-    A bare ``os.path.exists`` is NOT the right presence test: a crash
-    while a batch was CREATING a table can leave the directory with
-    only Spark's ``_SUCCESS``/manifest markers and zero parquet files
-    (``ingest.recover_incomplete`` now removes such dirs, but readers
-    stay defensive — a parquet-less dir would otherwise make
-    ``spark.read.parquet`` fail schema inference on every later op)."""
-    p = Path(table_path(root, name))
-    if not p.exists():
-        return False
-    return any(p.rglob("*.parquet"))
+    files = table_files(root, name, snap)
+    if files is None:
+        raise FileNotFoundError(f"the snapshot of {root} has no table "
+                                f"{name!r}")
+    cols = recorded_table_schema(root, name)
+    schema = cols and ", ".join(f"`{c}` {t}" for c, t in cols)
+    if not files:
+        return spark.createDataFrame([], schema)
+    reader = spark.read.option("basePath", table_path(root, name))
+    if schema:
+        reader = reader.schema(schema)
+    # Spark lists more paths than this threshold with a Spark job; the
+    # files are named, so the listing is a stat per file on the driver
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(max(int(prev), len(files))))
+    try:
+        return reader.parquet(*files)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def drop_table(root: str, name: str) -> None:
-    import shutil
-
-    path = table_path(root, name)
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    """Remove table ``name`` from the snapshot."""
+    _stage(root, name, keep=False)
 
 
 # ---------------------------------------------------------------------------
@@ -243,11 +361,11 @@ def read_schema_meta_or_none(root: str) -> dict | None:
 def record_table_schema(root: str, name: str, schema) -> None:
     """Record a table's committed (column, type) list in the index's
     schema meta — the authoritative reference the append guard checks
-    against.  Re-inferring from the directory is NOT equivalent: Spark
-    samples one footer for inference, so a dir already poisoned with
-    mixed physical types can LIE depending on which file gets sampled,
-    and the guard would then wave through exactly the drift it exists
-    to block."""
+    against and the schema ``read_table`` reads with.  Re-inferring
+    from the files is NOT equivalent: Spark samples one footer for
+    inference, so a table already poisoned with mixed physical types
+    can LIE depending on which file gets sampled, and the guard would
+    then wave through exactly the drift it exists to block."""
     meta = read_schema_meta_or_none(root) or {}
     tables = meta.setdefault("tables", {})
     tables[name] = [[f.name, f.dataType.simpleString()]
@@ -256,8 +374,8 @@ def record_table_schema(root: str, name: str, schema) -> None:
 
 
 def recorded_table_schema(root: str, name: str) -> list | None:
-    """The (column, type) list recorded at write time, or None for
-    tables from builds older than the registry."""
+    """The (column, type) list recorded at write time, or None for a
+    table the registry does not know."""
     meta = read_schema_meta_or_none(root) or {}
     entry = meta.get("tables", {}).get(name)
     if entry is None:
@@ -322,15 +440,15 @@ def read_lineage(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(table_path(root, "manifests"))
 
 
-def file_stats(path: str, col: str | None = None):
-    """Yield ``(file, n_rows, min, max)`` per parquet file under
-    ``path``, read from the file FOOTERS — no Spark job, no data pages.
-    min/max are None when ``col`` is None, the file lacks ``col``, or
-    any of its row groups lacks statistics."""
+def file_stats(root: str, name: str, col: str | None = None):
+    """Yield ``(file, n_rows, min, max)`` per file the snapshot lists
+    for table ``name``, read from the file FOOTERS — no Spark job, no
+    data pages.  min/max are None when ``col`` is None, the file lacks
+    ``col``, or any of its row groups lacks statistics."""
     import pyarrow.parquet as pq
 
-    for f in sorted(Path(path).rglob("*.parquet")):
-        md = pq.ParquetFile(str(f)).metadata
+    for f in table_files(root, name) or []:
+        md = pq.ParquetFile(f).metadata
         mn = mx = None
         leaves = [md.schema.column(i).path for i in range(md.num_columns)]
         if col is not None and col in leaves:
@@ -342,7 +460,7 @@ def file_stats(path: str, col: str | None = None):
                     break
                 mn = st.min if mn is None else min(mn, st.min)
                 mx = st.max if mx is None else max(mx, st.max)
-        yield str(f), md.num_rows, mn, mx
+        yield f, md.num_rows, mn, mx
 
 
 def footer_stats(root: str, name: str,
@@ -354,7 +472,7 @@ def footer_stats(root: str, name: str,
     manifest-based planner makes it metadata-only there too)."""
     n_rows, mn, mx = 0, None, None
     have_stats = col is not None
-    for _, n, fmn, fmx in file_stats(table_path(root, name), col):
+    for _, n, fmn, fmx in file_stats(root, name, col):
         n_rows += n
         if not n:
             continue
@@ -368,27 +486,23 @@ def footer_stats(root: str, name: str,
     return n_rows, mn, mx
 
 
-def read_table_arrow(root: str, name: str, columns: list[str] | None = None):
+def read_table_arrow(root: str, name: str, columns: list[str] | None = None,
+                     snap: dict | None = None):
     """Read a SMALL table directly into a pyarrow Table on the driver —
     no Spark job.  For driver-held metadata sets (tombstones between
     compactions, schema/stat sidecars); anything row-scaled stays on
     ``read_table``."""
     import pyarrow.dataset as ds
 
-    files = sorted(str(f) for f in
-                   Path(table_path(root, name)).rglob("*.parquet"))
-    if not files:  # committed-but-empty tables keep one empty part
+    files = table_files(root, name, snap)
+    if not files:
         raise FileNotFoundError(table_path(root, name))
     return ds.dataset(files, format="parquet").to_table(columns=columns)
 
 
 def completed_segments(spark: SparkSession, root: str, stage: str) -> set[int]:
-    """Seg ids recorded as complete for a stage (segment-level resume).
-    A segment's lineage row lands after its files, so before the
-    stage's table exists there is nothing to read (a fresh build runs
-    no lineage scan)."""
-    if not all(Path(table_path(root, t)).exists()
-               for t in (stage, "manifests")):
-        return set()
-    df = read_lineage(spark, root).where(f"stage = '{stage}'")
-    return {int(r.seg_id) for r in df.select("seg_id").distinct().collect()}
+    """Seg ids of the ``seg_id=`` partitions the snapshot lists for a
+    stage (segment-level resume): the segment phase commits each batch
+    after its lineage rows, so a listed segment is a finished one."""
+    return {_partition(os.path.relpath(f, root), "seg_id")
+            for f in table_files(root, stage) or []} - {None}

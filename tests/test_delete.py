@@ -137,7 +137,7 @@ def test_compact_equals_fresh_build_over_survivors(spark, corpus,
     got = _search_by_url(spark, root, QUERIES[:10])
     want = _search_by_url(spark, fresh, QUERIES[:10])
     assert got == want
-    assert not os.path.exists(os.path.join(root, "tombstones"))
+    assert not catalog.table_exists(root, "tombstones")
     docs_urls = {r["url"] for r in catalog.read_table(spark, root, "docs")
                  .select("url").collect()}
     assert not docs_urls & set(victims)
@@ -193,11 +193,8 @@ def test_compact_rewrites_only_touched_buckets(spark, corpus,
 def test_compact_drops_bucket_whose_terms_all_died(spark, corpus,
                                                    tmp_path_factory):
     """If every term hashing into a tbucket vanishes with the deleted
-    doc, the partition directory itself must be removed (dynamic
-    overwrite can't — it only replaces partitions present in new
-    data)."""
+    doc, the snapshot must list no file of that partition any more."""
     import datetime as dt
-    from pathlib import Path
 
     from search_engine_wikipedia_spark.functions.hashing import term_bucket
 
@@ -229,7 +226,7 @@ def test_compact_drops_bucket_whose_terms_all_died(spark, corpus,
     assert ingest.delete_urls(spark, root, [solo["url"]]) == 1
     assert ingest.compact(spark, root) == 1
     for b in exclusive:
-        assert not Path(root, "postings", f"tbucket={b}").exists()
+        assert not catalog.partition_files(root, "postings", "tbucket", [b])
     # queries still work and never return the dead doc
     res = _search_by_url(spark, root, QUERIES[:4])
     for q, hits in res.items():
@@ -239,9 +236,8 @@ def test_compact_drops_bucket_whose_terms_all_died(spark, corpus,
 def test_compact_crash_is_recovered_by_next_op(spark, corpus,
                                                tmp_path_factory,
                                                monkeypatch):
-    """A crash mid-compact (tombstones still present) re-runs the whole
-    compact idempotently on the next maintenance call; a crash inside a
-    table swap is healed by _finish_swaps."""
+    """A crash mid-compact publishes nothing (tombstones still listed),
+    so the next maintenance call re-runs the whole compact."""
     root = str(tmp_path_factory.mktemp("crash_cmp"))
     _build(spark, root, _pages_df(spark, corpus[:250]))
     victims = _victim_urls(spark, root, QUERIES[2], k=2)
@@ -260,7 +256,7 @@ def test_compact_crash_is_recovered_by_next_op(spark, corpus,
     with pytest.raises(RuntimeError, match="injected"):
         ingest.compact(spark, root)
     # tombstones survive the crash → compact re-runs idempotently
-    assert os.path.exists(os.path.join(root, "tombstones"))
+    assert catalog.table_exists(root, "tombstones")
     assert ingest.compact(spark, root) == 2
 
     survivors = [p for p in corpus[:250] if p["url"] not in set(victims)]
@@ -275,66 +271,46 @@ def test_compact_crash_is_recovered_by_next_op(spark, corpus,
 def test_selective_rewrite_touches_only_files_holding_dead_docs(
         spark, tmp_path):
     """compact's table pass is O(touched files): a file whose doc_id
-    footer range holds no dead doc must survive as the SAME inode
-    (hard-linked, no data copied), and only intersecting files are
-    rewritten."""
-    from pathlib import Path
+    footer range holds no dead doc must stay listed in the snapshot (no
+    data copied), and only intersecting files are rewritten."""
+    import numpy as np
+
+    def dead(ids):
+        return (np.array(ids, dtype=np.int64),
+                spark.createDataFrame([(i,) for i in ids], "doc_id long"))
 
     root = str(tmp_path)
     df = (spark.range(0, 400).selectExpr(
         "id AS doc_id", "concat('u', id) AS url")
         .repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id"))
     catalog.write_table(df, root, "docs")
-    path = Path(root, "docs")
-    before = {f.name: os.stat(f).st_ino for f in path.glob("*.parquet")}
+    before = set(catalog.table_files(root, "docs"))
     assert len(before) == 4
 
     # dead ids all live in one file's range
-    n = ingest._selective_rewrite(spark, root, "docs", [5, 6, 7])
+    n = ingest._selective_rewrite(root, "docs", *dead([5, 6, 7]))
     assert n == 1
-    after = {f.name: os.stat(f).st_ino for f in path.glob("*.parquet")}
-    preserved = set(before.items()) & set(after.items())
-    assert len(preserved) == 3  # untouched files: same inode, no copy
+    after = set(catalog.table_files(root, "docs"))
+    preserved = before & after
+    assert len(preserved) == 3  # untouched files: still listed, no copy
     got = sorted(r["doc_id"] for r in
                  catalog.read_table(spark, root, "docs").collect())
     assert got == [i for i in range(400) if i not in (5, 6, 7)]
 
     # a dead set nothing intersects runs no job and changes nothing
-    assert ingest._selective_rewrite(spark, root, "docs", [9999]) == 0
-
-
-def test_finish_swaps_completes_interrupted_rename(spark, corpus,
-                                                   tmp_path_factory):
-    """The rmtree→rename loss window: a committed __tmp dir whose target
-    vanished must be renamed into place at the next maintenance op."""
-    import shutil
-
-    root = str(tmp_path_factory.mktemp("swap_idx"))
-    _build(spark, root, _pages_df(spark, corpus[:100]))
-    docs = os.path.join(root, "docs")
-    tmp = docs + ".__tmp"
-    shutil.copytree(docs, tmp)
-    shutil.rmtree(docs)
-    ingest._finish_swaps(root)
-    assert os.path.exists(docs) and not os.path.exists(tmp)
-    assert catalog.read_table(spark, root, "docs").count() > 0
-    # and a LEFTOVER tmp (target intact) is discarded
-    shutil.copytree(docs, tmp)
-    ingest._finish_swaps(root)
-    assert os.path.exists(docs) and not os.path.exists(tmp)
+    assert ingest._selective_rewrite(root, "docs", *dead([9999])) == 0
 
 
 @pytest.mark.parametrize("crash_at", ["pre_commit", "post_commit"])
 def test_crash_mid_first_delete_does_not_brick_index(
         spark, corpus, tmp_path_factory, monkeypatch, crash_at):
-    """The FIRST delete_urls on an index CREATES the tombstones table
-    inside the journaled batch (before-snapshot = []).  A crash in that
-    window must not brick the index: recovery removes the whole
-    just-born table dir (not just its parquet files — a parquet-less
-    dir with _SUCCESS markers makes every later spark.read.parquet fail
-    schema inference), searches still serve, and re-running the delete
-    converges.  ``pre_commit`` = dir + markers exist but no parquet
-    landed; ``post_commit`` = parquet landed but the journal survived.
+    """The FIRST delete_urls on an index CREATES the tombstones table.
+    A crash in that window must not brick the index: the snapshot does
+    not list the just-born table, searches still serve, and re-running
+    the delete (whose entry sweeps the crashed files) converges.
+    ``pre_commit`` = dir + markers exist and a snapshot without any
+    tombstone file was published; ``post_commit`` = parquet landed but
+    was never published.
     """
     root = str(tmp_path_factory.mktemp(f"crash_del_{crash_at}"))
     _build(spark, root, _pages_df(spark, corpus[:120]))
@@ -351,7 +327,7 @@ def test_crash_mid_first_delete_does_not_brick_index(
                 path = catalog.table_path(r, name)
                 os.makedirs(path, exist_ok=True)
                 open(os.path.join(path, "_SUCCESS"), "w").close()
-                catalog.commit(path)
+                catalog.commit(r)
             raise RuntimeError("injected crash mid-delete")
         return orig(df, r, name)
 
@@ -361,20 +337,20 @@ def test_crash_mid_first_delete_does_not_brick_index(
     monkeypatch.setattr(ingest, "_append_table", orig)
 
     # a fresh reader must not see half-applied tombstones as presence
-    # (pre_commit: parquet-less dir reads as the empty table)
+    # (pre_commit: a parquet-less dir is no table)
     if crash_at == "pre_commit":
         assert not catalog.table_exists(root, "tombstones")
         assert SearchIndex(spark, root).tombstones.size == 0
         assert _search_by_url(spark, root, QUERIES[:4]) == pre
 
-    # every maintenance entry rolls the batch back, then converges:
+    # every maintenance entry sweeps the batch's files, then converges:
     # the re-run marks BOTH victims again (nothing half-deleted)
     assert ingest.delete_urls(spark, root, victims) == len(victims)
     post = _search_by_url(spark, root, QUERIES[:4])
     assert not {u for _, u in post[QUERIES[1]]} & set(victims)
     # and the rest of the lifecycle still works end-to-end
     assert ingest.compact(spark, root) == len(victims)
-    assert not os.path.exists(os.path.join(root, "tombstones"))
+    assert not catalog.table_exists(root, "tombstones")
 
 
 def test_mass_delete_rewrite_plan_has_no_inlist(spark, tmp_path_factory,
@@ -386,19 +362,21 @@ def test_mass_delete_rewrite_plan_has_no_inlist(spark, tmp_path_factory,
     (AQE broadcasts a small dead set, shuffles a huge one).  Exercises
     ``_selective_rewrite`` directly on a synthetic flat table so the
     dead set can be realistically large without building a 100k-doc
-    index; footer pruning must still hard-link the untouched files."""
+    index; footer pruning must still keep the untouched files."""
+    import numpy as np
+
     root = str(tmp_path_factory.mktemp("mass_del"))
     n_docs, n_dead = 200_000, 100_000
-    (spark.range(n_docs).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") * 2).alias("payload"))
-     .repartition(8, "doc_id")
-     .sortWithinPartitions("doc_id")
-     .write.parquet(catalog.table_path(root, "docs")))
-    catalog.commit(catalog.table_path(root, "docs"))
+    catalog.write_table(
+        spark.range(n_docs).select(
+            F.col("id").alias("doc_id"),
+            (F.col("id") * 2).alias("payload"))
+        .repartition(8, "doc_id")
+        .sortWithinPartitions("doc_id"),
+        root, "docs")
     # dead = the low half of the id space → the files whose footer
-    # range sits entirely in the high half stay hard-linked
-    dead = list(range(n_dead))
+    # range sits entirely in the high half stay listed
+    dead = np.arange(n_dead, dtype=np.int64)
     ingest._append_table(
         spark.range(n_dead).select(F.col("id").alias("doc_id")),
         root, "tombstones")
@@ -412,14 +390,16 @@ def test_mass_delete_rewrite_plan_has_no_inlist(spark, tmp_path_factory,
         return out
 
     monkeypatch.setattr(ingest, "_survivors", spy)
-    n_rewritten = ingest._selective_rewrite(spark, root, "docs", dead)
+    n_rewritten = ingest._selective_rewrite(
+        root, "docs", dead,
+        catalog.read_table(spark, root, "tombstones").select("doc_id"))
     assert n_rewritten > 0
     assert plans, "rewrite ran no survivor filter"
     for p in plans:
         assert " IN (" not in p and "isin" not in p, \
             "driver-held id list leaked into the plan"
         assert "LeftAnti" in p
-    survivors = spark.read.parquet(catalog.table_path(root, "docs"))
+    survivors = catalog.read_table(spark, root, "docs")
     assert survivors.count() == n_docs - n_dead
     assert survivors.agg(F.min("doc_id")).collect()[0][0] == n_dead
     assert (survivors.where(F.col("payload") != F.col("doc_id") * 2)

@@ -246,7 +246,7 @@ def test_search_batch_blend_schema_without_pagerank_table(
     root, _ = built_index
     copy = str(tmp_path / "no_pagerank")
     shutil.copytree(root, copy)
-    shutil.rmtree(catalog.table_path(copy, "pagerank"))
+    catalog.drop_table(copy, "pagerank")
     idx = SearchIndex(spark, copy)
     rows = search_batch(idx, ["Roman Empire", "DNA"], limit=10, exp=False,
                         page_rank=True).collect()

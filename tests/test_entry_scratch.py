@@ -77,3 +77,45 @@ def test_engine_index_rebuilds_a_tree_without_recorded_settings(
         assert catalog.read_table(spark, root, "docs").count() == 12
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_engine_index_rebuilds_a_tree_without_a_snapshot(spark, tmp_path):
+    """A cached index tree whose ``_INPUT.json`` matches but which holds
+    no ``_SNAPSHOT.json`` (written before indexes committed one) lists
+    no table to resume from: it is rebuilt, not failed on."""
+    import json
+
+    import pandas as pd
+
+    from search_engine_wikipedia_spark.operators.build import IndexBuilder
+    from search_engine_wikipedia_spark.sources import catalog
+
+    sf_dir = tmp_path / f"sfnosnap{os.getpid()}"
+    sf_dir.mkdir()
+    pd.DataFrame({
+        "doc_id": list(range(12)),
+        "text": [f"planted document {i} about topic{i % 3}"
+                 for i in range(12)],
+        "lang": ["en"] * 12,
+    }).to_parquet(sf_dir / "documents.parquet")
+    root = f"/tmp/sewiki_index_{sf_dir.name}"
+    shutil.rmtree(root, ignore_errors=True)
+    settings = IndexBuilder(spark, root, n_segments=8,
+                            shard_size=100_000).settings
+    os.makedirs(os.path.join(root, "docs"))
+    try:
+        with open(os.path.join(root, "_INPUT.json"), "w") as f:
+            json.dump({"fingerprint": entry_mod._input_fingerprint(
+                str(sf_dir)), "settings": settings,
+                "sf_dir": str(sf_dir)}, f)
+        catalog.write_schema_meta(root, dict(settings))
+        with open(os.path.join(root, "docs", "_MANIFEST.json"), "w") as f:
+            json.dump({"files": []}, f)
+
+        assert entry_mod._engine_index(spark, str(sf_dir)) == root
+        assert not os.path.exists(
+            os.path.join(root, "docs", "_MANIFEST.json"))
+        assert catalog.read_snapshot(root) is not None
+        assert catalog.read_table(spark, root, "docs").count() == 12
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -78,7 +78,7 @@ def test_live_roundtrip_and_hidden_partitioning(spark, ice, tmp_path):
     assert {r["term"] for r in got.collect()} == \
         {f"t{i}" for i in range(20)}
     # parquet fallback must NOT have run alongside the catalog write
-    assert catalog.manifest(root, "postings") is None
+    assert catalog.read_snapshot(root) is None
 
     part = spark.sql(f"SELECT * FROM {ice}.postings.partitions")
     assert part.count() >= 1  # spec applied: per-partition metadata rows

@@ -40,6 +40,22 @@ def _term_stats_fingerprint(spark, root):
     )
 
 
+def _unlisted_files(root):
+    """Parquet files under the table dirs that the snapshot neither
+    lists nor retires."""
+    from pathlib import Path
+
+    snap = catalog.read_snapshot(root)
+    known = {f for files in snap["tables"].values() for f in files}
+    known |= set(snap["retired"])
+    return sorted(
+        rel for d in Path(root).iterdir()
+        if d.is_dir() and d.name != "manifests"
+        for rel in (str(f.relative_to(root)) for f in d.rglob("*.parquet"))
+        if rel not in known
+    )
+
+
 def _search_by_url(spark, root, queries, limit=10):
     s = WikiSearcher(SearchIndex(spark, root))
     out = {}
@@ -129,7 +145,7 @@ def test_crash_mid_append_rolls_back_and_reapplies(spark, corpus,
                                                    monkeypatch, crash_at):
     """A crash partway through append_pages (after the docs append, the
     scenario where url-dedup would otherwise silently no-op the replay)
-    must roll back via the journal and re-apply cleanly."""
+    must publish nothing and re-apply cleanly."""
     full_root = str(tmp_path_factory.mktemp("full"))
     IndexBuilder(spark, full_root, n_segments=4, shard_size=200).build(
         _pages_df(spark, corpus[:250]), resume=False)
@@ -149,16 +165,15 @@ def test_crash_mid_append_rolls_back_and_reapplies(spark, corpus,
         return orig(*a, **kw)
 
     monkeypatch.setattr(ingest, crash_at, dying)
+    snap_id = catalog.read_snapshot(root)["id"]
     with pytest.raises(RuntimeError, match="injected"):
         ingest.append_pages(spark, root, _pages_df(spark, corpus[200:250]))
-    import os
+    assert catalog.read_snapshot(root)["id"] == snap_id
 
-    assert os.path.exists(os.path.join(root, "_INGEST.json"))
-
-    # replay (as foreachBatch would): rollback + full re-apply
+    # replay (as foreachBatch would): sweep + full re-apply
     n = ingest.append_pages(spark, root, _pages_df(spark, corpus[200:250]))
     assert n > 0
-    assert not os.path.exists(os.path.join(root, "_INGEST.json"))
+    assert not _unlisted_files(root)
     assert _term_stats_fingerprint(spark, root) == full
 
 
@@ -372,10 +387,9 @@ def test_optimize_segments_coalesces_and_preserves_results(
 
 def test_optimize_crash_resumes_from_next_maintenance_op(
         spark, corpus, tmp_path_factory, monkeypatch):
-    """A crash mid-optimize leaves the journal; the next maintenance op
-    finishes the remaining phases and the index converges."""
-    import os
-
+    """A crash mid-optimize publishes nothing; the next maintenance op
+    (its replay) sweeps the crashed files and re-runs it, and the index
+    converges."""
     root = str(tmp_path_factory.mktemp("optc_idx"))
     IndexBuilder(spark, root, n_segments=5, shard_size=200).build(
         _pages_df(spark, corpus[:150]), resume=False)
@@ -392,13 +406,15 @@ def test_optimize_crash_resumes_from_next_maintenance_op(
         return orig(*a, **kw)
 
     monkeypatch.setattr(ingest, "build_segments", dying)
+    snap_id = catalog.read_snapshot(root)["id"]
     with pytest.raises(RuntimeError, match="injected"):
         ingest.optimize_segments(spark, root, max_segments=2)
-    assert os.path.exists(os.path.join(root, "_OPTIMIZE.json"))
+    assert catalog.read_snapshot(root)["id"] == snap_id
 
-    # any maintenance entry finishes it (here: an append)
+    # the replay re-runs it, then an append lands as the next segment
+    ingest.optimize_segments(spark, root, max_segments=2)
+    assert not _unlisted_files(root)
     ingest.append_pages(spark, root, _pages_df(spark, corpus[190:210]))
-    assert not os.path.exists(os.path.join(root, "_OPTIMIZE.json"))
     assert max(_seg_ids(root)) == 2  # 2 coalesced + 1 new delta
     # stats = pre-optimize stats plus exactly the appended delta — spot
     # check by re-deriving the full fingerprint from a fresh build

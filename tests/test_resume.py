@@ -188,8 +188,8 @@ def test_iceberg_seam_routes_through_writeTo(spark, monkeypatch, tmp_path):
     assert calls["created"] is True
     assert len(calls["partitioned_by"]) == 1
     assert "tbucket" in calls["partitioned_by"][0]
-    # the parquet fallback (manifest commit marker) must NOT have run
-    assert catalog.manifest(str(tmp_path / "iceroot"), "postings") is None
+    # the parquet fallback (snapshot commit) must NOT have run
+    assert catalog.read_snapshot(str(tmp_path / "iceroot")) is None
 
 
 def test_iceberg_enabled_is_a_dedicated_opt_in(spark):

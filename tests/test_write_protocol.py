@@ -1,8 +1,8 @@
-"""The maintenance write protocol: every public maintenance op settles a
-crashed append on entry, full overwrites replace every partition
-whatever the session's ``partitionOverwriteMode`` says, crash recovery
-re-merges with the shard size the crashed append used, and a table
-without a recorded schema is refused instead of re-inferred."""
+"""The maintenance write protocol: every public maintenance op sweeps
+the files of a crashed append on entry, full overwrites replace every
+partition whatever the session's ``partitionOverwriteMode`` says, a
+crashed append leaves the shard layout as it was, and a table without
+a recorded schema is refused instead of re-inferred."""
 
 import json
 import os
@@ -16,7 +16,7 @@ from search_engine_wikipedia_spark.operators import ingest
 from search_engine_wikipedia_spark.operators.build import IndexBuilder
 from search_engine_wikipedia_spark.sources import catalog
 
-from tests.test_ingest import _term_stats_fingerprint
+from tests.test_ingest import _term_stats_fingerprint, _unlisted_files
 
 SHARD = 200
 
@@ -73,18 +73,18 @@ _NOOP_OPS = {
 @pytest.mark.parametrize("op", sorted(_NOOP_OPS))
 def test_every_maintenance_entry_settles_a_crashed_append(
         spark, corpus, base_index, tmp_path, monkeypatch, op):
-    """Each public maintenance op, called with no-op arguments, rolls
-    back a pending append journal before its body runs."""
+    """Each public maintenance op, called with no-op arguments, sweeps
+    the files of a crashed append, which published nothing."""
     root = _copy(base_index, tmp_path, op)
     pre = _term_stats_fingerprint(spark, root)
     _crash_once(monkeypatch, "build_segments")
+    snap_id = catalog.read_snapshot(root)["id"]
     with pytest.raises(RuntimeError, match="injected"):
         ingest.append_pages(spark, root, _pages_df(spark, corpus[150:180]))
-    journal = os.path.join(root, "_INGEST.json")
-    assert os.path.exists(journal)
+    assert catalog.read_snapshot(root)["id"] == snap_id
 
     _NOOP_OPS[op](spark, root)
-    assert not os.path.exists(journal)
+    assert not _unlisted_files(root)
     assert _term_stats_fingerprint(spark, root) == pre
 
 
@@ -127,9 +127,9 @@ def _shard_counts(spark, root):
 @pytest.mark.parametrize("crash_at", ["build_segments", "remerge"])
 def test_crash_recovery_keeps_the_appends_shard_size(
         spark, corpus, tmp_path, monkeypatch, crash_at):
-    """Recovery of a crashed append re-merges postings with the shard
-    size that append journaled, not the recovering caller's default:
-    the head-term shard layout equals the pre-crash index's."""
+    """A crashed append publishes nothing and the next entry sweeps
+    its files: the head-term shard layout equals the pre-crash
+    index's."""
     root = str(tmp_path / "sharded")
     IndexBuilder(spark, root, n_segments=4, shard_size=20).build(
         _pages_df(spark, corpus[:200]), resume=False)
@@ -137,11 +137,13 @@ def test_crash_recovery_keeps_the_appends_shard_size(
     assert any(n > 1 for _, _, n in pre)  # some term has df > 20
 
     _crash_once(monkeypatch, crash_at)
+    snap_id = catalog.read_snapshot(root)["id"]
     with pytest.raises(RuntimeError, match="injected"):
         ingest.append_pages(spark, root, _pages_df(spark, corpus[200:240]))
+    assert catalog.read_snapshot(root)["id"] == snap_id
     monkeypatch.undo()
-    assert ingest.delete_urls(spark, root, []) == 0  # recovers, 1M default
-    assert not os.path.exists(os.path.join(root, "_INGEST.json"))
+    assert ingest.delete_urls(spark, root, []) == 0
+    assert not _unlisted_files(root)
     assert _shard_counts(spark, root) == pre
 
 
