@@ -193,8 +193,9 @@ def has_syntax(text: str) -> bool:
 
 
 def pattern_regex(pattern: str) -> str:
-    """fnmatch-style pattern → anchored Java-compatible regex for
-    ``Column.rlike`` (only ``*`` and ``?`` are wildcards)."""
+    """fnmatch-style pattern → anchored RE2 regex, as pyarrow's
+    ``match_substring_regex`` takes it for the wildcard expansion (only
+    ``*`` and ``?`` are wildcards; every other character is escaped)."""
     out = []
     for ch in pattern:
         if ch == "*":

@@ -22,13 +22,14 @@ Re-derivation of the reference query lifecycle
 One core, three transports.  Every serving plan runs the same steps:
 ``_parse_distinct`` parses each distinct query text once into a
 picklable tree spec plus its ``(field, term)`` posting keys,
-``SearchIndex.postings_scan`` prunes the postings scan to those keys'
+``SearchIndex._key_filter`` prunes the postings read to those keys'
 tbucket partitions and term/field values, ``_topk`` rebuilds the tree,
 binds its postings and runs the block-max kernel, and ``blend_pagerank``
 is the one PageRank blend.  The plans differ only in how postings reach
 the kernel:
 
-* ``WikiSearcher.search`` — driver fetch into the reader's term cache;
+* ``WikiSearcher.search`` — driver fetch into the reader's term cache,
+  a pyarrow read of the pinned snapshot's files with no Spark job;
 * ``search_many_broadcast`` / ``serving_partition_stats`` — one
   broadcast posting cache shared by every task (``_broadcast_runner``);
 * ``search_batch`` — a shuffle join of the postings against the query
@@ -37,12 +38,15 @@ the kernel:
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass
 from typing import Any as _tAny
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -246,15 +250,26 @@ class TombstoneBudgetError(RuntimeError):
 class SearchIndex:
     """Open a built index (reference ``openOrBuild`` read path).
 
+    The interactive lookups run no Spark job: the field stats read at
+    open, ``tombstones``, ``fetch_postings``, ``expand_pattern``,
+    ``pagerank_for`` and ``doc_meta`` all go through ``_read``, a
+    pyarrow read of the files of the snapshot pinned at open.  Each
+    table's dataset is built once per reader with its file footers
+    loaded, so a lookup opens only the files and row groups whose
+    partition value or footer min/max can hold its keys: the footers
+    parquet writes are the elimination index, and the snapshot
+    records no statistics of its own.  The distributed plans read the
+    same pinned files through Spark (``table``, ``postings_scan``).
+
     ``max_postings_per_term`` guards the driver-side posting fetch: at
     web scale a head term's blobs are GBs, and collecting them into the
     driver (the interactive/serving cache path) is a driver-OOM hazard.
-    A cheap column-pruned pre-scan reads only ``term_df`` (the blob
-    columns never leave parquet) and a term over the cap raises
-    ``HotTermError`` with a pointer to the distributed ``search_batch``
-    plan, which never collects postings.  The cap defaults ON
-    (``DEFAULT_MAX_POSTINGS_PER_TERM``) so the unsafe collect requires
-    an explicit ``max_postings_per_term=None`` opt-out.
+    Before any blob column is read, a read of only ``(field, term,
+    term_df)`` checks the requested terms, and a term over the cap
+    raises ``HotTermError`` with a pointer to the distributed
+    ``search_batch`` plan, which never collects postings.  The cap
+    defaults ON (``DEFAULT_MAX_POSTINGS_PER_TERM``) so the unsafe
+    collect requires an explicit ``max_postings_per_term=None`` opt-out.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -287,20 +302,15 @@ class SearchIndex:
         # commit after it retires files this reader still reads, and
         # they stay on disk through the next commit
         self.snapshot = catalog.read_snapshot(index_dir)
-        self.postings = self.table("postings")
-        fs = self.table("field_stats").collect()
-        n_docs = int(fs[0]["doc_count"])
+        self._datasets: dict = {}
+        fs = self._read("field_stats",
+                        ["field", "doc_count", "avg_len"]).to_pylist()
         self.stats = GlobalStats(
-            n_docs=n_docs,
+            n_docs=int(fs[0]["doc_count"]),
+            # Whoosh avg_field_length falls back to 1 when 0
             avg_len={r["field"]: (float(r["avg_len"]) or 1.0) for r in fs},
         )
-        # Whoosh avg_field_length falls back to 1 when 0
-        for k, v in self.stats.avg_len.items():
-            if v == 0:
-                self.stats.avg_len[k] = 1.0
         self._term_cache: dict = {}
-        self._pagerank = None
-        self._docs = None
         self._tombstones: "np.ndarray | None" = None
 
     def table(self, name: str) -> DataFrame:
@@ -310,33 +320,86 @@ class SearchIndex:
     def has_table(self, name: str) -> bool:
         return catalog.table_exists(self.index_dir, name, self.snapshot)
 
+    @functools.cached_property
+    def postings(self) -> DataFrame:
+        """The pinned postings table, for the distributed plans."""
+        return self.table("postings")
+
+    def _read(self, name: str, columns: list[str],
+              **isin) -> pa.Table | None:
+        """``columns`` of the rows of pinned table ``name`` whose column
+        ``c`` holds one of the values ``isin[c]``, for every ``c``; None
+        when the table has no files.
+
+        A pyarrow scan of the snapshot's files: the table's dataset and
+        its footers are loaded on first use and kept, so a lookup pays
+        neither a Spark job nor a footer read.  Under a table catalog
+        there are no snapshot files, and this is a Spark read of the
+        catalog's table."""
+        if catalog.iceberg_enabled(self.spark):
+            qualified = f"{catalog.catalog_name(self.spark)}.{name}"
+            if not self.spark.catalog.tableExists(qualified):
+                return None
+            df = self.table(name)
+            for c, values in isin.items():
+                df = df.where(F.col(c).isin(values))
+            return df.select(*columns).toArrow()
+        if name not in self._datasets:
+            dset = catalog.arrow_dataset(self.index_dir, name, self.snapshot)
+            for frag in dset.get_fragments() if dset is not None else ():
+                frag.ensure_complete_metadata()
+            self._datasets[name] = dset
+        dset = self._datasets[name]
+        if dset is None:
+            return None
+        where = None
+        for c, values in isin.items():
+            e = pc.field(c).isin(values)
+            if values:
+                # pyarrow checks no is_in against footer min/max; the
+                # key range lets it skip the files and row groups
+                # outside it (docs files hold disjoint doc_id ranges)
+                e &= (pc.field(c) >= min(values)) & (
+                    pc.field(c) <= max(values))
+            where = e if where is None else where & e
+        return dset.to_table(columns=columns, filter=where)
+
     # -- postings fetch ------------------------------------------------------
-    def postings_scan(self, keys) -> DataFrame:
-        """The postings table pruned to ``keys`` ((field, term) pairs):
-        the tbucket partitions of their terms, then their term/field
-        values — all reach the parquet reader as partition / pushed
-        filters.  Buckets are computed driver-side (functions/hashing.py
-        XXH64 parity with F.xxhash64); a throwaway Spark job here would
-        add a scheduling round-trip per search."""
+    def _key_filter(self, keys) -> dict:
+        """The postings pruning for ``keys`` ((field, term) pairs): the
+        tbucket partitions of their terms, then their term/field values.
+        Buckets are computed driver-side (functions/hashing.py XXH64
+        parity with F.xxhash64)."""
         terms = sorted({t for _, t in keys})
-        buckets = sorted({term_bucket(t, self.n_term_buckets) for t in terms})
-        return self.postings.where(
-            F.col("tbucket").isin(buckets) & F.col("term").isin(terms)
-            & F.col("field").isin(sorted({f for f, _ in keys}))
-        )
+        return {
+            "tbucket": sorted({term_bucket(t, self.n_term_buckets)
+                               for t in terms}),
+            "term": terms,
+            "field": sorted({f for f, _ in keys}),
+        }
+
+    def postings_scan(self, keys) -> DataFrame:
+        """The Spark postings table pruned to ``keys``: ``_key_filter``
+        reaches the parquet reader as partition / pushed filters."""
+        scan = self.postings
+        for c, values in self._key_filter(keys).items():
+            scan = scan.where(F.col(c).isin(values))
+        return scan
 
     def fetch_postings(self, keys: list[tuple[str, str]]) -> dict:
-        """(field, term) → PostingList, one pruned parquet scan."""
+        """(field, term) → PostingList, read into the term cache."""
         missing = [k for k in keys if k not in self._term_cache]
         if missing:
-            scan = self.postings_scan(missing)
+            flt = self._key_filter(missing)
             if self.max_postings_per_term is not None:
-                # column-pruned pre-check: reads term_df only, no blobs
-                heavy = (
-                    scan.select("field", "term", "term_df").distinct()
-                    .where(F.col("term_df") > self.max_postings_per_term)
-                    .collect()
-                )
+                # no blob column is read before the cap check passes
+                heads = self._read("postings", ["field", "term", "term_df"],
+                                   **flt)
+                want = set(missing)
+                heavy = [] if heads is None else [
+                    r for r in heads.filter(
+                        pc.field("term_df") > self.max_postings_per_term
+                    ).to_pylist() if (r["field"], r["term"]) in want]
                 if heavy:
                     worst = max(heavy, key=lambda r: r["term_df"])
                     raise HotTermError(
@@ -346,9 +409,9 @@ class SearchIndex:
                         "through the distributed search_batch plan instead "
                         "of the driver posting cache"
                     )
-            rows = scan.select(*POSTING_COLS).collect()
+            rows = self._read("postings", POSTING_COLS, **flt)
             grouped: dict = {}
-            for r in rows:
+            for r in rows.to_pylist() if rows is not None else []:
                 grouped.setdefault((r["field"], r["term"]), []).append(r)
             for k in missing:
                 self._term_cache[k] = PostingList.from_rows(
@@ -359,51 +422,39 @@ class SearchIndex:
                        cap: int = qsyntax.MAX_PATTERN_TERMS) -> list[str]:
         """Vocabulary terms matching a Whoosh wildcard ``pattern``.
 
-        A column-pruned dictionary scan over the postings table: only
-        the (field, term) columns leave parquet (no blobs), the literal
-        prefix before the first wildcard is pushed down as a
-        ``StartsWith`` filter (prunes row groups on the term-sorted
-        shards), and the full anchored regex runs JVM-side.  tbucket
-        partition pruning can't apply (the bucket is a hash of the
-        whole term) — acceptable: this is a dictionary scan, not a
-        postings scan.  Deterministic: term-sorted, capped at ``cap``.
+        A dictionary scan of the postings table that reads only the
+        (field, term) columns (no blobs): the literal prefix before the
+        first wildcard filters first, then the full anchored regex.
+        tbucket partition pruning can't apply (the bucket is a hash of
+        the whole term).  Deterministic: sorted distinct terms, capped
+        at ``cap``.
         """
-        base = self.postings.select("term").where(F.col("field") == field)
+        rows = self._read("postings", ["term"], field=[field])
+        if rows is None:
+            return []
+        terms = rows["term"]
         prefix = qsyntax.pattern_prefix(pattern)
         if prefix:
-            base = base.where(F.col("term").startswith(prefix))
-        rows = (
-            base.where(F.col("term").rlike(qsyntax.pattern_regex(pattern)))
-            .distinct().orderBy("term").limit(cap).collect()
-        )
-        return [r["term"] for r in rows]
+            terms = terms.filter(pc.starts_with(terms, pattern=prefix))
+        terms = terms.filter(pc.match_substring_regex(
+            terms, pattern=qsyntax.pattern_regex(pattern)))
+        return pc.unique(terms).sort()[:cap].to_pylist()
 
     # -- tombstones (deletes since the last compaction) -------------------
     @property
     def tombstones(self) -> np.ndarray:
         """Sorted doc_ids deleted but not yet compacted away.
 
-        Cached after the first read (serving-path searches must not pay
-        a Spark job each); the set is the pinned snapshot's, so a
-        reader sees later deletes by reopening the index.  Driver-held
-        by design: the set is bounded by compaction
+        Cached after the first read; the set is the pinned snapshot's,
+        so a reader sees later deletes by reopening the index.
+        Driver-held by design: the set is bounded by compaction
         cadence (``ingest.compact`` empties it), the same reasoning
         Lucene uses for its live-docs bitset."""
         if self._tombstones is None:
-            if not self.has_table("tombstones"):
-                self._tombstones = np.empty(0, dtype=np.int64)
-            elif catalog.iceberg_enabled(self.spark):
-                rows = self.table("tombstones").select("doc_id").collect()
-                self._tombstones = np.sort(
-                    np.array([r["doc_id"] for r in rows], dtype=np.int64)
-                )
-            else:
-                # serving path: pyarrow footer-to-driver read, no Spark
-                # job on index open
-                arr = catalog.read_table_arrow(
-                    self.index_dir, "tombstones", ["doc_id"], self.snapshot
-                )["doc_id"].to_numpy(zero_copy_only=False)
-                self._tombstones = np.sort(arr.astype(np.int64))
+            rows = self._read("tombstones", ["doc_id"])
+            self._tombstones = np.sort(
+                np.empty(0, dtype=np.int64) if rows is None
+                else rows["doc_id"].to_numpy().astype(np.int64))
             if self.max_tombstone_frac is not None:
                 frac = self._tombstones.size / max(1, self.stats.n_docs)
                 if frac > self.max_tombstone_frac:
@@ -421,23 +472,17 @@ class SearchIndex:
 
     # -- auxiliary tables ------------------------------------------------
     def pagerank_for(self, doc_ids: list[int]) -> dict[int, float]:
-        if self._pagerank is None:
-            if not self.has_table("pagerank"):
-                return {}
-            self._pagerank = self.table("pagerank")
-        rows = self._pagerank.where(
-            F.col("doc_id").isin([int(d) for d in doc_ids])
-        ).collect()
-        return {int(r["doc_id"]): float(r["pr"]) for r in rows}
+        rows = self._read("pagerank", ["doc_id", "pr"],
+                          doc_id=[int(d) for d in doc_ids])
+        if rows is None:
+            return {}
+        return dict(zip(rows["doc_id"].to_pylist(), rows["pr"].to_pylist()))
 
     def doc_meta(self, doc_ids: list[int]) -> dict[int, dict]:
-        if self._docs is None:
-            self._docs = self.table("docs")
-        rows = (
-            self._docs.where(F.col("doc_id").isin([int(d) for d in doc_ids]))
-            .select("doc_id", "url", "title", "clean_text").collect()
-        )
-        return {int(r["doc_id"]): r.asDict() for r in rows}
+        rows = self._read("docs", ["doc_id", "url", "title", "clean_text"],
+                          doc_id=[int(d) for d in doc_ids])
+        return {} if rows is None else {
+            r["doc_id"]: r for r in rows.to_pylist()}
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,9 @@ commit makes them visible; open-or-build is ``index.exists_in``/
   own table,
 * readers pin a snapshot: ``read_table`` reads the files it lists,
   with ``basePath`` at the table dir (tbucket partition pruning holds)
-  and the schema from the registry (no schema-inference job),
+  and the schema from the registry (no schema-inference job);
+  ``arrow_dataset`` reads the same files with pyarrow on the driver,
+  for lookups that run no Spark job,
 * ``sweep`` is the one recovery rule: the writer deletes every table
   file the snapshot neither lists nor retires — a crashed op's orphans,
   and the files retired one commit earlier, so a pinned reader stays
@@ -486,18 +488,35 @@ def footer_stats(root: str, name: str,
     return n_rows, mn, mx
 
 
-def read_table_arrow(root: str, name: str, columns: list[str] | None = None,
-                     snap: dict | None = None):
-    """Read a SMALL table directly into a pyarrow Table on the driver —
-    no Spark job.  For driver-held metadata sets (tombstones between
-    compactions, schema/stat sidecars); anything row-scaled stays on
-    ``read_table``."""
+def arrow_dataset(root: str, name: str, snap: dict | None = None):
+    """The files ``snap`` (default: ``snapshot(root)``) lists for table
+    ``name`` as a ``pyarrow.dataset`` on the driver — no Spark job — or
+    None when it lists none.  Hive partitions (``tbucket=``,
+    ``seg_id=``) are parsed from the path below the table dir only, so
+    a ``k=v`` dir above it (in the root) is not taken for a partition.
+    A filtered scan skips the files and row groups whose partition value
+    or footer min/max rules out a comparison in the filter (pyarrow
+    checks no ``is_in`` against footers)."""
     import pyarrow.dataset as ds
 
     files = table_files(root, name, snap)
     if not files:
+        return None
+    return ds.dataset(files, format="parquet", partitioning="hive",
+                      partition_base_dir=table_path(root, name))
+
+
+def read_table_arrow(root: str, name: str, columns: list[str] | None = None,
+                     snap: dict | None = None):
+    """Read a whole table into a pyarrow Table on the driver — no Spark
+    job (``arrow_dataset``).  Every row lands in driver memory: for
+    driver-sized tables (tombstones between compactions).  A row-scaled
+    table is read through ``arrow_dataset`` with a key filter
+    (``SearchIndex``'s lookups) or through ``read_table``."""
+    dset = arrow_dataset(root, name, snap)
+    if dset is None:
         raise FileNotFoundError(table_path(root, name))
-    return ds.dataset(files, format="parquet").to_table(columns=columns)
+    return dset.to_table(columns=columns)
 
 
 def completed_segments(spark: SparkSession, root: str, stage: str) -> set[int]:
