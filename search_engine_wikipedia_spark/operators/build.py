@@ -6,7 +6,7 @@ Pipeline (each stage is a committed catalog table; SURVEY.md §3.1):
         ──tokenize A2/A3, map-side tf──► term_freqs (seg-partitioned)
         ──groupBy(term,field,seg) encode──► postings_seg   [SPIMI]
         ──groupBy(term,field,shard) merge──► postings      [salted]
-        └─► doc_stats / field_stats
+        ──Σ cf per field, doc count──► field_stats
 
 Reference analogue: ``writer(limitmb=2048, procs=4, multisegment=True)``
 (``indexing/index.py:120``) builds per-process segments with no global
@@ -219,45 +219,26 @@ def term_freqs(docs: DataFrame, n_segments: int, n_docs: int,
     return tf.withColumn("seg_id", seg_of)
 
 
-def doc_stats_from_tf(docs: DataFrame, tf: DataFrame) -> DataFrame:
-    """Per-doc analyzed field lengths (BM25 ``fl``); 0 where no tokens."""
-    per_field = (
-        tf.groupBy("doc_id", "field").agg(F.first("fl").alias("fl"))
-        .groupBy("doc_id")
-        .pivot("field", [TEXT_FIELD, TITLE_FIELD]).agg(F.first("fl"))
-        .withColumnsRenamed({TEXT_FIELD: "len_text", TITLE_FIELD: "len_title"})
-    )
-    return (
-        docs.select("doc_id")
-        .join(per_field, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("len_text", F.lit(0)).cast("int").alias("len_text"),
-            F.coalesce("len_title", F.lit(0)).cast("int").alias("len_title"),
-        )
-    )
-
-
-def field_stats_from_doc_stats(doc_stats: DataFrame) -> DataFrame:
-    """Global per-field stats: total_len, doc_count, avg_len.
+def field_stats(postings: DataFrame, n_docs: int) -> DataFrame:
+    """Global per-field stats of a postings table: total_len, doc_count,
+    avg_len, one row per field whether or not it holds a posting.
 
     BM25 semantics (Whoosh ``avg_field_length``): avg = total field
     tokens / doc_count_all — computed GLOBALLY, before any scoring.
+    ``fl`` is a field's token count and ``tf`` counts each of those
+    tokens once, so a field's Σ ``cf`` over its postings is its total
+    length.  ``n_docs`` is the caller's doc count: under a table
+    catalog there are no snapshot footers to count from.
     """
-    agg = doc_stats.agg(
-        F.sum("len_text").alias("t"),
-        F.sum("len_title").alias("ti"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    n = int(agg["n"]) or 1
-    spark = doc_stats.sparkSession
+    totals = {r["field"]: int(r["t"]) for r in postings.groupBy("field")
+              .agg(F.sum("cf").alias("t")).collect()}
     rows = [
-        {"field": TEXT_FIELD, "total_len": int(agg["t"] or 0),
-         "doc_count": int(agg["n"]), "avg_len": (int(agg["t"] or 0)) / n},
-        {"field": TITLE_FIELD, "total_len": int(agg["ti"] or 0),
-         "doc_count": int(agg["n"]), "avg_len": (int(agg["ti"] or 0)) / n},
+        {"field": f, "total_len": totals.get(f, 0), "doc_count": n_docs,
+         "avg_len": totals.get(f, 0) / max(1, n_docs)}
+        for f in (TEXT_FIELD, TITLE_FIELD)
     ]
-    return spark.createDataFrame(rows, schema=schemas.FIELD_STATS)
+    return postings.sparkSession.createDataFrame(rows,
+                                                 schema=schemas.FIELD_STATS)
 
 
 # ---------------------------------------------------------------------------
@@ -502,8 +483,8 @@ class IndexBuilder:
     index.py:122-146.
     """
 
-    STAGES = ("docs", "term_freqs", "doc_stats", "field_stats",
-              "postings_seg", "postings")
+    STAGES = ("docs", "term_freqs", "postings_seg", "postings",
+              "field_stats")
 
     def __init__(
         self,
@@ -634,23 +615,17 @@ class IndexBuilder:
             self._timed("term_freqs", _tf)
         tf = catalog.read_table(spark, root, "term_freqs")
 
-        if not catalog.table_exists(root, "doc_stats"):
-            def _ds():
-                ds = doc_stats_from_tf(docs, tf)
-                catalog.write_table(ds, root, "doc_stats")
-            self._timed("doc_stats", _ds)
-        doc_stats = catalog.read_table(spark, root, "doc_stats")
-
-        if not catalog.table_exists(root, "field_stats"):
-            def _fs():
-                fs = field_stats_from_doc_stats(doc_stats)
-                catalog.write_table(fs, root, "field_stats")
-            self._timed("field_stats", _fs)
-
         if not catalog.table_exists(root, "postings"):
             self._build_segments_resumable(tf)
             self._timed("postings", lambda: merge_postings_stage(
                 spark, root, self.n_segments))
+
+        if not catalog.table_exists(root, "field_stats"):
+            def _fs():
+                fs = field_stats(catalog.read_table(spark, root, "postings"),
+                                 n_docs)
+                catalog.write_table(fs, root, "field_stats")
+            self._timed("field_stats", _fs)
 
     def _build_segments_resumable(self, tf: DataFrame) -> None:
         """Segment phase in ``segment_batches`` batches, one commit

@@ -6,14 +6,15 @@ appends, updates and deletes. This module adds Lucene-NRT-style
 segment-level increments on top of ``IndexBuilder``'s catalog layout:
 
 * new pages become NEW doc_ids (continuing after the current max) and
-  ONE new segment (seg_id = current max + 1) — docs / term_freqs /
-  doc_stats append; field_stats recompute from the (cheap) doc_stats
-  table; the new segment's postings encode exactly like a base segment,
+  ONE new segment (seg_id = current max + 1) — docs / term_freqs
+  append; the new segment's postings encode exactly like a base
+  segment,
 * the global ``postings`` table re-merges only the tbucket partitions
   the delta touches.  Because delta segments hold strictly-higher doc
   ranges, the monotone-salt invariant of ``merge_segments`` (seg_id ↑ ⇒
   doc range ↑) holds with ``n_segments = total segment count``, so
-  head-term skew handling is identical to a fresh build,
+  head-term skew handling is identical to a fresh build; field_stats
+  is recomputed from the re-merged postings' Σ cf per field,
 * deletes tombstone docs (Lucene live-docs semantics — survivor scores
   unchanged); ``compact`` physically removes them, re-encoding only the
   touched segments and re-merging only the touched tbuckets, after
@@ -64,7 +65,7 @@ from .build import (
     assign_doc_ids,
     build_segments,
     docs_from_pages,
-    field_stats_from_doc_stats,
+    field_stats,
     merge_segments,
     tbucket_col,
     term_freqs,
@@ -238,9 +239,8 @@ def append_pages(
     """Append a page batch to the index at ``root``; returns the number
     of new documents indexed (0 for an empty/all-duplicate batch).
 
-    New urls only — re-crawled urls already in the index are skipped
-    (the reference's corpus is deduplicated upstream; updating in place
-    would need doc tombstones, out of scope).
+    New urls only — a url already live in the index is skipped; a
+    recrawl that replaces a page goes through ``upsert_pages``.
 
     Crash-safe: the batch becomes visible in one commit, so a crash
     publishes none of it and a foreachBatch epoch replay re-applies the
@@ -312,15 +312,6 @@ def append_pages(
     tf_delta = catalog.read_table(spark, root, "term_freqs").where(
         F.col("seg_id") == next_seg
     )
-    from .build import doc_stats_from_tf
-
-    ds_new = doc_stats_from_tf(new_docs, tf_delta)
-    _append_table(ds_new, root, "doc_stats")
-    doc_stats = catalog.read_table(spark, root, "doc_stats")
-    catalog.write_table(
-        field_stats_from_doc_stats(doc_stats), root, "field_stats"
-    )
-
     seg_df = build_segments(tf_delta).repartition(1, "seg_id")
     catalog.write_table(seg_df, root, "postings_seg",
                         partition_by=["seg_id"], drop=[])
@@ -329,6 +320,10 @@ def append_pages(
     ])
 
     remerge(spark, root, delta_seg=next_seg)
+    catalog.write_table(
+        field_stats(catalog.read_table(spark, root, "postings"),
+                    n_rows + n_new),
+        root, "field_stats")
     return n_new
 
 
@@ -632,7 +627,7 @@ def compact(spark: SparkSession, root: str) -> int:
     (survivors keep their original ids — re-densifying would invalidate
     the pagerank table and every external doc_id reference).
 
-    Scale shape: one pushed-filter anti-join pass over docs/doc_stats/
+    Scale shape: one pushed-filter anti-join pass over docs and
     term_freqs (left-anti against the tombstones TABLE — no driver-held
     id list in any plan, so a mass delete compacts with the same plan
     shape as a takedown of ten), re-encode of only the SEGMENTS that contained deleted
@@ -651,11 +646,11 @@ def compact(spark: SparkSession, root: str) -> int:
     # driver copy feeds ONLY footer min/max pruning; every Spark plan
     # joins the tombstones TABLE instead (bounded by compaction
     # cadence — pyarrow, no Spark job)
-    dead = np.sort(catalog.read_table_arrow(
-        root, "tombstones", ["doc_id"])["doc_id"].to_numpy(
+    dead = np.sort(catalog.arrow_dataset(root, "tombstones").to_table(
+        columns=["doc_id"])["doc_id"].to_numpy(
         zero_copy_only=False).astype(np.int64))
-    n_total = catalog.footer_stats(root, "docs")[0]
-    if n_total - dead.size <= 0:
+    n_live = catalog.footer_stats(root, "docs")[0] - dead.size
+    if n_live <= 0:
         raise ValueError(
             "compact would delete the entire corpus; drop the "
             "index and rebuild instead"
@@ -681,12 +676,7 @@ def compact(spark: SparkSession, root: str) -> int:
     # whose doc_id range holds a dead doc are rewritten — O(touched
     # files)
     rewritten = {tbl: _selective_rewrite(root, tbl, dead, dead_df)
-                 for tbl in ("docs", "doc_stats", "term_freqs")}
-    catalog.write_table(
-        field_stats_from_doc_stats(
-            catalog.read_table(spark, root, "doc_stats")),
-        root, "field_stats",
-    )
+                 for tbl in ("docs", "term_freqs")}
 
     # re-encode only the segments that lost docs; a segment whose docs
     # all died gets no new files and leaves the snapshot
@@ -705,6 +695,9 @@ def compact(spark: SparkSession, root: str) -> int:
         ])
 
     remerge(spark, root, buckets=affected_buckets)
+    catalog.write_table(
+        field_stats(catalog.read_table(spark, root, "postings"), n_live),
+        root, "field_stats")
 
     if catalog.table_exists(root, "pagerank"):
         # drop deleted rows; survivor priors stay as built (the link

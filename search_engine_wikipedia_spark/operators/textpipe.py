@@ -155,9 +155,10 @@ def _tf_lens_stats(documents: DataFrame, cache: bool = True):
     MUST release (``tf.unpersist()``) once materialized; callers that
     can't control the consumption point (``bm25_score_all``) pass
     ``cache=False`` and accept re-tokenization instead of leaking a
-    session-lifetime cache.  On a 100 TB deployment these are the
-    precomputed ``doc_stats``/``field_stats`` tables of the index
-    build (operators/build.py), not an inline cache.
+    session-lifetime cache.  On a 100 TB deployment these come from
+    the index build (operators/build.py), not an inline cache: the
+    per-doc lengths are the ``fl`` its postings carry, the global stats
+    its ``field_stats`` table.
     """
     tf = tokens_tf(documents)
     if cache:

@@ -29,14 +29,8 @@ DOCS = T.StructType([
     T.StructField("links", T.ArrayType(T.StringType()), True),
 ])
 
-# Per-document analyzed token counts (BM25 field lengths; cf.
-# searcher.py:153 field_length / doc_count surfaces).
-DOC_STATS = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("len_text", T.IntegerType(), False),
-    T.StructField("len_title", T.IntegerType(), False),
-])
-
+# Global BM25 corpus statistics per field (searcher.py:153
+# field_length / doc_count surfaces).
 FIELD_STATS = T.StructType([
     T.StructField("field", T.StringType(), False),
     T.StructField("total_len", T.LongType(), False),

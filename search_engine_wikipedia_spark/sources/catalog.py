@@ -506,19 +506,6 @@ def arrow_dataset(root: str, name: str, snap: dict | None = None):
                       partition_base_dir=table_path(root, name))
 
 
-def read_table_arrow(root: str, name: str, columns: list[str] | None = None,
-                     snap: dict | None = None):
-    """Read a whole table into a pyarrow Table on the driver — no Spark
-    job (``arrow_dataset``).  Every row lands in driver memory: for
-    driver-sized tables (tombstones between compactions).  A row-scaled
-    table is read through ``arrow_dataset`` with a key filter
-    (``SearchIndex``'s lookups) or through ``read_table``."""
-    dset = arrow_dataset(root, name, snap)
-    if dset is None:
-        raise FileNotFoundError(table_path(root, name))
-    return dset.to_table(columns=columns)
-
-
 def completed_segments(spark: SparkSession, root: str, stage: str) -> set[int]:
     """Seg ids of the ``seg_id=`` partitions the snapshot lists for a
     stage (segment-level resume): the segment phase commits each batch

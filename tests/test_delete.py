@@ -426,7 +426,7 @@ def test_full_compact_plans_have_no_inlist(spark, corpus,
 
     monkeypatch.setattr(ingest, "_survivors", spy)
     assert ingest.compact(spark, root) == len(victims)
-    assert len(plans) >= 3  # docs, doc_stats, term_freqs at minimum
+    assert len(plans) == 2  # docs, term_freqs
     for p in plans:
         assert " IN (" not in p and "isin" not in p
         assert "LeftAnti" in p

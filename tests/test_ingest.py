@@ -87,6 +87,48 @@ def test_incremental_equals_full_rebuild(spark, corpus, built_index,
     assert got == want
 
 
+def _field_sums(df, col):
+    return {r["field"]: int(r["t"])
+            for r in df.groupBy("field").agg(F.sum(col).alias("t")).collect()}
+
+
+def test_field_stats_are_postings_cf_sums_through_maintenance(
+        spark, corpus, tmp_path_factory):
+    """field_stats holds, per field, Σ fl over the docs (recounted here
+    from term_freqs) and the docs row count, and that Σ fl is the
+    postings' Σ cf — after a build, an append, a delete and a compact,
+    with no per-doc stats table in the snapshot."""
+    root = str(tmp_path_factory.mktemp("fs_idx"))
+    IndexBuilder(spark, root, n_segments=4, shard_size=200).build(
+        _pages_df(spark, corpus[:200]), resume=False)
+
+    def check():
+        assert "doc_stats" not in catalog.read_snapshot(root)["tables"]
+        n = catalog.read_table(spark, root, "docs").count()
+        lens = _field_sums(
+            catalog.read_table(spark, root, "term_freqs")
+            .select("doc_id", "field", "fl").distinct(), "fl")
+        want = {f: (lens.get(f, 0), n, lens.get(f, 0) / n)
+                for f in ("text", "title")}
+        got = {r["field"]: (r["total_len"], r["doc_count"], r["avg_len"])
+               for r in catalog.read_table(
+                   spark, root, "field_stats").collect()}
+        assert got == want
+        assert _field_sums(catalog.read_table(spark, root, "postings"),
+                           "cf") == lens
+
+    check()
+    assert ingest.append_pages(spark, root,
+                               _pages_df(spark, corpus[200:])) > 0
+    check()
+    victims = [r["url"] for r in catalog.read_table(spark, root, "docs")
+               .orderBy("doc_id").select("url").collect()][::20]
+    assert ingest.delete_urls(spark, root, victims) == len(victims)
+    check()
+    assert ingest.compact(spark, root) == len(victims)
+    check()
+
+
 def test_append_is_idempotent_on_replay(spark, corpus, incremental_root):
     """Re-appending already-ingested urls is a no-op (the foreachBatch
     replay scenario)."""

@@ -56,7 +56,7 @@ def test_reader_opened_during_compact_sees_the_committed_index(
     seen = []
 
     def reader_mid_compact(*a, **kw):
-        if not seen:  # compact has rewritten docs, doc_stats, term_freqs
+        if not seen:  # compact has rewritten docs and term_freqs
             seen.append(_results(SearchIndex(spark, root), QUERIES[:6]))
         return orig(*a, **kw)
 
