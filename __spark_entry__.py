@@ -657,8 +657,11 @@ def _wand_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Internal cross-check for the flagship WAND path: every doc in
     the block-max kernel's top-10 (per ENGINE_QUERIES, AND group) must
     appear, with the same BM25F score, in an INDEPENDENT relational
-    plan over the same index tables
-    (plans/query.py:search_batch_relational — no WAND, no codec).
+    plan over the same index's ``docs`` table, tokenized afresh with
+    its recorded analyzers, and its ``field_stats``
+    (plans/query.py:search_batch_relational — no WAND, no codec, no
+    stored posting), so the segment encode, the merge, the codec and
+    the kernel are checked together.
 
     The join is per (query, doc) — not per rank — with a 2e-6 score
     tolerance: the two paths sum float leaf scores in different orders,

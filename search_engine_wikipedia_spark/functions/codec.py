@@ -33,38 +33,7 @@ BLOCK_SIZE = 128
 def vb_encode(values: np.ndarray) -> bytes:
     """VB-encode a uint64 array: 7 data bits per byte, MSB set on the
     terminating (least-significant) byte of each value."""
-    values = np.asarray(values, dtype=np.uint64)
-    if values.size == 0:
-        return b""
-    # number of 7-bit groups per value (at least 1)
-    nbits = np.zeros(values.shape, dtype=np.int64)
-    v = values.copy()
-    # max 10 groups for 64-bit
-    nbytes = np.ones(values.shape, dtype=np.int64)
-    v >>= np.uint64(7)
-    while v.any():
-        nbytes += (v > 0).astype(np.int64)
-        v >>= np.uint64(7)
-    del nbits
-
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    # end offset of each value's byte run
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    # big-endian 7-bit groups: most significant group first, last byte |= 0x80
-    # Fill per byte-position from the end (value & 0x7f, then shift).
-    max_len = int(nbytes.max())
-    shifted = values.copy()
-    for pos in range(max_len):  # ≤10 iterations, each vectorized
-        idx = nbytes > pos  # values that still have a byte at this position
-        target = ends[idx] - 1 - pos
-        byte = (shifted[idx] & np.uint64(0x7F)).astype(np.uint8)
-        if pos == 0:
-            byte |= np.uint8(0x80)  # terminator flag on least-significant byte
-        out[target] = byte
-        shifted = shifted >> np.uint64(7)
-    return out.tobytes()
+    return _vb_encode_arr(values)[0].tobytes()
 
 
 def vb_decode(data: bytes) -> np.ndarray:
@@ -81,13 +50,8 @@ def vb_decode(data: bytes) -> np.ndarray:
     out = np.zeros(n_values, dtype=np.uint64)
     # position of byte within its group, from the end:
     ends = np.flatnonzero(is_end)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
     pos_from_end = (ends[group] - np.arange(raw.size)).astype(np.uint64)
     np.add.at(out, group, payload << (np.uint64(7) * pos_from_end))
-    del lengths
     return out
 
 
@@ -316,7 +280,6 @@ def decode_blocks(
     block_doc_off: list,
     block_tf_off: list,
     block_fl_off: list,
-    n_postings: int,
     block_indices: np.ndarray,
 ):
     """Decode only the selected blocks (sorted indices) of a posting list.
@@ -324,7 +287,6 @@ def decode_blocks(
     Returns (doc_ids, tfs, fls) restricted to those blocks — the
     random-access path used by the block-max scorer to skip blocks.
     """
-    nblocks = len(block_doc_off)
     d_end = list(block_doc_off[1:]) + [len(doc_blob)]
     t_end = list(block_tf_off[1:]) + [len(tf_blob)]
     f_end = list(block_fl_off[1:]) + [len(fl_blob)]
@@ -338,31 +300,8 @@ def decode_blocks(
     if not doc_parts:
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    del nblocks, n_postings
     return (
         np.concatenate(doc_parts),
         np.concatenate(tf_parts),
         np.concatenate(fl_parts),
     )
-
-
-def merge_encoded_segments(segments):
-    """k-way merge of per-segment posting blobs for one (term, field).
-
-    ``segments``: iterable of (doc_blob, tf_blob, fl_blob).  Doc IDs are
-    globally unique across segments (a doc lives in exactly one
-    segment), so the merge is decode → concat → argsort → re-encode.
-    Returns decoded, globally sorted (doc_ids, tfs, fls) so the caller
-    can re-encode whole or in shards.
-    """
-    doc_parts, tf_parts, fl_parts = [], [], []
-    for doc_blob, tf_blob, fl_blob in segments:
-        d, t, f = decode_postings(doc_blob, tf_blob, fl_blob)
-        doc_parts.append(d)
-        tf_parts.append(t)
-        fl_parts.append(f)
-    doc_ids = np.concatenate(doc_parts)
-    tfs = np.concatenate(tf_parts)
-    fls = np.concatenate(fl_parts)
-    order = np.argsort(doc_ids, kind="stable")
-    return doc_ids[order], tfs[order], fls[order]

@@ -3,26 +3,32 @@
 Pipeline (each stage is a committed catalog table; SURVEY.md §3.1):
 
   pages ──filter S2/S3──► docs (clean T1 + links T2, dense doc_ids)
-        ──tokenize A2/A3, map-side tf──► term_freqs (seg-partitioned)
-        ──groupBy(term,field,seg) encode──► postings_seg   [SPIMI]
-        ──groupBy(term,field,shard) merge──► postings      [salted]
+        ──tokenize A2/A3, map-side tf,
+          groupBy(term,field,seg) encode──► postings_seg   [SPIMI]
+        ──groupBy(term,field,shard) re-encode──► postings  [salted]
         ──Σ cf per field, doc count──► field_stats
 
 Reference analogue: ``writer(limitmb=2048, procs=4, multisegment=True)``
-(``indexing/index.py:120``) builds per-process segments with no global
-merge; our build DOES the global merge (north_rule) and handles
-head-term skew *by construction*: a term whose global df exceeds
-``shard_size`` is merged into multiple doc-range shards, one per salted
-reduce group, so no single reduce task ever sees more than
-``~shard_size`` postings.  Per-segment lineage rows make the segment
-phase resumable (re-run only missing segments).
+(``indexing/index.py:120``) builds per-process segments straight from
+the analyzer with no global merge; our build DOES the global merge
+(north_rule) and handles head-term skew *by construction*: a term whose
+global df exceeds ``shard_size`` is merged into multiple doc-range
+shards, one per salted reduce group, so no single reduce task ever sees
+more than ``~shard_size`` postings.  Per-segment lineage rows make the
+segment phase resumable (re-run only missing segments, tokenizing only
+their docs).
+
+Every re-encode of existing blobs — the merge, ``ingest.compact``
+dropping dead docs and ``ingest.optimize_segments`` regrouping
+segments — runs one decode→encode kernel (``reencode``), which refuses
+a group whose doc ids are not strictly ascending.
 
 Scale notes (the 100 TB story):
 * the only wide exchanges are (1) the dense-id range partition,
   (2) groupBy(term,field,seg_id) and (3) groupBy(term,field,salt) —
   all keyed fine-grained, skew-free by construction;
 * tf is combined map-side inside the tokenizer UDF (one row per
-  (doc,term), not per token occurrence) before shuffle (1);
+  (doc,term), not per token occurrence) before shuffle (2);
 * all per-row text work is Arrow-batched pandas — no per-row Python.
 """
 
@@ -161,23 +167,26 @@ def assign_doc_ids(df: DataFrame, key: str = "url", n_parts: int | None = None,
 # ---------------------------------------------------------------------------
 # Stage 2 — term frequencies (I1: the partial, map-side tf aggregation)
 # ---------------------------------------------------------------------------
-def term_freqs(docs: DataFrame, n_segments: int, n_docs: int,
-               text_analyzer=analyze_text,
+def segment_of(n_segments: int, n_docs: int):
+    """A doc's segment: the range bucket of its doc_id.  Doc ranges are
+    contiguous per segment, which later lets merged shards stay
+    doc-sorted by construction."""
+    return F.least(
+        F.lit(n_segments - 1),
+        (F.col("doc_id") * n_segments / F.lit(n_docs)).cast("int"),
+    )
+
+
+def term_freqs(docs: DataFrame, text_analyzer=analyze_text,
                title_analyzer=analyze_title) -> DataFrame:
-    """docs → (term, field, doc_id, tf, fl, seg_id).
+    """docs → (term, field, doc_id, tf, fl).
 
     Tokenization (default A3/A2; any ``functions.textproc.ANALYZERS``
     entry — A1/A4/A5 — can be swapped in per field) and the
     per-document tf count happen inside one Arrow batch — the shuffle
     that follows carries one row per unique (doc, term), not per token
-    occurrence (map-side combine).  ``seg_id`` is the document's range
-    bucket: doc ranges are contiguous per segment, which later lets
-    merged shards stay doc-sorted by construction.
+    occurrence (map-side combine).
     """
-    seg_of = F.least(
-        F.lit(n_segments - 1),
-        (F.col("doc_id") * n_segments / F.lit(n_docs)).cast("int"),
-    )
 
     def emit(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
@@ -213,10 +222,9 @@ def term_freqs(docs: DataFrame, n_segments: int, n_docs: int,
                     "fl": out["fl"].astype("int32"),
                 })
 
-    tf = docs.select("doc_id", "title", "clean_text").mapInPandas(
+    return docs.select("doc_id", "title", "clean_text").mapInPandas(
         emit, schema=schemas.TERM_FREQS
     )
-    return tf.withColumn("seg_id", seg_of)
 
 
 def field_stats(postings: DataFrame, n_docs: int) -> DataFrame:
@@ -297,35 +305,112 @@ def _group_starts(pdf: pd.DataFrame, key_cols) -> np.ndarray:
 SEG_KEYS = ("term", "field", "seg_id")
 
 
+def _posting_body(doc, tfs, fls, starts) -> dict:
+    """The posting-body columns (``schemas._POSTING_BODY``, in order) of
+    the posting groups that begin at ``starts``; doc ids ascend within
+    each group."""
+    tfs = np.asarray(tfs, dtype=np.int64)
+    (d_b, t_b, f_b, bl, bmt, bmf, d_o, t_o, f_o) = codec.encode_groups(
+        np.asarray(doc, dtype=np.uint64), tfs.astype(np.uint64),
+        np.asarray(fls, dtype=np.uint64), starts)
+    return {
+        "df": np.diff(np.append(starts, len(doc))).astype("int32"),
+        "cf": np.add.reduceat(tfs, starts).astype("int64"),
+        "doc_ids": d_b, "tfs": t_b, "fls": f_b,
+        "block_last": bl, "block_max_tf": bmt, "block_min_fl": bmf,
+        "block_doc_off": d_o, "block_tf_off": t_o, "block_fl_off": f_o,
+    }
+
+
 def build_segments(tf: DataFrame) -> DataFrame:
-    """Encode one posting blob per (term, field, seg_id)."""
+    """Encode one posting blob per (term, field, seg_id) of tokenizer
+    rows (``term_freqs`` output with a ``seg_id``)."""
     n_parts = int(tf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     def encode_stream(batches):
         for chunk in _stream_group_chunks(batches, SEG_KEYS):
             starts = _group_starts(chunk, SEG_KEYS)
-            doc = chunk["doc_id"].to_numpy().astype(np.uint64)
-            tfs = chunk["tf"].to_numpy().astype(np.uint64)
-            fls = chunk["fl"].to_numpy().astype(np.uint64)
-            (d_b, t_b, f_b, bl, bmt, bmf, d_o, t_o, f_o) = (
-                codec.encode_groups(doc, tfs, fls, starts)
-            )
-            sizes = np.diff(np.append(starts, len(chunk)))
             yield pd.DataFrame({
                 "term": chunk["term"].to_numpy()[starts],
                 "field": chunk["field"].to_numpy()[starts],
                 "seg_id": chunk["seg_id"].to_numpy()[starts].astype("int32"),
-                "df": sizes.astype("int32"),
-                "cf": np.add.reduceat(tfs, starts).astype("int64"),
-                "doc_ids": d_b, "tfs": t_b, "fls": f_b,
-                "block_last": bl, "block_max_tf": bmt, "block_min_fl": bmf,
-                "block_doc_off": d_o, "block_tf_off": t_o, "block_fl_off": f_o,
+                **_posting_body(chunk["doc_id"].to_numpy(),
+                                chunk["tf"].to_numpy(),
+                                chunk["fl"].to_numpy(), starts),
             })
 
     return (
-        tf.repartition(n_parts, "term", "field", "seg_id")
-        .sortWithinPartitions("term", "field", "seg_id", "doc_id")
+        tf.repartition(n_parts, *SEG_KEYS)
+        .sortWithinPartitions(*SEG_KEYS, "doc_id")
         .mapInPandas(encode_stream, schema=schemas.POSTINGS_SEG)
+    )
+
+
+def reencode(chunk: pd.DataFrame, keys, dead=None):
+    """Decode the posting blobs of ``chunk`` — rows sorted by ``keys``,
+    then by seg_id — and encode one blob per group of equal ``keys``:
+    the one decode→encode kernel of the merge, ``compact`` and
+    ``optimize_segments``.  The postings of the doc ids in ``dead`` are
+    dropped, and a group left with none is dropped.
+
+    Returns the chunk row of each output group's first input row and
+    the groups' posting-body columns.  Raises ValueError on a group
+    whose doc ids are not strictly ascending: the segments must hold
+    disjoint doc ranges, ascending in seg_id.
+    """
+    rstarts = _group_starts(chunk, keys)
+    dfs = chunk["df"].to_numpy().astype(np.int64)
+    doc, tfs, fls = codec.decode_concat(
+        list(chunk["doc_ids"]), list(chunk["tfs"]), list(chunk["fls"]), dfs)
+    rows = np.diff(np.append(rstarts, len(chunk)))
+    gid = np.repeat(np.repeat(np.arange(rstarts.size), rows), dfs)
+    if dead is not None:
+        keep = ~np.isin(doc, dead)
+        doc, tfs, fls, gid = doc[keep], tfs[keep], fls[keep], gid[keep]
+    opens = np.ones(doc.size, dtype=bool)  # a posting opens its group
+    opens[1:] = gid[1:] != gid[:-1]
+    bad = np.flatnonzero(~opens[1:] & (doc[1:] <= doc[:-1]))
+    if bad.size:
+        row = rstarts[gid[bad[0]]]
+        raise ValueError(
+            f"doc ids of group {[chunk[k].iloc[row] for k in keys]} are "
+            f"not strictly ascending (doc {doc[bad[0] + 1]} after "
+            f"{doc[bad[0]]}): segment doc ranges overlap or are out of "
+            f"seg_id order; rebuild the index")
+    starts = np.flatnonzero(opens)
+    return rstarts[gid[starts]], _posting_body(doc, tfs, fls, starts)
+
+
+def reencode_segments(seg: DataFrame, new_seg=None, dead=None) -> DataFrame:
+    """Re-encode ``postings_seg`` rows through ``reencode``: one blob
+    per (term, field, ``new_seg``) — a Column over ``seg_id``, default
+    the row's own, with which ``optimize_segments`` maps consecutive
+    segments onto one — without the postings of the doc ids in the
+    driver array ``dead`` (``compact``), which reaches the tasks as a
+    broadcast, not as a literal in the plan."""
+    spark = seg.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    dead_b = None if dead is None else spark.sparkContext.broadcast(dead)
+    keys = ("term", "field", "_to")
+
+    def stream(batches):
+        drop = None if dead_b is None else dead_b.value
+        for chunk in _stream_group_chunks(batches, keys):
+            first, body = reencode(chunk, keys, drop)
+            if not first.size:  # every posting of the chunk died
+                continue
+            yield pd.DataFrame({
+                "term": chunk["term"].to_numpy()[first],
+                "field": chunk["field"].to_numpy()[first],
+                "seg_id": chunk["_to"].to_numpy()[first].astype("int32"),
+                **body,
+            })
+
+    return (
+        seg.withColumn("_to", F.col("seg_id") if new_seg is None else new_seg)
+        .repartition(n_parts, *keys)
+        .sortWithinPartitions(*keys, "seg_id")
+        .mapInPandas(stream, schema=schemas.POSTINGS_SEG)
     )
 
 
@@ -372,52 +457,24 @@ def merge_segments(
 
     def merge_stream(batches):
         for chunk in _stream_group_chunks(batches, MERGE_KEYS):
-            rstarts = _group_starts(chunk, MERGE_KEYS)  # row-level groups
-            dfs = chunk["df"].to_numpy().astype(np.int64)
-            doc, tfs, fls = codec.decode_concat(
-                list(chunk["doc_ids"]), list(chunk["tfs"]),
-                list(chunk["fls"]), dfs,
-            )
-            # posting-level group ids + starts
-            rsizes = np.diff(np.append(rstarts, len(chunk)))
-            row_gid = np.repeat(np.arange(rstarts.size), rsizes)
-            post_per_row = dfs
-            post_gid = np.repeat(row_gid, post_per_row)
-            gsizes = np.add.reduceat(post_per_row, rstarts)
-            gstarts = np.concatenate([[0], np.cumsum(gsizes)[:-1]]).astype(
-                np.int64)
-            # segments hold disjoint contiguous doc ranges, ascending in
-            # seg_id (rows arrive seg-sorted), so postings are already
-            # doc-sorted per group; lexsort is a cheap robustness net.
-            order = np.lexsort((doc, post_gid))
-            doc, tfs, fls = doc[order], tfs[order], fls[order]
-            (d_b, t_b, f_b, bl, bmt, bmf, d_o, t_o, f_o) = (
-                codec.encode_groups(doc.astype(np.uint64),
-                                    tfs.astype(np.uint64),
-                                    fls.astype(np.uint64), gstarts)
-            )
+            # the merge drops nothing: one output group per input group
+            first, body = reencode(chunk, MERGE_KEYS)
             segs = chunk["seg_id"].to_numpy()
-            rbounds = np.append(rstarts, len(chunk))
+            ends = np.append(first[1:], len(chunk))
             yield pd.DataFrame({
-                "term": chunk["term"].to_numpy()[rstarts],
-                "field": chunk["field"].to_numpy()[rstarts],
-                "shard_id": chunk["shard_id"].to_numpy()[rstarts]
+                "term": chunk["term"].to_numpy()[first],
+                "field": chunk["field"].to_numpy()[first],
+                "shard_id": chunk["shard_id"].to_numpy()[first]
                 .astype("int32"),
-                "n_shards": chunk["n_shards"].to_numpy()[rstarts]
+                "n_shards": chunk["n_shards"].to_numpy()[first]
                 .astype("int32"),
-                "term_df": chunk["term_df"].to_numpy()[rstarts]
+                "term_df": chunk["term_df"].to_numpy()[first]
                 .astype("int32"),
-                "term_cf": chunk["term_cf"].to_numpy()[rstarts]
+                "term_cf": chunk["term_cf"].to_numpy()[first]
                 .astype("int64"),
-                "df": gsizes.astype("int32"),
-                "cf": np.add.reduceat(tfs, gstarts).astype("int64"),
-                "doc_ids": d_b, "tfs": t_b, "fls": f_b,
-                "block_last": bl, "block_max_tf": bmt, "block_min_fl": bmf,
-                "block_doc_off": d_o, "block_tf_off": t_o, "block_fl_off": f_o,
-                "src_segs": [
-                    [int(s) for s in segs[a:b]]
-                    for a, b in zip(rbounds[:-1], rbounds[1:])
-                ],
+                **body,
+                "src_segs": [[int(s) for s in segs[a:b]]
+                             for a, b in zip(first, ends)],
             })
 
     n_parts = int(seg.sparkSession.conf.get("spark.sql.shuffle.partitions"))
@@ -483,8 +540,7 @@ class IndexBuilder:
     index.py:122-146.
     """
 
-    STAGES = ("docs", "term_freqs", "postings_seg", "postings",
-              "field_stats")
+    STAGES = ("docs", "postings_seg", "postings", "field_stats")
 
     def __init__(
         self,
@@ -599,24 +655,8 @@ class IndexBuilder:
             n_docs = docs.count()
         self.n_docs = n_docs
 
-        if not catalog.table_exists(root, "term_freqs"):
-            def _tf():
-                tf = term_freqs(docs, self.n_segments, n_docs,
-                                text_analyzer=self.text_analyzer,
-                                title_analyzer=self.title_analyzer)
-                # NOT partitionBy("seg_id"): the dynamic-partition writer
-                # external-sorts every task's rows by the partition key,
-                # and that sort's spill collapses under task concurrency
-                # (measured 68 s @2 cores → 190 s @8 on the same input).
-                # Rows leave the tokenizer doc-ordered, so seg_id is
-                # monotone per task and per-file min/max stats give the
-                # segment-batch scan the same pruning for free.
-                catalog.write_table(tf, root, "term_freqs")
-            self._timed("term_freqs", _tf)
-        tf = catalog.read_table(spark, root, "term_freqs")
-
         if not catalog.table_exists(root, "postings"):
-            self._build_segments_resumable(tf)
+            self._build_segments_resumable(docs)
             self._timed("postings", lambda: merge_postings_stage(
                 spark, root, self.n_segments))
 
@@ -627,23 +667,28 @@ class IndexBuilder:
                 catalog.write_table(fs, root, "field_stats")
             self._timed("field_stats", _fs)
 
-    def _build_segments_resumable(self, tf: DataFrame) -> None:
+    def _build_segments_resumable(self, docs: DataFrame) -> None:
         """Segment phase in ``segment_batches`` batches, one commit
-        each, after the batch's lineage rows: a killed build re-runs
-        only the segments the snapshot does not list (checkpointed
-        segment builds); a batch that died before its commit left only
-        files the resume's sweep deletes."""
+        each, after the batch's lineage rows: a batch tokenizes only
+        the docs of its segments and encodes their postings, so a
+        killed build re-runs only the segments the snapshot does not
+        list (checkpointed segment builds); a batch that died before
+        its commit left only files the resume's sweep deletes."""
         root, spark = self.index_dir, self.spark
         done = catalog.completed_segments(spark, root, "postings_seg")
         missing = [s for s in range(self.n_segments) if s not in done]
         if not missing:
             return
+        seg_of = segment_of(self.n_segments, self.n_docs)
 
         def _segs():
             per_batch = max(1, math.ceil(len(missing) / self.segment_batches))
             for b in range(0, len(missing), per_batch):
                 batch = missing[b:b + per_batch]
-                seg_df = build_segments(tf.where(F.col("seg_id").isin(batch)))
+                tf = term_freqs(docs.where(seg_of.isin(batch)),
+                                text_analyzer=self.text_analyzer,
+                                title_analyzer=self.title_analyzer)
+                seg_df = build_segments(tf.withColumn("seg_id", seg_of))
                 # ~one file per segment instead of tasks × segments
                 seg_df = seg_df.repartition(len(batch), "seg_id")
                 with catalog.transaction(root):

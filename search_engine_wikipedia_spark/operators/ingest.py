@@ -6,8 +6,8 @@ appends, updates and deletes. This module adds Lucene-NRT-style
 segment-level increments on top of ``IndexBuilder``'s catalog layout:
 
 * new pages become NEW doc_ids (continuing after the current max) and
-  ONE new segment (seg_id = current max + 1) — docs / term_freqs
-  append; the new segment's postings encode exactly like a base
+  ONE new segment (seg_id = current max + 1): the docs append, and the
+  batch's tokenizer output encodes the new segment exactly like a base
   segment,
 * the global ``postings`` table re-merges only the tbucket partitions
   the delta touches.  Because delta segments hold strictly-higher doc
@@ -19,7 +19,10 @@ segment-level increments on top of ``IndexBuilder``'s catalog layout:
   unchanged); ``compact`` physically removes them, re-encoding only the
   touched segments and re-merging only the touched tbuckets, after
   which the index is statistically identical to a fresh build over the
-  survivors; ``optimize_segments`` coalesces delta segments.
+  survivors; ``optimize_segments`` coalesces delta segments.  Both
+  re-encode segments from their blobs through the merge's kernel
+  (``build.reencode``): no op re-tokenizes an indexed doc, except
+  ``compact`` tokenizing the dead docs to find their tbuckets.
 
 Scoring after an append matches a from-scratch build over the union
 corpus exactly: df/cf/avgfl/N are global after the merge, so BM25
@@ -67,9 +70,21 @@ from .build import (
     docs_from_pages,
     field_stats,
     merge_segments,
+    reencode_segments,
     tbucket_col,
     term_freqs,
 )
+
+
+def _tokenize(root: str, docs: DataFrame) -> DataFrame:
+    """``term_freqs`` of ``docs`` with the analyzer chains recorded for
+    the index at ``root``, so new segments share the base segments'
+    vocabulary."""
+    from ..functions.textproc import ANALYZERS
+
+    meta = catalog.read_schema_meta(root)
+    return term_freqs(docs, ANALYZERS[meta["text_analyzer"]],
+                      ANALYZERS[meta["title_analyzer"]])
 
 
 def _append_table(df: DataFrame, root: str, name: str) -> None:
@@ -285,34 +300,18 @@ def append_pages(
     if n_new == 0:
         return 0
 
-    _, _, seg_mx = catalog.footer_stats(root, "term_freqs", "seg_id")
-    if seg_mx is None:  # stats-less writer — same fallback as above
-        seg_mx = catalog.read_table(spark, root, "term_freqs").agg(
-            F.max("seg_id")).collect()[0][0]
-    next_seg = int(seg_mx) + 1
+    next_seg = max(catalog.completed_segments(spark, root, "postings_seg"),
+                   default=-1) + 1
 
     _append_table(new_docs, root, "docs")
     catalog.append_lineage(spark, root, [
         {"stage": "docs", "seg_id": next_seg, "n_docs": n_new}
     ])
 
-    # one delta segment: constant seg_id (n_segments=1 over the batch);
-    # tokenized with the analyzer chain recorded at build time so delta
-    # segments share the base segments' vocabulary
-    from ..functions.textproc import ANALYZERS
-
-    schema_meta = catalog.read_schema_meta(root)
-    tf_new = term_freqs(
-        new_docs, 1, n_new,
-        text_analyzer=ANALYZERS[schema_meta["text_analyzer"]],
-        title_analyzer=ANALYZERS[schema_meta["title_analyzer"]],
-    ).withColumn("seg_id", F.lit(next_seg))
-    _append_table(tf_new, root, "term_freqs")
-
-    tf_delta = catalog.read_table(spark, root, "term_freqs").where(
-        F.col("seg_id") == next_seg
-    )
-    seg_df = build_segments(tf_delta).repartition(1, "seg_id")
+    # one delta segment, encoded straight from the batch's tokens
+    seg_df = build_segments(
+        _tokenize(root, new_docs).withColumn("seg_id", F.lit(next_seg))
+    ).repartition(1, "seg_id")
     catalog.write_table(seg_df, root, "postings_seg",
                         partition_by=["seg_id"], drop=[])
     catalog.append_lineage(spark, root, [
@@ -333,43 +332,31 @@ def optimize_segments(spark: SparkSession, root: str,
     """Coalesce delta segments — Lucene's forceMerge for this LSM.
 
     Continuous ingest appends ONE segment per batch
-    (``append_pages``), so ``postings_seg``/``term_freqs`` fragment
-    into many small segments over time and every later maintenance op
-    (tiered re-merge, compact re-encode) pays per-segment group
-    overhead.  This op renumbers CONSECUTIVE segments into at most
-    ``max_segments`` row-balanced groups and re-encodes the segment
-    postings.  Consecutiveness preserves the engine's core invariant —
-    segments hold disjoint doc ranges, ascending in seg_id — so the
-    monotone-salt merge and the tiered ingest path work unchanged; the
-    global ``postings`` table is untouched (its blobs don't depend on
-    segment structure).  The renumbered term_freqs and the re-encoded
-    segments land in one commit.  Returns the segment count after the
-    call.
+    (``append_pages``), so ``postings_seg`` fragments into many small
+    segments over time and every later maintenance op (tiered
+    re-merge, compact re-encode) pays per-segment group overhead.  This
+    op maps CONSECUTIVE segments onto at most ``max_segments``
+    groups balanced by posting count, renumbered from 0, and re-encodes
+    each group's blobs from the old segments' blobs
+    (``build.reencode_segments``).  Consecutiveness preserves the
+    engine's core invariant — segments hold disjoint doc ranges,
+    ascending in seg_id — so the monotone-salt merge and the tiered
+    ingest path work unchanged; the re-encode kernel refuses a group
+    whose doc ids do not strictly ascend.  The global ``postings``
+    table is untouched (its blobs don't depend on segment structure).
+    Returns the segment count after the call.
     """
     import math
 
-    tf = catalog.read_table(spark, root, "term_freqs")
-    rows = (
-        tf.groupBy("seg_id").agg(
-            F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()
-    )
-    segs = sorted((int(r["seg_id"]), int(r["mn"]), int(r["mx"]),
-                   int(r["n"])) for r in rows)
+    seg = catalog.read_table(spark, root, "postings_seg")
+    segs = sorted((int(r["seg_id"]), int(r["n"])) for r in seg.groupBy(
+        "seg_id").agg(F.sum("df").alias("n")).collect())
     if len(segs) <= max_segments:
         return len(segs)
-    for a, b in zip(segs, segs[1:]):
-        if a[2] >= b[1]:
-            raise AssertionError(
-                f"segment doc ranges overlap ({a} vs {b}); the "
-                "monotone invariant is broken — rebuild the index"
-            )
-    total = sum(s[3] for s in segs)
-    target = math.ceil(total / max_segments)
+    target = math.ceil(sum(n for _, n in segs) / max_segments)
     groups: list[list[int]] = [[]]
     acc = 0
-    for seg_id, _, _, n in segs:
+    for seg_id, n in segs:
         if acc >= target and len(groups) < max_segments:
             groups.append([])
             acc = 0
@@ -381,13 +368,9 @@ def optimize_segments(spark: SparkSession, root: str,
     m = F.create_map(
         *[F.lit(x) for kv in sorted(mapping.items()) for x in kv]
     )
-    catalog.write_table(
-        tf.withColumn("seg_id", m[F.col("seg_id")].cast("int")),
-        root, "term_freqs")
-
-    # re-encode segment postings from the renumbered table
-    tf_new = catalog.read_table(spark, root, "term_freqs")
-    seg_df = build_segments(tf_new).repartition(post_n, "seg_id")
+    seg_df = reencode_segments(
+        seg, new_seg=m[F.col("seg_id")].cast("int")
+    ).repartition(post_n, "seg_id")
     catalog.write_table(seg_df, root, "postings_seg",
                         partition_by=["seg_id"])
 
@@ -533,8 +516,9 @@ def _selective_rewrite(root: str, name: str, dead,
     footer range intersects the sorted array ``dead``: their survivors
     become new files and the rewritten ones leave the snapshot, while
     every other file simply stays listed.  The pass is O(touched files
-    + total file count), not O(table) — build writes are doc-ordered
-    (build.py term_freqs note), so a contiguous recrawl/takedown batch
+    + total file count), not O(table) — docs files are doc-ordered
+    (``assign_doc_ids`` numbers url-ranged partitions in order), so a
+    contiguous recrawl/takedown batch
     touches a handful of files out of millions.  Returns the number of
     files rewritten; zero means the table held no dead rows and NO
     Spark job ran at all.
@@ -627,13 +611,15 @@ def compact(spark: SparkSession, root: str) -> int:
     (survivors keep their original ids — re-densifying would invalidate
     the pagerank table and every external doc_id reference).
 
-    Scale shape: one pushed-filter anti-join pass over docs and
-    term_freqs (left-anti against the tombstones TABLE — no driver-held
-    id list in any plan, so a mass delete compacts with the same plan
-    shape as a takedown of ten), re-encode of only the SEGMENTS that contained deleted
-    docs, and a tiered re-merge of only the tbucket partitions holding
-    the deleted docs' terms — O(touched partitions), not O(index),
-    except when a mass delete genuinely touches everything.
+    Scale shape: a pushed-filter anti-join pass over the docs files
+    whose doc_id range holds a dead doc (left-anti against the
+    tombstones TABLE — no driver-held id list in any plan, so a mass
+    delete compacts with the same plan shape as a takedown of ten); a
+    re-encode, from their blobs, of only the SEGMENTS whose doc range
+    holds a dead doc; and a tiered re-merge of only the tbucket
+    partitions holding the dead docs' terms, found by tokenizing those
+    docs alone — O(touched partitions), not O(index), except when a
+    mass delete genuinely touches everything.
 
     Every rewrite and the tombstones drop land in one commit; a crash
     publishes none of them, and the next call re-runs compact from the
@@ -643,9 +629,10 @@ def compact(spark: SparkSession, root: str) -> int:
 
     if not catalog.table_exists(root, "tombstones"):
         return 0
-    # driver copy feeds ONLY footer min/max pruning; every Spark plan
-    # joins the tombstones TABLE instead (bounded by compaction
-    # cadence — pyarrow, no Spark job)
+    # driver copy feeds the footer min/max pruning and the segment
+    # re-encode (as a broadcast); every Spark plan joins the tombstones
+    # TABLE instead (bounded by compaction cadence — pyarrow, no Spark
+    # job)
     dead = np.sort(catalog.arrow_dataset(root, "tombstones").to_table(
         columns=["doc_id"])["doc_id"].to_numpy(
         zero_copy_only=False).astype(np.int64))
@@ -656,35 +643,38 @@ def compact(spark: SparkSession, root: str) -> int:
             "index and rebuild instead"
         )
     dead_df = catalog.read_table(spark, root, "tombstones").select("doc_id")
-    # the affected sets are computed before any rewrite: afterwards the
-    # filtered term_freqs no longer holds the dead docs.  The scan reads
-    # only the term_freqs files whose doc_id footer range holds a dead
-    # doc, and semi-joins, not isin (see _survivors)
-    tf_files = _affected_files(root, "term_freqs", dead)
-    affected_segs, affected_buckets = [], []
-    if tf_files:
-        n_term_buckets = catalog.read_schema_meta(root)["n_term_buckets"]
-        agg = spark.read.parquet(*tf_files).join(
-            dead_df, "doc_id", "left_semi").agg(
-            F.collect_set("seg_id").alias("segs"),
-            F.collect_set(tbucket_col(n_term_buckets)).alias("buckets"),
-        ).collect()[0]
-        affected_segs = sorted(agg["segs"])
-        affected_buckets = sorted(agg["buckets"])
+    # the tbuckets to re-merge hold the dead docs' terms: tokenize only
+    # the dead docs' rows of the docs files whose range holds one,
+    # before the docs rewrite drops them (semi-join, not isin — see
+    # _survivors)
+    n_term_buckets = catalog.read_schema_meta(root)["n_term_buckets"]
+    doc_files = _affected_files(root, "docs", dead)
+    affected_buckets = sorted(
+        r["b"] for r in _tokenize(root, spark.read.parquet(*doc_files).join(
+            dead_df, "doc_id", "left_semi"))
+        .select(tbucket_col(n_term_buckets).alias("b")).distinct().collect()
+    ) if doc_files else []
+    # the segments to re-encode hold a dead doc in their doc range:
+    # ranges are disjoint and ascend with seg_id, so a doc lies in the
+    # first segment whose largest doc id (its blobs' last block_last)
+    # is not below it
+    seg = catalog.read_table(spark, root, "postings_seg")
+    seg_last = sorted((int(r["seg_id"]), int(r["last"])) for r in seg.groupBy(
+        "seg_id").agg(F.max(F.element_at("block_last", -1)).alias("last"))
+        .collect())
+    hit = np.unique(np.searchsorted([last for _, last in seg_last], dead))
+    affected_segs = [seg_last[i][0] for i in hit if i < len(seg_last)]
 
-    # selective, footer-stats-driven rewrites: only the parquet files
-    # whose doc_id range holds a dead doc are rewritten — O(touched
-    # files)
-    rewritten = {tbl: _selective_rewrite(root, tbl, dead, dead_df)
-                 for tbl in ("docs", "term_freqs")}
+    # selective, footer-stats-driven rewrite: only the docs files whose
+    # doc_id range holds a dead doc are rewritten — O(touched files)
+    rewritten = {"docs": _selective_rewrite(root, "docs", dead, dead_df)}
 
     # re-encode only the segments that lost docs; a segment whose docs
     # all died gets no new files and leaves the snapshot
     if affected_segs:
-        seg_rows = catalog.read_table(spark, root, "term_freqs").where(
-            F.col("seg_id").isin(affected_segs))
-        seg_df = build_segments(seg_rows).repartition(
-            len(affected_segs), "seg_id")
+        seg_df = reencode_segments(
+            seg.where(F.col("seg_id").isin(affected_segs)), dead=dead
+        ).repartition(len(affected_segs), "seg_id")
         catalog.write_table(
             seg_df, root, "postings_seg", partition_by=["seg_id"],
             drop=catalog.partition_files(root, "postings_seg", "seg_id",

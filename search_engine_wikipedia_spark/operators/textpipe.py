@@ -48,12 +48,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textproc import STOP_WORDS
+from .wand import B, K1
 
 # Whoosh 2.7.4 default tokenizer pattern (analyzers.py:13-33 chain);
 # identical in Java regex (Spark) and RE2 (DuckDB oracle) for ASCII.
 TOKEN_RE = r"\w+(?:\.?\w+)*"
 BPE_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"   # BPE-ish pretokenizer classes
-K1, B = 1.2, 0.75                        # Whoosh BM25F defaults (Q5)
 STOPWORDS = sorted(STOP_WORDS)
 
 
@@ -177,6 +177,20 @@ def _tf_lens_stats(documents: DataFrame, cache: bool = True):
 
 
 
+def _bm25_weight() -> Column:
+    """Whoosh BM25 weight of a (doc, term) row over the columns
+    ``doc_count``, ``df``, ``tf``, ``n_tokens`` and ``avg_len``:
+    ``idf·tf·(k1+1)/(tf+k1·(1−b+b·len/avg))`` with
+    ``idf = ln(N/(df+1)) + 1``."""
+    idf = F.log(F.col("doc_count") / (F.col("df") + F.lit(1))) + F.lit(1.0)
+    return (
+        idf * F.col("tf") * F.lit(K1 + 1.0)
+        / (F.col("tf") + F.lit(K1)
+           * (F.lit(1.0 - B)
+              + F.lit(B) * F.col("n_tokens") / F.col("avg_len")))
+    )
+
+
 def bm25_score_all(documents: DataFrame, terms: list[str],
                    match_all: bool = True) -> DataFrame:
     """(doc_id, score) for every matching doc, unrounded.
@@ -212,20 +226,7 @@ def _bm25_score_all(documents: DataFrame, terms: list[str],
         .join(lens, "doc_id")
         .withColumn("_k", F.lit(1))
         .join(F.broadcast(g), "_k")
-        .withColumn(
-            "idf",
-            F.log(F.col("doc_count") / (F.col("df") + F.lit(1))) + F.lit(1.0),
-        )
-        .withColumn(
-            "w",
-            F.col("idf") * F.col("tf") * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B)
-                   + F.lit(B) * F.col("n_tokens") / F.col("avg_len"))
-            ),
-        )
+        .withColumn("w", _bm25_weight())
         .groupBy("doc_id")
         .agg(F.sum("w").alias("score"), F.count("*").alias("n_matched"))
     )
@@ -300,14 +301,7 @@ def bm25_prefix_topk(documents: DataFrame, prefix: str,
         .join(lens, "doc_id")
         .withColumn("_k", F.lit(1))
         .join(F.broadcast(g), "_k")
-        .withColumn(
-            "w",
-            (F.log(F.col("doc_count") / (F.col("df") + F.lit(1))) + F.lit(1.0))
-            * F.col("tf") * F.lit(K1 + 1.0)
-            / (F.col("tf") + F.lit(K1)
-               * (F.lit(1.0 - B)
-                  + F.lit(B) * F.col("n_tokens") / F.col("avg_len"))),
-        )
+        .withColumn("w", _bm25_weight())
         .groupBy("doc_id")
         .agg(F.round(F.sum("w"), 6).alias("score"))
     )
@@ -343,14 +337,7 @@ def batch_topk(documents: DataFrame, queries: dict[int, list[str]],
         .join(lens, "doc_id")
         .withColumn("_k", F.lit(1))
         .join(F.broadcast(g), "_k")
-        .withColumn(
-            "w",
-            (F.log(F.col("doc_count") / (F.col("df") + F.lit(1))) + F.lit(1.0))
-            * F.col("tf") * F.lit(K1 + 1.0)
-            / (F.col("tf") + F.lit(K1)
-               * (F.lit(1.0 - B)
-                  + F.lit(B) * F.col("n_tokens") / F.col("avg_len"))),
-        )
+        .withColumn("w", _bm25_weight())
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("w"), 6).alias("score"))
     )

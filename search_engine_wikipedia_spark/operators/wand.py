@@ -187,8 +187,7 @@ class PostingList:
             d, t, f = codec.decode_blocks(
                 r["doc_ids"], r["tfs"], r["fls"],
                 list(r["block_doc_off"]), list(r["block_tf_off"]),
-                list(r["block_fl_off"]), int(r["df"]),
-                blk_ix[sel],
+                list(r["block_fl_off"]), blk_ix[sel],
             )
             parts_d.append(d)
             parts_t.append(t)

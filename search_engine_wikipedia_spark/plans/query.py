@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import term_bucket
 from ..functions.textproc import analyze_text, analyze_title
 from ..operators import wand
+from ..operators.build import term_freqs
 from ..operators.wand import (
     And, GlobalStats, Not, Or, PostingList, Scorer, Term, Weighting,
 )
@@ -956,10 +957,13 @@ def search_batch_relational(
     exp: bool = False,
 ) -> DataFrame:
     """BM25F top-k computed WITHOUT the WAND kernel or the codec: a
-    pure relational plan over the index's ``term_freqs`` /
-    ``field_stats`` tables — an independent referee for the block-max
-    engine path (same parse, same Whoosh scoring formula, same
-    tie-break), used by the ``wand_consistency`` driver query.
+    pure relational plan over the pinned ``docs`` table, tokenized here
+    with the index's recorded analyzers (``build.term_freqs``), and
+    ``field_stats`` — an independent referee for the block-max engine
+    path (same parse, same Whoosh scoring formula, same tie-break) that
+    trusts no posting the build wrote, so it checks the segments, the
+    merge, the codec and the kernel together; used by the
+    ``wand_consistency`` driver query.
 
     Semantics mirror the Scorer: each query token is an OR group over
     its (text:stemmed, title:token) leaves; AND requires every group
@@ -1050,7 +1054,8 @@ def search_batch_relational(
          if n > 0 or qid in syn_qids],
         "query_id int, n_groups int",
     )
-    tf = index.table("term_freqs")
+    tf = term_freqs(index.table("docs"), index.analyzers["text"],
+                    index.analyzers["title"])
     df_t = (
         tf.join(F.broadcast(fan.select("field", "term").distinct()),
                 ["field", "term"])

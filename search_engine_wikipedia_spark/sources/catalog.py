@@ -62,8 +62,7 @@ SNAPSHOT_NAME = "_SNAPSHOT.json"
 # tables a pinned reader serves from (SearchIndex, the relational
 # referee): a commit retires the files it drops from them.  Files
 # dropped from the writer-only tables go at the sweep after the commit.
-PINNED = ("docs", "term_freqs", "field_stats", "postings", "tombstones",
-          "pagerank")
+PINNED = ("docs", "field_stats", "postings", "tombstones", "pagerank")
 # root realpath → working snapshot of the transaction open on it
 _WORKING: dict[str, dict] = {}
 

@@ -81,7 +81,8 @@ def test_merge_segments_equals_global_encode():
     for i in range(4):
         sl = slice(bounds[i], bounds[i + 1])
         segs.append(codec.encode_postings(doc_ids[sl], tfs[sl], fls[sl])[:3])
-    d, t, f = codec.merge_encoded_segments(segs)
+    d, t, f = codec.decode_concat(
+        *zip(*segs), np.diff(bounds).astype(np.int64))
     assert codec.encode_postings(d, t, f) == codec.encode_postings(doc_ids, tfs, fls)
 
 
@@ -97,7 +98,7 @@ def test_random_block_access():
     # every subset of blocks decodes to exactly those slices
     for subset in ([0], [nblocks - 1], [1, 3], list(range(nblocks))):
         d, t, f = codec.decode_blocks(
-            d_blob, t_blob, f_blob, d_off, t_off, f_off, n,
+            d_blob, t_blob, f_blob, d_off, t_off, f_off,
             np.array(subset, dtype=np.int64),
         )
         expect = np.concatenate([
@@ -147,3 +148,76 @@ def test_encode_groups_matches_per_group():
     assert np.array_equal(dd, doc.astype(np.int64))
     assert np.array_equal(tt, tf.astype(np.int64))
     assert np.array_equal(ff, fl.astype(np.int64))
+
+
+# ---------------------------------------------------------------------------
+# The re-encode kernel of the merge, compact and optimize_segments
+# ---------------------------------------------------------------------------
+def _seg_rows(spec):
+    """postings_seg-shaped rows: spec = [(term, seg_id, doc_ids)], with
+    tf = doc % 7 + 1 and fl = doc % 11 + 3 per posting."""
+    import pandas as pd
+
+    rows = []
+    for term, seg, docs in spec:
+        d = np.asarray(docs, dtype=np.uint64)
+        enc = codec.encode_postings(d, d % 7 + 1, d % 11 + 3)
+        rows.append({"term": term, "field": "text", "seg_id": seg,
+                     "df": d.size, "doc_ids": enc[0], "tfs": enc[1],
+                     "fls": enc[2]})
+    return pd.DataFrame(rows)
+
+
+def _decoded(body, i):
+    return [a.tolist() for a in codec.decode_postings(
+        body["doc_ids"][i], body["tfs"][i], body["fls"][i])]
+
+
+def test_reencode_drops_regroups_and_refuses_unsorted():
+    from search_engine_wikipedia_spark.operators.build import reencode
+
+    spec = [("a", 0, range(0, 300, 2)), ("a", 1, [301, 305]),
+            ("a", 2, range(400, 700, 3)), ("b", 1, [302]),
+            ("b", 2, [401, 402])]
+    chunk = _seg_rows(spec)
+    keys = ("term", "field", "seg_id")
+
+    # dropping ids: every posting of a dead doc goes, the rest re-encode
+    # exactly as a fresh encode of the survivors; an emptied group goes
+    dead = np.array([2, 4, 301, 302, 406], dtype=np.int64)
+    first, body = reencode(chunk, keys, dead)
+    assert first.tolist() == [0, 1, 2, 4]  # "b"@1 lost its one posting
+    for i, r in enumerate(first):
+        docs = np.array([d for d in spec[r][2] if d not in set(dead)],
+                        dtype=np.uint64)
+        want = codec.encode_postings(docs, docs % 7 + 1, docs % 11 + 3)
+        assert (body["doc_ids"][i], body["tfs"][i], body["fls"][i],
+                body["block_last"][i], body["block_doc_off"][i]) == (
+            want[0], want[1], want[2], want[3], want[6])
+        assert body["df"][i] == docs.size
+        assert body["cf"][i] == int((docs % 7 + 1).sum())
+    first, body = reencode(chunk, keys, np.arange(1000))  # all dead
+    assert first.size == 0 and body["df"].size == body["cf"].size == 0
+
+    # regrouping consecutive segments: 0+1 → 0 and 2 → 1, one blob per
+    # new group, equal to encoding the concatenated lists
+    chunk["to"] = chunk["seg_id"].map({0: 0, 1: 0, 2: 1})
+    chunk = chunk.sort_values(["term", "field", "to", "seg_id"],
+                              ignore_index=True)
+    first, body = reencode(chunk, ("term", "field", "to"))
+    assert [tuple(chunk.loc[r, ["term", "to"]]) for r in first] == [
+        ("a", 0), ("a", 1), ("b", 0), ("b", 1)]
+    docs_a0 = np.array(list(range(0, 300, 2)) + [301, 305], dtype=np.uint64)
+    assert _decoded(body, 0) == [docs_a0.tolist(),
+                                 (docs_a0 % 7 + 1).tolist(),
+                                 (docs_a0 % 11 + 3).tolist()]
+    assert body["df"].tolist() == [152, 100, 1, 2]
+
+    # a group whose doc ids do not strictly ascend is refused: segment
+    # 1 below segment 0, and a doc id in two segments
+    for bad in ([("a", 0, [10, 20]), ("a", 1, [5, 30])],
+                [("a", 0, [10, 20]), ("a", 1, [20, 30])]):
+        chunk = _seg_rows(bad)
+        chunk["to"] = 0
+        with pytest.raises(ValueError, match="not strictly ascending"):
+            reencode(chunk, ("term", "field", "to"))

@@ -12,7 +12,10 @@ from pyspark.sql import functions as F
 
 from search_engine_wikipedia_spark import schemas
 from search_engine_wikipedia_spark.operators import ingest
-from search_engine_wikipedia_spark.operators.build import IndexBuilder
+from search_engine_wikipedia_spark.operators.build import (
+    IndexBuilder,
+    term_freqs,
+)
 from search_engine_wikipedia_spark.plans.query import (
     SearchIndex,
     WikiSearcher,
@@ -186,8 +189,9 @@ def test_compact_rewrites_only_touched_buckets(spark, corpus,
     frac = len(changed) / len({bucket_of(p) for p in after})
     assert frac < 0.10, (sorted(changed), frac)
     # zzwords survive via extra[1]; the deleted doc's postings are gone
-    tf = catalog.read_table(spark, root, "term_freqs")
-    assert tf.where(F.col("term") == "zzword0").count() == 1
+    seg = catalog.read_table(spark, root, "postings_seg")
+    assert seg.where(F.col("term") == "zzword0").agg(
+        F.sum("df")).collect()[0][0] == 1
 
 
 def test_compact_drops_bucket_whose_terms_all_died(spark, corpus,
@@ -214,7 +218,7 @@ def test_compact_drops_bucket_whose_terms_all_died(spark, corpus,
 
     solo_terms = {stem(f"vvuniq{j}") for j in range(6)}
     all_terms = {
-        r["term"] for r in catalog.read_table(spark, root, "term_freqs")
+        r["term"] for r in term_freqs(catalog.read_table(spark, root, "docs"))
         .select("term").distinct().collect()
     }
     solo_buckets = {term_bucket(t, 4096) for t in solo_terms}
@@ -243,7 +247,7 @@ def test_compact_crash_is_recovered_by_next_op(spark, corpus,
     victims = _victim_urls(spark, root, QUERIES[2], k=2)
     assert ingest.delete_urls(spark, root, victims) == 2
 
-    orig = ingest.build_segments
+    orig = ingest.reencode_segments
     calls = {"n": 0}
 
     def dying(*a, **kw):
@@ -252,7 +256,7 @@ def test_compact_crash_is_recovered_by_next_op(spark, corpus,
             raise RuntimeError("injected crash mid-compact")
         return orig(*a, **kw)
 
-    monkeypatch.setattr(ingest, "build_segments", dying)
+    monkeypatch.setattr(ingest, "reencode_segments", dying)
     with pytest.raises(RuntimeError, match="injected"):
         ingest.compact(spark, root)
     # tombstones survive the crash → compact re-runs idempotently
@@ -426,7 +430,7 @@ def test_full_compact_plans_have_no_inlist(spark, corpus,
 
     monkeypatch.setattr(ingest, "_survivors", spy)
     assert ingest.compact(spark, root) == len(victims)
-    assert len(plans) == 2  # docs, term_freqs
+    assert len(plans) == 1  # docs
     for p in plans:
         assert " IN (" not in p and "isin" not in p
         assert "LeftAnti" in p

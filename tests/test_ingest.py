@@ -9,8 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_wikipedia_spark import schemas
+from search_engine_wikipedia_spark.functions import codec
 from search_engine_wikipedia_spark.operators import ingest
-from search_engine_wikipedia_spark.operators.build import IndexBuilder
+from search_engine_wikipedia_spark.operators.build import (
+    IndexBuilder,
+    term_freqs,
+)
 from search_engine_wikipedia_spark.plans.query import SearchIndex, WikiSearcher
 from search_engine_wikipedia_spark.sources import catalog
 from search_engine_wikipedia_spark.synth import QUERIES
@@ -56,6 +60,28 @@ def _unlisted_files(root):
     )
 
 
+def _segment_postings(root):
+    """seg_id → the (term, field, doc_id, tf, fl) rows its postings_seg
+    blobs decode to (pyarrow, driver-side)."""
+    t = catalog.arrow_dataset(root, "postings_seg").to_table(
+        columns=["seg_id", "term", "field", "doc_ids", "tfs", "fls"])
+    out = {}
+    for r in t.to_pylist():
+        d, tf, fl = codec.decode_postings(r["doc_ids"], r["tfs"], r["fls"])
+        out.setdefault(r["seg_id"], set()).update(
+            (r["term"], r["field"], int(a), int(b), int(c))
+            for a, b, c in zip(d, tf, fl))
+    return out
+
+
+def _tokenized_docs(spark, root):
+    """The (term, field, doc_id, tf, fl) rows ``build.term_freqs`` gives
+    for the index's docs table (default analyzers)."""
+    return {tuple(r) for r in term_freqs(
+        catalog.read_table(spark, root, "docs"))
+        .select("term", "field", "doc_id", "tf", "fl").collect()}
+
+
 def _search_by_url(spark, root, queries, limit=10):
     s = WikiSearcher(SearchIndex(spark, root))
     out = {}
@@ -95,9 +121,9 @@ def _field_sums(df, col):
 def test_field_stats_are_postings_cf_sums_through_maintenance(
         spark, corpus, tmp_path_factory):
     """field_stats holds, per field, Σ fl over the docs (recounted here
-    from term_freqs) and the docs row count, and that Σ fl is the
-    postings' Σ cf — after a build, an append, a delete and a compact,
-    with no per-doc stats table in the snapshot."""
+    by re-tokenizing the docs table) and the docs row count, and that
+    Σ fl is the postings' Σ cf — after a build, an append, a delete and
+    a compact, with no per-doc stats table in the snapshot."""
     root = str(tmp_path_factory.mktemp("fs_idx"))
     IndexBuilder(spark, root, n_segments=4, shard_size=200).build(
         _pages_df(spark, corpus[:200]), resume=False)
@@ -106,7 +132,7 @@ def test_field_stats_are_postings_cf_sums_through_maintenance(
         assert "doc_stats" not in catalog.read_snapshot(root)["tables"]
         n = catalog.read_table(spark, root, "docs").count()
         lens = _field_sums(
-            catalog.read_table(spark, root, "term_freqs")
+            term_freqs(catalog.read_table(spark, root, "docs"))
             .select("doc_id", "field", "fl").distinct(), "fl")
         want = {f: (lens.get(f, 0), n, lens.get(f, 0) / n)
                 for f in ("text", "title")}
@@ -129,6 +155,50 @@ def test_field_stats_are_postings_cf_sums_through_maintenance(
     check()
 
 
+def test_segments_decode_to_the_docs_tokens_through_maintenance(
+        spark, corpus, tmp_path_factory):
+    """No op keeps a copy of the tokenizer output: after a build, two
+    appends, a delete + compact and an optimize, the snapshot lists
+    only docs, postings_seg, postings and field_stats, and every
+    segment's blobs decode to exactly the rows
+    ``build.term_freqs`` gives for the docs in its doc range; the
+    segments' ranges are disjoint, ascend with seg_id, and together
+    hold every doc's rows."""
+    root = str(tmp_path_factory.mktemp("seg_tok_idx"))
+    IndexBuilder(spark, root, n_segments=4, shard_size=200).build(
+        _pages_df(spark, corpus[:150]), resume=False)
+
+    def check():
+        assert set(catalog.read_snapshot(root)["tables"]) == {
+            "docs", "postings_seg", "postings", "field_stats"}
+        want = _tokenized_docs(spark, root)
+        segs = _segment_postings(root)
+        got = set()
+        prev_hi = -1
+        for seg_id in sorted(segs):
+            rows = segs[seg_id]
+            lo, hi = min(r[2] for r in rows), max(r[2] for r in rows)
+            assert prev_hi < lo, (seg_id, prev_hi, lo)
+            assert rows == {r for r in want if lo <= r[2] <= hi}, seg_id
+            got |= rows
+            prev_hi = hi
+        assert got == want
+
+    check()
+    for lo, hi in ((150, 220), (220, 300)):
+        assert ingest.append_pages(
+            spark, root, _pages_df(spark, corpus[lo:hi])) > 0
+        check()
+    assert len(catalog.completed_segments(spark, root, "postings_seg")) == 6
+    victims = [r["url"] for r in catalog.read_table(spark, root, "docs")
+               .orderBy("doc_id").select("url").collect()][5::17]
+    assert ingest.delete_urls(spark, root, victims) == len(victims)
+    assert ingest.compact(spark, root) == len(victims)
+    check()
+    assert ingest.optimize_segments(spark, root, max_segments=2) == 2
+    check()
+
+
 def test_append_is_idempotent_on_replay(spark, corpus, incremental_root):
     """Re-appending already-ingested urls is a no-op (the foreachBatch
     replay scenario)."""
@@ -142,12 +212,9 @@ def test_append_is_idempotent_on_replay(spark, corpus, incremental_root):
 def test_delta_segment_has_higher_doc_range(spark, incremental_root):
     """The monotone-salt invariant: the delta segment's doc ids all
     exceed the base segments' (so merged shards stay doc-sorted)."""
-    seg = catalog.read_table(spark, incremental_root, "term_freqs")
     ranges = {
-        int(r["seg_id"]): (int(r["lo"]), int(r["hi"]))
-        for r in seg.groupBy("seg_id")
-        .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
-        .collect()
+        seg: (min(r[2] for r in rows), max(r[2] for r in rows))
+        for seg, rows in _segment_postings(incremental_root).items()
     }
     delta = max(ranges)
     for s, (lo, hi) in ranges.items():
@@ -407,8 +474,8 @@ def test_optimize_segments_coalesces_and_preserves_results(
 
     assert ingest.optimize_segments(spark, root, max_segments=3) == 3
     assert _seg_ids(root) == [0, 1, 2]
-    _, _, seg_mx = catalog.footer_stats(root, "term_freqs", "seg_id")
-    assert int(seg_mx) == 2
+    assert catalog.completed_segments(spark, root, "postings_seg") == {
+        0, 1, 2}
     assert _term_stats_fingerprint(spark, root) == pre_fp
     assert _search_by_url(spark, root, QUERIES[:8]) == pre_res
     # already-small index is a no-op
@@ -438,7 +505,7 @@ def test_optimize_crash_resumes_from_next_maintenance_op(
     ingest.append_pages(spark, root, _pages_df(spark, corpus[150:190]))
     pre_fp = _term_stats_fingerprint(spark, root)
 
-    orig = ingest.build_segments
+    orig = ingest.reencode_segments
     calls = {"n": 0}
 
     def dying(*a, **kw):
@@ -447,7 +514,7 @@ def test_optimize_crash_resumes_from_next_maintenance_op(
             raise RuntimeError("injected crash mid-optimize")
         return orig(*a, **kw)
 
-    monkeypatch.setattr(ingest, "build_segments", dying)
+    monkeypatch.setattr(ingest, "reencode_segments", dying)
     snap_id = catalog.read_snapshot(root)["id"]
     with pytest.raises(RuntimeError, match="injected"):
         ingest.optimize_segments(spark, root, max_segments=2)
@@ -480,16 +547,15 @@ def test_append_falls_back_when_footer_stats_missing(
     root = str(tmp_path_factory.mktemp("nostats_idx"))
     IndexBuilder(spark, root, n_segments=2, shard_size=200).build(
         _pages_df(spark, corpus[:120]), resume=False)
-    # strip statistics from the docs and term_freqs footers in place
-    for name in ("docs", "term_freqs"):
-        for f in Path(root, name).glob("*.parquet"):
-            t = pq.read_table(str(f))
-            pq.write_table(t, str(f), write_statistics=False)
-            # Spark wrote a Hadoop checksum sidecar; the in-place
-            # rewrite invalidates it (ChecksumException on read)
-            crc = f.parent / f".{f.name}.crc"
-            if crc.exists():
-                crc.unlink()
+    # strip statistics from the docs footers in place
+    for f in Path(root, "docs").glob("*.parquet"):
+        t = pq.read_table(str(f))
+        pq.write_table(t, str(f), write_statistics=False)
+        # Spark wrote a Hadoop checksum sidecar; the in-place
+        # rewrite invalidates it (ChecksumException on read)
+        crc = f.parent / f".{f.name}.crc"
+        if crc.exists():
+            crc.unlink()
     n_rows, mn, mx = catalog.footer_stats(root, "docs", "doc_id")
     assert n_rows > 0 and mn is None and mx is None  # scenario is real
     pre_max = catalog.read_table(spark, root, "docs").agg(

@@ -30,8 +30,11 @@ N_POOL = 400
 SHARD = 200
 
 # Seams every op's write path routes through (the same ones the
-# targeted crash tests patch): segment encode, tf write, table append.
-CRASH_SEAMS = ("term_freqs", "build_segments", "_append_table")
+# targeted crash tests patch): tokenize, segment encode — from tokens
+# (append) or from blobs (compact, optimize), one seam — and table
+# append.
+CRASH_SEAMS = ("term_freqs", ("build_segments", "reencode_segments"),
+               "_append_table")
 
 
 def _pages_df(spark, pages):
@@ -163,7 +166,7 @@ def test_random_maintenance_sequence_equals_fresh_build(
 
 # seeds chosen so the injection demonstrably FIRES (asserted below) on
 # three distinct (op, seam) pairs: 11 = upsert @ _append_table,
-# 13 = compact @ build_segments, 41 = append @ build_segments
+# 13 = compact @ segment encode, 41 = append @ segment encode
 @pytest.mark.parametrize("seed", [11, 13, 41])
 def test_random_crash_and_replay_converges(
         spark, tmp_path_factory, monkeypatch, seed):
@@ -185,23 +188,28 @@ def test_random_crash_and_replay_converges(
             continue
         run, commit = planned
         if step == crash_step:
-            orig = getattr(ingest, seam)
+            names = seam if isinstance(seam, tuple) else (seam,)
+            origs = {n: getattr(ingest, n) for n in names}
             calls = {"n": 0}
 
-            def dying(*a, **kw):
-                calls["n"] += 1
-                if calls["n"] == 1:
-                    crashed["fired"] = True
-                    raise RuntimeError("injected lifecycle crash")
-                return orig(*a, **kw)
+            def dying(orig):
+                def fn(*a, **kw):
+                    calls["n"] += 1
+                    if calls["n"] == 1:
+                        crashed["fired"] = True
+                        raise RuntimeError("injected lifecycle crash")
+                    return orig(*a, **kw)
+                return fn
 
-            monkeypatch.setattr(ingest, seam, dying)
+            for n, orig in origs.items():
+                monkeypatch.setattr(ingest, n, dying(orig))
             try:
                 run()
             except RuntimeError:
                 pass  # the op may not route through this seam at all
             finally:
-                monkeypatch.setattr(ingest, seam, orig)
+                for n, orig in origs.items():
+                    monkeypatch.setattr(ingest, n, orig)
             if crashed["fired"]:
                 run()  # foreachBatch-style replay of the same op
         else:

@@ -9,7 +9,7 @@ from search_engine_wikipedia_spark.sources import catalog
 
 def test_partition_metrics_match_table_counts(spark, built_index):
     root, _ = built_index
-    for name in ("docs", "postings", "term_freqs"):
+    for name in ("docs", "postings", "postings_seg"):
         parts = M.table_partition_metrics(root, name)
         assert parts, name
         total = sum(p["rows"] for p in parts)
@@ -68,13 +68,12 @@ def test_build_skew_gate(spark, built_index):
     the tbucket layout (e.g. a broken salt or hash) shows up as one
     giant postings file — skew_ratio ≈ n_files.  At fixture scale the
     healthy layout measures ~1.5 on postings (32 buckets × ~24 rows is
-    noisy) and ~1.1 on the doc-keyed tables; the bounds below are wide
+    noisy) and ~1.1 on the docs table; the bounds below are wide
     enough for sampling noise, tight enough that any structural
     imbalance (ratio ≥ n_files/2) fails loudly."""
     root, _ = built_index
     postings = M.skew_report(root, "postings")
     assert postings["n_files"] >= 8
     assert postings["skew_ratio"] <= 3.0, postings
-    for name, bound in (("term_freqs", 2.0), ("docs", 2.0)):
-        rep = M.skew_report(root, name)
-        assert rep["skew_ratio"] <= bound, rep
+    docs = M.skew_report(root, "docs")
+    assert docs["skew_ratio"] <= 2.0, docs

@@ -67,14 +67,28 @@ def test_segment_failure_resume_identical(spark, pages_df, tmp_path,
     # --- resume: only the missing segments run -------------------------
     monkeypatch.setattr(build_mod, "build_segments", orig)
     calls_before = calls["n"]
+    tokenized = []
+    orig_tf = build_mod.term_freqs
+
+    def counting_tf(docs, *a, **kw):
+        tokenized.extend(r["doc_id"] for r in docs.select("doc_id").collect())
+        return orig_tf(docs, *a, **kw)
+
+    monkeypatch.setattr(build_mod, "term_freqs", counting_tf)
     resumed = build_mod.IndexBuilder(
         spark, root, n_segments=4, shard_size=200, segment_batches=4
     )
     resumed.build(pages_df, resume=True)
-    # earlier stages were skipped entirely (no docs/tf re-timing)
+    # the docs stage was skipped entirely (no re-timing), and the
+    # resume tokenized exactly the docs of the two segments it lacked
     assert "docs" not in resumed.metrics
-    assert "term_freqs" not in resumed.metrics
     assert calls["n"] == calls_before  # our counter: orig restored
+    docs = catalog.read_table(spark, root, "docs")
+    seg_of = build_mod.segment_of(4, resumed.n_docs)
+    lacking = sorted(r["doc_id"] for r in docs.where(
+        seg_of.isin(sorted({0, 1, 2, 3} - done))).collect())
+    assert 0 < len(lacking) < docs.count()
+    assert sorted(tokenized) == lacking
 
     assert catalog.completed_segments(spark, root, "postings_seg") == {
         0, 1, 2, 3}

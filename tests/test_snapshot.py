@@ -52,15 +52,15 @@ def test_reader_opened_during_compact_sees_the_committed_index(
     base, _, want = tombstoned
     root = str(tmp_path / "idx")
     shutil.copytree(base, root)
-    orig = ingest.build_segments
+    orig = ingest.reencode_segments
     seen = []
 
     def reader_mid_compact(*a, **kw):
-        if not seen:  # compact has rewritten docs and term_freqs
+        if not seen:  # compact has rewritten docs
             seen.append(_results(SearchIndex(spark, root), QUERIES[:6]))
         return orig(*a, **kw)
 
-    monkeypatch.setattr(ingest, "build_segments", reader_mid_compact)
+    monkeypatch.setattr(ingest, "reencode_segments", reader_mid_compact)
     assert ingest.compact(spark, root) == 3
     assert seen == [want]
 

@@ -13,7 +13,10 @@ import pytest
 
 from search_engine_wikipedia_spark import schemas
 from search_engine_wikipedia_spark.operators import ingest
-from search_engine_wikipedia_spark.operators.build import IndexBuilder
+from search_engine_wikipedia_spark.operators.build import (
+    IndexBuilder,
+    term_freqs,
+)
 from search_engine_wikipedia_spark.sources import catalog
 
 from tests.test_ingest import _term_stats_fingerprint, _unlisted_files
@@ -108,8 +111,8 @@ def test_full_overwrite_ignores_dynamic_session_mode(spark, corpus,
         assert spark.conf.get(key) == "dynamic"
     finally:
         spark.conf.set(key, prev)
-    b_terms = {r["term"] for r in catalog.read_table(
-        spark, root, "term_freqs").select("term").distinct().collect()}
+    b_terms = {r["term"] for r in term_freqs(catalog.read_table(
+        spark, root, "docs")).select("term").distinct().collect()}
     posted = {r["term"] for r in catalog.read_table(
         spark, root, "postings").select("term").distinct().collect()}
     assert posted and posted <= b_terms, sorted(posted - b_terms)[:10]
